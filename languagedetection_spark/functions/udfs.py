@@ -1,9 +1,10 @@
 """Pandas-UDF plumbing: broadcast model -> mapInPandas over Arrow batches.
 
 The model is shipped via ``SparkContext.broadcast`` (one pickle per executor,
-not per task) and memoized at module level so iterator-UDF invocations on the
-same worker reuse the deserialized object and its token memos -- the pattern
-SURVEY §4.3 mandates (no per-row Python, no per-batch deserialization).
+not per task); ``Broadcast.value`` deserializes it once per worker, so
+iterator-UDF invocations on the same worker reuse the object and its token
+memos -- the pattern SURVEY §4.3 mandates (no per-row Python, no per-batch
+deserialization).
 """
 
 from __future__ import annotations
@@ -21,21 +22,6 @@ DECISION_FIELDS = (
     "drop_reason string, scrubbed_text string"
 )
 
-# worker-side cache: broadcast id -> deserialized model
-_MODEL_CACHE: dict[int, FilterModel] = {}
-
-
-def _resolve(model: FilterModel | Broadcast) -> FilterModel:
-    if isinstance(model, Broadcast):
-        key = id(model)
-        m = _MODEL_CACHE.get(key)
-        if m is None:
-            m = model.value
-            _MODEL_CACHE[key] = m
-        return m
-    return model
-
-
 def broadcast_model(spark: SparkSession, model: FilterModel) -> Broadcast:
     return spark.sparkContext.broadcast(model)
 
@@ -52,7 +38,7 @@ def with_decisions(df: DataFrame, model: FilterModel | Broadcast,
     ) + ", " + DECISION_FIELDS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = _resolve(model)
+        m = model.value if isinstance(model, Broadcast) else model
         for pdf in batches:
             res = m.decide_batch(pdf[text_col])
             res.index = pdf.index

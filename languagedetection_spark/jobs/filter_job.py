@@ -8,9 +8,13 @@
 
 Reads transcripts (Parquet path or Iceberg identifier), builds/loads the
 frozen model, and processes per-conv_id hash buckets with checkpoint/resume
-and per-bucket lineage (sources/checkpoint.py).  Killing the job mid-run and
-re-submitting with the same --checkpoint/--run-id resumes exactly where it
-stopped; completed buckets are never recomputed.
+and per-bucket lineage (sources/checkpoint.py).  With more than one bucket
+to run, the input (deduped, with --dedup) is staged once under --checkpoint,
+partitioned by bucket, and each bucket reads only its own partition; the
+lineage metrics are observed on each bucket's write.  Killing the job
+mid-run and re-submitting with the same --checkpoint/--run-id resumes
+exactly where it stopped, reusing the staged input; completed buckets are
+never recomputed.  The last line on stdout is one JSON summary.
 """
 
 from __future__ import annotations
@@ -108,6 +112,8 @@ def main(argv: list[str] | None = None) -> int:
                     f"nested under --output ({args.output})")
 
     # mode-combination errors BEFORE any JVM spins up
+    if args.buckets < 1:
+        p.error("--buckets must be at least 1")
     if args.streaming and args.dedup:
         p.error("--dedup is a batch stage; streaming mode dedups via "
                 "stateful dropDuplicates (see streaming_dedup)")
@@ -134,13 +140,13 @@ def main(argv: list[str] | None = None) -> int:
                     "SparkSession already pins spark.sql.warehouse.dir to "
                     f"{active.conf.get('spark.sql.warehouse.dir')}")
 
-    spark = get_spark(
-        master=args.master, app_name="ld-filter-job",
-        extra_conf=(
-            {"spark.sql.warehouse.dir": args.warehouse_dir}
-            if args.warehouse_dir else None
-        ),
-    )
+    # the console progress bar is a build-time setting (changing it on a
+    # running session raises CANNOT_MODIFY_CONFIG)
+    conf = {"spark.ui.showConsoleProgress": "false"}
+    if args.warehouse_dir:
+        conf["spark.sql.warehouse.dir"] = args.warehouse_dir
+    spark = get_spark(master=args.master, app_name="ld-filter-job",
+                      extra_conf=conf)
     import os
 
     if args.model_artifact and os.path.exists(args.model_artifact):
@@ -212,41 +218,36 @@ def main(argv: list[str] | None = None) -> int:
     # a previous run on the same --output with a LARGER --buckets count
     # leaves stale bucket dirs beyond this run's range, and globbing them
     # in would duplicate every turn they hold (each turn is also in this
-    # run's rewritten buckets).  Completed == all of this run's dirs exist.
-    this_run_dirs = [
-        d for b in range(args.buckets)
-        if os.path.isdir(d := os.path.join(args.output, f"bucket={b}"))
-    ]
-    n_convs = None
+    # run's rewritten buckets).  Every one of them is marked done now, so
+    # a missing dir means the output lost a bucket the checkpoint vouches
+    # for: exporting the rest would silently drop its turns.
+    this_run_dirs = [os.path.join(args.output, f"bucket={b}")
+                     for b in range(args.buckets)]
+    missing = [d for d in this_run_dirs if not os.path.isdir(d)]
+    if missing:
+        spark.stop()
+        print(f"checkpoint {args.checkpoint} marks run {args.run_id!r} "
+              f"done but its output is missing {missing}; delete the "
+              f"checkpoint to recompute", file=sys.stderr)
+        return 1
+    out = {"run_id": args.run_id, "processed_buckets": processed,
+           "model_fingerprint": fp}
     if args.conv_report:
         from ..operators.quality_filter import conv_report
 
-        if this_run_dirs:
-            decided = spark.read.parquet(*this_run_dirs)
-            report = conv_report(decided)
-            report.write.parquet(args.conv_report, mode="overwrite")
-            n_convs = spark.read.parquet(args.conv_report).count()
-        else:
-            print(f"conv-report skipped: no completed buckets under "
-                  f"{args.output}", file=sys.stderr)
-    out = {"run_id": args.run_id, "processed_buckets": processed,
-           "model_fingerprint": fp}
-    if n_convs is not None:
-        out["conv_report_rows"] = n_convs
+        decided = spark.read.parquet(*this_run_dirs)
+        conv_report(decided).write.parquet(args.conv_report, mode="overwrite")
+        out["conv_report_rows"] = spark.read.parquet(args.conv_report).count()
     if args.bucketed_table:
         from ..operators.quality_filter import kept_turns
         from ..sources.sinks import write_bucketed
 
-        if this_run_dirs:
-            decided = spark.read.parquet(*this_run_dirs)
-            write_bucketed(
-                kept_turns(decided), args.bucketed_table,
-                n_buckets=args.buckets,
-            )
-            out["bucketed_table"] = args.bucketed_table
-        else:
-            print(f"bucketed-table skipped: no completed buckets under "
-                  f"{args.output}", file=sys.stderr)
+        decided = spark.read.parquet(*this_run_dirs)
+        write_bucketed(
+            kept_turns(decided), args.bucketed_table,
+            n_buckets=args.buckets,
+        )
+        out["bucketed_table"] = args.bucketed_table
     print(json.dumps(out))
     spark.stop()
     return 0

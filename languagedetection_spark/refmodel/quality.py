@@ -42,6 +42,10 @@ MAX_REP = 0.50
 MIN_LANG_CONF = 2.0
 MAX_PPL = 7.5  # calibrated ~p95 of in-language trigram ppl on the fixtures
 
+# every drop_reason value, in precedence order (see the module docstring)
+DROP_REASONS = ("too_short", "symbol_ratio", "repetition", "no_lang",
+                "low_lang_conf", "high_ppl")
+
 # ---------------------------------------------------------------------------
 # PII / toxicity scrub: ONE precompiled alternation, applied left-to-right,
 # non-overlapping (re.sub semantics).  Pattern syntax is kept in the common

@@ -16,6 +16,17 @@ resume after failure); each bucket's output is written to its own
 subdirectory, so a partially-written bucket is simply overwritten on retry
 (overwrite-by-partition idempotency).  The model fingerprint ties every
 bucket's output to the exact broadcast artifact that produced it (lineage).
+
+When more than one bucket is left to run, the input is first staged once
+under the checkpoint dir, partitioned by bucket:
+
+    <checkpoint>/_staged/<run_id>/_bucket=<b>/part-*.parquet
+
+and each bucket reads only its own ``_bucket=<b>`` directory.  The staging
+is recorded in its own ``_progress`` row (``<run_id>-staged.json``:
+run_id, status "staged", n_buckets, path, finished_at), so a resume with
+the same bucket count reuses the staged files; the staged dir is deleted
+once every bucket is done.
 """
 
 from __future__ import annotations
@@ -23,9 +34,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from ..refmodel.quality import DROP_REASONS
 
 
 def model_fingerprint(model) -> str:
@@ -42,74 +56,128 @@ def _progress_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "_progress")
 
 
-def load_completed(spark: SparkSession, checkpoint_dir: str,
-                   run_id: str) -> set[int]:
+def _staging_path(checkpoint_dir: str, run_id: str) -> str:
+    return os.path.join(checkpoint_dir, "_staged", run_id)
+
+
+def _progress_rows(checkpoint_dir: str) -> list[dict]:
+    """Every committed ``_progress`` row.  Only a missing table means
+    nothing is recorded: an unreadable row raises, because skipping it
+    would silently recompute (or restage) what it records.  ``*.tmp``
+    files are commits a crash cut short, and are not rows."""
     path = _progress_path(checkpoint_dir)
     if not os.path.exists(path):
-        return set()
-    try:
-        df = spark.read.json(path)
-        return {
-            r["bucket"]
-            for r in df.filter(
-                (F.col("run_id") == run_id) & (F.col("status") == "done")
-            ).select("bucket").collect()
-        }
-    except Exception:
-        return set()
+        return []
+    rows = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".json"):
+            continue
+        with open(os.path.join(path, name)) as f:
+            text = f.read()
+        try:
+            rows.append(json.loads(text))
+        except ValueError as e:
+            raise ValueError(
+                f"corrupt _progress row {os.path.join(path, name)}: {e}"
+            ) from e
+    return rows
 
 
-def record_done(checkpoint_dir: str, run_id: str, bucket: int,
-                metrics: dict) -> None:
-    """Append one JSON line atomically (rename) -- crash-safe bookkeeping."""
+def load_completed(spark: SparkSession, checkpoint_dir: str,
+                   run_id: str) -> set[int]:
+    """Buckets of *run_id* marked done.  (The table is local JSON files;
+    *spark* is not needed to read it.)"""
+    return {r["bucket"] for r in _progress_rows(checkpoint_dir)
+            if r["run_id"] == run_id and r["status"] == "done"}
+
+
+def _write_row(checkpoint_dir: str, name: str, row: dict) -> None:
+    """Write one JSON line atomically (rename) -- crash-safe bookkeeping."""
     path = _progress_path(checkpoint_dir)
     os.makedirs(path, exist_ok=True)
-    row = {"run_id": run_id, "bucket": bucket, "status": "done",
-           "finished_at": time.time(), **metrics}
-    final = os.path.join(path, f"{run_id}-{bucket}.json")
+    final = os.path.join(path, name)
     tmp = final + ".tmp"
     with open(tmp, "w") as f:
         f.write(json.dumps(row) + "\n")
     os.replace(tmp, final)
 
 
-def _bucket_metrics(spark: SparkSession, dest: str) -> dict:
-    """One aggregate pass over a just-written bucket: row/keep counts plus
-    the detector-confidence metrics the north_rule asks for (mean winner
-    confidence, abstention count, drop-reason histogram).  Columns are
-    optional — a non-filter ``process`` (e.g. the resume unit test's
-    length flag) still gets n_rows/n_kept; the real quality_filter output
-    gets the full set.  The drop-reason histogram is bounded by the
-    reason enum, so the extra groupBy collects O(|reasons|) rows."""
-    written = spark.read.parquet(dest)
-    cols = set(written.columns)
+def record_done(checkpoint_dir: str, run_id: str, bucket: int,
+                metrics: dict) -> None:
+    _write_row(checkpoint_dir, f"{run_id}-{bucket}.json",
+               {"run_id": run_id, "bucket": bucket, "status": "done",
+                "finished_at": time.time(), **metrics})
+
+
+def _staged_input(bucketed: DataFrame, checkpoint_dir: str, run_id: str,
+                  n_buckets: int, n_todo: int) -> DataFrame:
+    """*bucketed* read back from its staged copy, partitioned by
+    ``_bucket``.  Staged files of this run and bucket count are reused; if
+    there are none, they are written now when more than one bucket is left
+    to run, and otherwise *bucketed* itself is returned."""
+    path = _staging_path(checkpoint_dir, run_id)
+    row_name = f"{run_id}-staged.json"
+    staged = next((r for r in _progress_rows(checkpoint_dir)
+                   if r["run_id"] == run_id and r["status"] == "staged"),
+                  None)
+    if not (staged and staged["n_buckets"] == n_buckets
+            and os.path.isdir(path)):
+        if n_todo <= 1:
+            return bucketed
+        # the row goes first and comes back last, so a row always names
+        # a complete write
+        row_path = os.path.join(_progress_path(checkpoint_dir), row_name)
+        if os.path.exists(row_path):
+            os.remove(row_path)
+        bucketed.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+        _write_row(checkpoint_dir, row_name,
+                   {"run_id": run_id, "status": "staged",
+                    "n_buckets": n_buckets, "path": path,
+                    "finished_at": time.time()})
+    return bucketed.sparkSession.read.schema(bucketed.schema).parquet(path)
+
+
+def _observe_lineage(out: DataFrame) -> tuple[DataFrame, Observation]:
+    """*out* with the lineage aggregates attached, to be collected by the
+    action that writes it.  Columns are optional -- a non-filter
+    ``process`` (e.g. the resume unit test's length flag) still gets
+    n_rows/n_kept; the real quality_filter output gets the full set."""
+    cols = set(out.columns)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if "keep" in cols:
-        aggs.append(
-            F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0))
-            .alias("n_kept")
-        )
+        aggs.append(F.count_if(F.col("keep")).alias("n_kept"))
     if "lang_conf" in cols:
         # avg ignores NULLs (abstained turns); 6 dp keeps the JSON stable
         aggs.append(F.round(F.avg("lang_conf"), 6).alias("mean_lang_conf"))
     if "lang" in cols:
-        aggs.append(
-            F.coalesce(F.sum(F.col("lang").isNull().cast("long")), F.lit(0))
-            .alias("n_no_lang")
-        )
-    stats = written.agg(*aggs).collect()[0].asDict()
-    metrics = {"n_rows": stats["n_rows"], "n_kept": stats.get("n_kept")}
-    if "lang_conf" in cols:
-        metrics["mean_lang_conf"] = stats["mean_lang_conf"]
-    if "lang" in cols:
-        metrics["n_no_lang"] = stats["n_no_lang"]
+        aggs.append(F.count_if(F.col("lang").isNull()).alias("n_no_lang"))
     if "drop_reason" in cols:
-        metrics["drop_reasons"] = {
-            r["drop_reason"]: r["n"]
-            for r in written.filter("drop_reason IS NOT NULL")
-            .groupBy("drop_reason").agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        reason = F.col("drop_reason")
+        aggs += [F.count_if(reason == r).alias(r) for r in DROP_REASONS]
+        aggs.append(F.count_if(~reason.isin(*DROP_REASONS))
+                    .alias("_unknown_reasons"))
+    obs = Observation()
+    return out.observe(obs, *aggs), obs
+
+
+def _bucket_metrics(obs: Observation, columns: list[str]) -> dict:
+    """The lineage metrics of a bucket, as observed by its write: row/keep
+    counts plus the detector-confidence metrics the north_rule asks for
+    (mean winner confidence, abstention count, drop-reason histogram)."""
+    stats = obs.get
+    metrics = {"n_rows": stats["n_rows"], "n_kept": stats.get("n_kept")}
+    if "lang_conf" in columns:
+        metrics["mean_lang_conf"] = stats["mean_lang_conf"]
+    if "lang" in columns:
+        metrics["n_no_lang"] = stats["n_no_lang"]
+    if "drop_reason" in columns:
+        if stats["_unknown_reasons"]:
+            raise ValueError(
+                f"{stats['_unknown_reasons']} rows carry a drop_reason "
+                f"outside {DROP_REASONS}"
+            )
+        metrics["drop_reasons"] = {r: stats[r] for r in DROP_REASONS
+                                   if stats[r]}
     return metrics
 
 
@@ -128,23 +196,27 @@ def run_with_checkpoint(
     processed in THIS invocation (completed ones are skipped).
 
     Buckets are ``crc32(key) % n_buckets`` so membership is stable across
-    runs and engines.  Each bucket filter is pushed into the scan."""
+    runs and engines.  With more than one bucket to run, ``df`` is
+    evaluated once, into the staged copy (see the module docstring), and
+    each bucket's filter prunes that copy by partition."""
     done = load_completed(spark, checkpoint_dir, run_id)
+    todo = [b for b in range(n_buckets) if b not in done]
     bucketed = df.withColumn(
         "_bucket", F.crc32(F.col(key).cast("string")) % n_buckets
     )
+    source = _staged_input(bucketed, checkpoint_dir, run_id, n_buckets,
+                           len(todo))
     processed = []
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        out = process(part)
+    for b in todo:
+        part = source.filter(F.col("_bucket") == b).drop("_bucket")
+        out, obs = _observe_lineage(process(part))
         dest = os.path.join(output_dir, f"bucket={b}")
         out.write.mode("overwrite").parquet(dest)
         record_done(
             checkpoint_dir, run_id, b,
-            {**_bucket_metrics(spark, dest), "output": dest,
+            {**_bucket_metrics(obs, out.columns), "output": dest,
              **(extra_lineage or {})},
         )
         processed.append(b)
+    shutil.rmtree(_staging_path(checkpoint_dir, run_id), ignore_errors=True)
     return processed

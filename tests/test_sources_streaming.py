@@ -71,6 +71,215 @@ def test_checkpoint_resume(spark, fixture_dir, tmp_path):
     assert a == b and len(a) == df.count()
 
 
+def _progress(ck):
+    import glob
+    import json
+
+    rows = []
+    for p in sorted(glob.glob(os.path.join(ck, "_progress", "*.json"))):
+        with open(p) as f:
+            rows.append(json.load(f))
+    return rows
+
+
+def _staged_files(ck, run_id):
+    import glob
+
+    return sorted(glob.glob(os.path.join(ck, "_staged", run_id, "*", "*")))
+
+
+def test_checkpoint_bucket_plan_prunes_staged_input(spark, fixture_dir,
+                                                    tmp_path):
+    """The input (here deduped) is evaluated once, into the staged copy:
+    each bucket's plan is a scan of that copy pruned to one ``_bucket``
+    partition, with no dedup aggregate and no Exchange."""
+    from languagedetection_spark.operators.dedup import dedup_exact_keep_first
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = dedup_exact_keep_first(
+        spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet")))
+    assert "Aggregate" in df._jdf.queryExecution().executedPlan().toString()
+    plans = []
+
+    def proc(part):
+        plans.append(part._jdf.queryExecution().executedPlan().toString())
+        return part
+
+    ck = str(tmp_path / "ck")
+    run_with_checkpoint(spark, df, proc, str(tmp_path / "out"), ck, "p",
+                        n_buckets=4)
+    assert len(plans) == 4
+    for b, plan in enumerate(plans):
+        filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "_bucket" in filters and f"= {b})" in filters, plan
+        for op in ("Exchange", "Aggregate", "Join"):
+            assert op not in plan, plan
+    # staged once, recorded in its own row, deleted when all are done
+    assert [r["n_buckets"] for r in _progress(ck)
+            if r["status"] == "staged"] == [4]
+    assert not os.path.exists(os.path.join(ck, "_staged", "p"))
+
+
+def test_checkpoint_resume_reuses_staged_input(spark, fixture_dir, tmp_path):
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    seen = []
+
+    def failing(part):
+        if len(seen) == 2:
+            raise RuntimeError("boom")
+        seen.append(_staged_files(ck, "r"))
+        return part
+
+    with pytest.raises(RuntimeError):
+        run_with_checkpoint(spark, df, failing, out, ck, "r", n_buckets=4)
+    staged = _staged_files(ck, "r")
+    assert staged and seen == [staged, staged]
+    rows = [r for r in _progress(ck) if r["status"] == "staged"]
+
+    def resumed(part):
+        seen.append(_staged_files(ck, "r"))
+        return part
+
+    assert run_with_checkpoint(spark, df, resumed, out, ck, "r",
+                               n_buckets=4) == [2, 3]
+    # the same files (part-file names carry the writing job's id): no
+    # second staging write, and still exactly one staging row
+    assert seen[2:] == [staged, staged]
+    assert [r for r in _progress(ck) if r["status"] == "staged"] == rows
+    assert not _staged_files(ck, "r")
+    n = spark.read.parquet(*[f"{out}/bucket={b}" for b in range(4)]).count()
+    assert n == df.count()
+
+
+def test_checkpoint_restages_for_new_bucket_count(spark, fixture_dir,
+                                                  tmp_path):
+    """A staged copy is keyed by run id AND bucket count: a rerun with a
+    different --buckets restages instead of reading the old buckets."""
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+
+    def failing(part):
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError):
+        run_with_checkpoint(spark, df, failing, out, ck, "r", n_buckets=4)
+    first = _staged_files(ck, "r")
+    assert {os.path.basename(os.path.dirname(p)) for p in first} == {
+        f"_bucket={b}" for b in range(4)}
+    seen = []
+
+    def proc(part):
+        seen.append(_staged_files(ck, "r"))
+        return part
+
+    assert run_with_checkpoint(spark, df, proc, out, ck, "r",
+                               n_buckets=2) == [0, 1]
+    assert {os.path.basename(os.path.dirname(p)) for p in seen[0]} == {
+        "_bucket=0", "_bucket=1"}
+    assert not set(seen[0]) & set(first)
+    assert [r["n_buckets"] for r in _progress(ck)
+            if r["status"] == "staged"] == [2]
+    n = spark.read.parquet(f"{out}/bucket=0", f"{out}/bucket=1").count()
+    assert n == df.count()
+
+
+def test_checkpoint_single_bucket_left_is_not_staged(spark, fixture_dir,
+                                                     tmp_path):
+    """--buckets 1, and a resume with one bucket left, write no staged
+    copy: the one bucket reads the input directly."""
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    ck = str(tmp_path / "ck")
+    run_with_checkpoint(spark, df, lambda part: part, str(tmp_path / "out"),
+                        ck, "one", n_buckets=1)
+    assert [r["status"] for r in _progress(ck)] == ["done"]
+    assert not os.path.exists(os.path.join(ck, "_staged"))
+
+
+def test_checkpoint_observed_lineage_matches_reread(spark, fixture_dir,
+                                                    oracle_model, tmp_path):
+    """Differential: the lineage metrics observed on each bucket's write
+    equal an aggregate over the bucket read back from disk; buckets with
+    no conversations (more buckets than convs) record zero rows."""
+    from languagedetection_spark.functions.kernels import FilterModel
+    from languagedetection_spark.functions.udfs import broadcast_model
+    from languagedetection_spark.operators.quality_filter import quality_filter
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    v, tm, _ = oracle_model
+    bc = broadcast_model(spark, FilterModel.from_vocabulary(v, tm))
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    for n_buckets, src in ((4, df), (8, df.filter("conv_id < 'c0003'"))):
+        ck = str(tmp_path / f"ck{n_buckets}")
+        run_with_checkpoint(spark, src, lambda part: quality_filter(part, bc),
+                            str(tmp_path / f"out{n_buckets}"), ck, "d",
+                            n_buckets=n_buckets)
+        rows = [r for r in _progress(ck) if r["status"] == "done"]
+        assert sorted(r["bucket"] for r in rows) == list(range(n_buckets))
+        for r in rows:
+            written = spark.read.parquet(r["output"])
+            want = written.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0))
+                .alias("n_kept"),
+                F.round(F.avg("lang_conf"), 6).alias("mean_lang_conf"),
+                F.coalesce(F.sum(F.col("lang").isNull().cast("long")),
+                           F.lit(0)).alias("n_no_lang"),
+            ).collect()[0].asDict()
+            want["drop_reasons"] = {
+                x["drop_reason"]: x["count"]
+                for x in written.filter("drop_reason IS NOT NULL")
+                .groupBy("drop_reason").count().collect()
+            }
+            assert {k: r[k] for k in want} == want
+        assert sum(r["n_rows"] for r in rows) == src.count()
+        if n_buckets == 8:
+            empty = [r for r in rows if r["n_rows"] == 0]
+            assert empty and all(
+                r["n_kept"] == 0 and r["drop_reasons"] == {}
+                and r["mean_lang_conf"] is None for r in empty)
+
+
+def test_checkpoint_lineage_rejects_unknown_drop_reason(spark, tmp_path):
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, run_with_checkpoint,
+    )
+
+    df = spark.createDataFrame([("c1", "x")], "conv_id string, text string")
+    ck = str(tmp_path / "ck")
+    with pytest.raises(ValueError, match="drop_reason"):
+        run_with_checkpoint(
+            spark, df, lambda part: part.withColumn("drop_reason",
+                                                    F.lit("made_up")),
+            str(tmp_path / "out"), ck, "u", n_buckets=1)
+    assert load_completed(spark, ck, "u") == set()
+
+
+def test_load_completed_raises_on_corrupt_row(spark, tmp_path):
+    """Only a missing _progress table means "nothing done": a truncated
+    row must not silently turn a resume into a full recompute."""
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, record_done,
+    )
+
+    ck = str(tmp_path / "ck")
+    assert load_completed(spark, ck, "t") == set()
+    record_done(ck, "t", 0, {"n_rows": 1})
+    # a commit cut short before its rename is not a row
+    (tmp_path / "ck" / "_progress" / "t-1.json.tmp").write_text('{"run_')
+    assert load_completed(spark, ck, "t") == {0}
+    (tmp_path / "ck" / "_progress" / "t-1.json").write_text(
+        '{"run_id": "t", "bucket": 1, "sta')
+    with pytest.raises(ValueError, match="t-1.json"):
+        load_completed(spark, ck, "t")
+
+
 # ---------------------------------------------------------------------------
 # streaming
 # ---------------------------------------------------------------------------
@@ -540,10 +749,8 @@ def test_filter_job_dedup_exact_stage(spark, tmp_path):
     # bucket's _progress row carries counts, mean winner confidence,
     # abstention count, and a drop-reason histogram that exactly accounts
     # for the dropped rows
-    prog = [
-        json.loads(open(p).read())
-        for p in sorted(glob.glob(str(tmp_path / "ckpt/_progress/*.json")))
-    ]
+    prog = [r for r in _progress(str(tmp_path / "ckpt"))
+            if r["status"] == "done"]
     assert prog and sum(r["n_rows"] for r in prog) == 6
     for r in prog:
         assert {"mean_lang_conf", "n_no_lang", "drop_reasons",
@@ -632,3 +839,62 @@ def test_filter_job_dedup_minhash_stage(spark, tmp_path):
         f"'{tmp_path}/out/bucket=*/*.parquet' ORDER BY conv_id"
     ).fetchall()
     assert res == [("c1", 0), ("c3", 0)]
+
+
+def _run_job(args):
+    """filter_job in a fresh process, stderr merged into stdout."""
+    import subprocess
+    import sys
+
+    return subprocess.run(
+        [sys.executable, "-m", "languagedetection_spark.jobs.filter_job",
+         *args],
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def test_filter_job_builds_session_without_console_progress(monkeypatch,
+                                                            tmp_path):
+    """The progress bar is a build-time setting: the job must pass it to
+    get_spark, since setting it on a live session raises."""
+    from languagedetection_spark.jobs.filter_job import main
+    from languagedetection_spark.plans import session
+
+    seen = {}
+
+    def fake_get_spark(**kw):
+        seen.update(kw)
+        raise RuntimeError("stop here")
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    with pytest.raises(RuntimeError, match="stop here"):
+        main(["--input", "x.parquet", "--output", str(tmp_path / "o"),
+              "--checkpoint", str(tmp_path / "c")])
+    assert seen["extra_conf"]["spark.ui.showConsoleProgress"] == "false"
+
+
+def test_filter_job_output_ends_in_json_and_checks_done_buckets(fixture_dir,
+                                                                tmp_path):
+    """The job's last output line is its JSON summary, even with stderr
+    merged in (no console progress bar).  A rerun whose checkpoint marks a
+    bucket done while its bucket=N dir is gone fails before the exports
+    instead of exporting the other buckets."""
+    import json
+    import shutil
+
+    args = ["--input", os.path.join(fixture_dir, "transcripts.parquet"),
+            "--output", str(tmp_path / "out"),
+            "--checkpoint", str(tmp_path / "ckpt"), "--buckets", "2"]
+    first = _run_job(args + ["--conv-report", str(tmp_path / "rep1")])
+    assert first.returncode == 0, first.stdout[-2000:]
+    assert "[Stage" not in first.stdout
+    summary = json.loads(first.stdout.strip().splitlines()[-1])
+    assert summary["processed_buckets"] == [0, 1]
+    assert summary["conv_report_rows"] > 0
+
+    shutil.rmtree(tmp_path / "out" / "bucket=1")
+    second = _run_job(args + ["--conv-report", str(tmp_path / "rep2")])
+    assert second.returncode == 1
+    assert "marks run 'r1' done but its output is missing" in second.stdout
+    assert "bucket=1" in second.stdout
+    assert not (tmp_path / "rep2").exists()

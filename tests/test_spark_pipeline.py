@@ -75,6 +75,38 @@ def test_spark_pipeline_matches_oracle(spark, fixture_dir, turns,
     assert mismatches == 0
 
 
+def test_broadcast_model_swap_in_reused_workers(spark, fixture_dir,
+                                                oracle_model, filter_model):
+    """Two broadcast models in one session, run in turn on the same (reused)
+    Python workers: each run decides with its own model."""
+    from languagedetection_spark.functions.udfs import broadcast_model
+    from languagedetection_spark.operators.quality_filter import quality_filter
+
+    _v, _tm, rows = oracle_model
+    langs = sorted({lang for lang, _ in rows})
+    other = FilterModel.from_corpus(
+        [(lang, text) for lang, text in rows if lang in langs[::2]])
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    texts = [r["text"] for r in df.select("text").collect()]
+
+    def expected(model):
+        return sorted(zip(texts, model.decide_batch(texts)["lang"]),
+                      key=str)
+
+    def run(bc):
+        return sorted(((r["text"], r["lang"]) for r in
+                       quality_filter(df, bc).select("text", "lang").collect()),
+                      key=str)
+
+    bc_a, bc_b = broadcast_model(spark, filter_model), broadcast_model(
+        spark, other)
+    want_a, want_b = expected(filter_model), expected(other)
+    assert want_a != want_b
+    assert run(bc_a) == want_a
+    assert run(bc_b) == want_b
+    assert run(bc_a) == want_a
+
+
 def test_partition_invariance(spark, fixture_dir, filter_model):
     """Output must be independent of partitioning (salted or not) -- the
     SURVEY §5.3 property test."""
