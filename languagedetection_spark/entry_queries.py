@@ -2809,100 +2809,6 @@ HAVING count(*) FILTER (WHERE nset = 3) >= 2
 """
 
 
-def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ann_bucketed_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return ann_bucketed_topk_df(e, e.filter("vec_id < 20"), k=3)
-
-
-ANN_BUCKETED_SQL = """
-WITH e AS (
-    SELECT vec_id, embedding::DOUBLE[] AS emb,
-           (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END
-          + CASE WHEN embedding[2] > 0 THEN 2 ELSE 0 END
-          + CASE WHEN embedding[3] > 0 THEN 4 ELSE 0 END
-          + CASE WHEN embedding[4] > 0 THEN 8 ELSE 0 END
-          + CASE WHEN embedding[5] > 0 THEN 16 ELSE 0 END
-          + CASE WHEN embedding[6] > 0 THEN 32 ELSE 0 END
-          + CASE WHEN embedding[7] > 0 THEN 64 ELSE 0 END
-          + CASE WHEN embedding[8] > 0 THEN 128 ELSE 0 END) AS code
-    FROM embeddings
-    WHERE embedding IS NOT NULL
-      AND len(list_filter(embedding, x -> x IS NULL)) = 0
-      AND list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) > 0
-),
-q AS (SELECT vec_id AS query_id, emb AS qemb, code FROM e WHERE vec_id < 20),
-pairs AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           list_cosine_similarity(q.qemb, e.emb) AS sim_raw
-    FROM q JOIN e ON e.code = q.code AND e.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, round(sim_raw, 4) AS sim, rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim_raw DESC, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
-"""
-
-
-def ann_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table sign-LSH ANN (the recall lever over the single-table
-    `ann_bucketed_topk`): 8 tables × 4 bits over disjoint dim ranges,
-    candidates = union over tables, deduplicated, exact-cosine ranked.
-    On clustered data this configuration is test-pinned at 0.97 recall
-    (tests/test_similarity.py)."""
-    from .operators.similarity import ann_bucketed_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return ann_bucketed_topk_df(e, e.filter("vec_id < 20"), k=3,
-                                n_bits=4, n_tables=8)
-
-
-def _lsh_code_sql(offset: int, n_bits: int) -> str:
-    return "(" + " + ".join(
-        f"CASE WHEN embedding[{offset + i + 1}] > 0 THEN {1 << i} ELSE 0 END"
-        for i in range(n_bits)
-    ) + ")"
-
-
-_ANN_MT_CODES = "\nUNION ALL\n".join(
-    f"    SELECT vec_id, {t} AS t, {_lsh_code_sql(t * 4, 4)} AS c"
-    f" FROM embeddings WHERE {_VALID_EMB_SQL}"
-    for t in range(8)
-)
-
-ANN_MULTITABLE_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-      WHERE embedding IS NOT NULL
-      AND len(list_filter(embedding, x -> x IS NULL)) = 0
-      AND list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) > 0),
-codes AS (
-{_ANN_MT_CODES}
-),
-q AS (SELECT vec_id AS query_id, t, c FROM codes WHERE vec_id < 20),
-cand AS (
-    SELECT DISTINCT q.query_id, b.vec_id AS neighbor_id
-    FROM q JOIN codes b ON b.t = q.t AND b.c = q.c
-                       AND b.vec_id <> q.query_id
-),
-pairs AS (
-    SELECT c.query_id, c.neighbor_id,
-           list_cosine_similarity(eq.emb, en.emb) AS sim_raw
-    FROM cand c
-    JOIN e eq ON eq.vec_id = c.query_id
-    JOIN e en ON en.vec_id = c.neighbor_id
-)
-SELECT query_id, neighbor_id, round(sim_raw, 4) AS sim, rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim_raw DESC, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
-"""
-
-
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import dedup_embedding_cosine_df
 
@@ -3944,345 +3850,6 @@ FROM lineitem
 """
 
 
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: the embeddings table's `label` column serves as the
-    coarse quantizer's precomputed cell assignment (inverted-file lists =
-    partitions by label); search only the query's own cell.  At scale the
-    cell assignment comes from a trained coarse codebook
-    (operators/similarity.py::assign_cells_df); the Spark shape (per-cell
-    broadcast join instead of all-pairs) is identical and recall ≥ 0.9 is
-    test-pinned on clustered data (on THIS isotropic fixture recall is
-    necessarily the scanned fraction — no structure to exploit)."""
-    from .operators.similarity import ann_ivf_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return ann_ivf_topk_df(e, e.filter("vec_id < 20"), k=3,
-                           cell_col="label")
-
-
-ANN_IVF_SQL = """
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings
-      WHERE embedding IS NOT NULL
-      AND len(list_filter(embedding, x -> x IS NULL)) = 0
-      AND list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) > 0),
-q AS (SELECT vec_id AS query_id, label AS qlabel, emb AS qemb
-      FROM e WHERE vec_id < 20),
-pairs AS (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           list_cosine_similarity(q.qemb, e.emb) AS sim_raw
-    FROM q JOIN e ON e.label = q.qlabel AND e.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, round(sim_raw, 4) AS sim, rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim_raw DESC, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
-"""
-
-
-def ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8 scalar-quantized ANN (operators/similarity.py::ann_sq_topk_df):
-    database vectors stored 1 byte/dim (fixed [-1,1) grid -- deterministic,
-    no trained codebook), scanned with asymmetric cosine against the exact
-    query.  The oracle reproduces the encode/reconstruct arithmetic
-    bit-for-bit in SQL."""
-    from .operators.similarity import ann_sq_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return ann_sq_topk_df(e, e.filter("vec_id < 20"), k=3)
-
-
-ANN_SQ_SQL = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-      WHERE embedding IS NOT NULL
-      AND len(list_filter(embedding, x -> x IS NULL)) = 0
-      AND list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) > 0),
-rec AS (
-    SELECT vec_id,
-           list_transform(
-               list_transform(emb, x -> least(255, greatest(0,
-                   CAST(floor((x - (-1.0)) * 128.0) AS INT)))),
-               c -> -1.0 + (c + 0.5) * (2.0 / 256)
-           ) AS remb
-    FROM e
-),
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 20),
-pairs AS (
-    SELECT q.query_id, r.vec_id AS neighbor_id,
-           list_cosine_similarity(q.qemb, r.remb) AS sim_raw
-    FROM q JOIN rec r ON r.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, round(sim_raw, 4) AS sim, rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim_raw DESC, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
-"""
-
-
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantized ANN (operators/similarity.py::pq_topk_df): a
-    TRAINED codebook compression path beside the fixed-grid ann_sq_topk
-    -- per-subspace k-means codebooks (4 subspaces x 8 codewords, one
-    Lloyd round), database vectors encoded as 4 codeword ids, asymmetric
-    squared-L2 ADC scan, per-query top-3.  Exact integer arithmetic end
-    to end, so the oracle unrolls seeding, the training round, encoding,
-    and every ADC distance bit-for-bit."""
-    from .operators.similarity import pq_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return pq_topk_df(e, e.filter("vec_id < 20"), k=3)
-
-
-# shared CTE chain: PQ training + encoding + ADC scan up through `pairs`
-# (used by both the plain PQ top-k oracle and the re-ranked variant)
-_ANN_PQ_CORE = f"""
-WITH valid AS (
-    SELECT vec_id, embedding FROM embeddings WHERE {_VALID_EMB_SQL}
-),
-dims AS (SELECT max(len(embedding)) // 4 AS ds FROM valid),
-qdim AS (
-    SELECT vec_id, i.i - 1 AS dim,
-           CAST(floor(embedding[i.i]::DOUBLE * 1000 + 0.5) AS BIGINT) AS qx
-    FROM valid, LATERAL (
-        SELECT unnest(generate_series(1, len(embedding))) AS i
-    ) i
-),
-sdim AS (  -- (subspace, within-subspace dim) split; trailing dims ignored
-    SELECT q.vec_id, CAST(q.dim // d.ds AS INT) AS sub,
-           CAST(q.dim % d.ds AS INT) AS sd, q.qx
-    FROM qdim q, dims d
-    WHERE q.dim < 4 * d.ds
-),
-stats AS (SELECT count(*) AS n FROM valid),
-ranked AS (
-    SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM valid
-),
-init AS (  -- evenly-strided rank seeding, mirroring pq_train_codebooks
-    SELECT r.vec_id,
-           CAST(r.rn // greatest(s.n // 8, 1) AS INT) AS cluster
-    FROM ranked r, stats s
-    WHERE r.rn % greatest(s.n // 8, 1) = 0
-      AND r.rn // greatest(s.n // 8, 1) < 8
-),
-c0 AS (SELECT i.cluster, s.sub, s.sd, s.qx AS cx
-       FROM init i JOIN sdim s USING (vec_id)),
-d1 AS (SELECT s.vec_id, s.sub, c.cluster,
-              sum((s.qx - c.cx) * (s.qx - c.cx)) AS dist
-       FROM sdim s JOIN c0 c ON c.sub = s.sub AND c.sd = s.sd
-       GROUP BY s.vec_id, s.sub, c.cluster),
-a1 AS (SELECT vec_id, sub, cluster FROM (
-           SELECT vec_id, sub, cluster, row_number() OVER (
-               PARTITION BY vec_id, sub ORDER BY dist, cluster) AS rk
-           FROM d1)
-       WHERE rk = 1),
-c1 AS (  -- one training round: per-(subspace, codeword) rounded mean
-    SELECT a.sub, a.cluster, s.sd,
-           CAST(floor(sum(s.qx) * 1.0 / count(*) + 0.5) AS BIGINT) AS cx
-    FROM a1 a JOIN sdim s ON s.vec_id = a.vec_id AND s.sub = a.sub
-    GROUP BY a.sub, a.cluster, s.sd),
-d2 AS (SELECT s.vec_id, s.sub, c.cluster,
-              sum((s.qx - c.cx) * (s.qx - c.cx)) AS dist
-       FROM sdim s JOIN c1 c ON c.sub = s.sub AND c.sd = s.sd
-       GROUP BY s.vec_id, s.sub, c.cluster),
-a2 AS (SELECT vec_id, sub, cluster FROM (
-           SELECT vec_id, sub, cluster, row_number() OVER (
-               PARTITION BY vec_id, sub ORDER BY dist, cluster) AS rk
-           FROM d2)
-       WHERE rk = 1),
-recon AS (  -- PQ code -> codeword reconstruction per subspace dim
-    SELECT a.vec_id, c.sub, c.sd, c.cx
-    FROM a2 a JOIN c1 c ON c.sub = a.sub AND c.cluster = a.cluster),
-q AS (SELECT s.vec_id AS query_id, s.sub, s.sd, s.qx
-      FROM sdim s WHERE s.vec_id < 20),
-pairs AS (
-    SELECT q.query_id, r.vec_id AS neighbor_id,
-           sum((r.cx - q.qx) * (r.cx - q.qx)) AS adc_dist
-    FROM q JOIN recon r
-      ON r.sub = q.sub AND r.sd = q.sd AND r.vec_id <> q.query_id
-    GROUP BY q.query_id, r.vec_id
-)
-"""
-
-ANN_PQ_SQL = _ANN_PQ_CORE + """
-SELECT query_id, neighbor_id, CAST(adc_dist AS BIGINT) AS adc_dist,
-       CAST(rank AS BIGINT) AS rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adc_dist, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
-"""
-
-
-def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ shortlist + exact re-rank (operators/similarity.py::
-    pq_rerank_topk_df): the ADC scan proposes 60 candidates per query
-    (12% of the sf0.001 corpus) from the 64x-compressed codes, then only
-    those fetch full vectors for an exact cosine top-3 — the standard
-    production refine stage that recovers the recall the lossy code
-    budget gives up.  On this fixture (random embeddings — the hard,
-    concentrated-cosine case) raw PQ exact-top-3 agreement is 0.017;
-    re-ranked is 0.433, pinned in tests/test_similarity.py.  The oracle
-    replays the whole training/encoding/ADC chain, takes the same
-    shortlist, and re-ranks with list_cosine_similarity."""
-    from .operators.similarity import pq_rerank_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return pq_rerank_topk_df(e, e.filter("vec_id < 20"), k=3, shortlist=60)
-
-
-ANN_PQ_RERANK_SQL = _ANN_PQ_CORE + """
-, short AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dist, neighbor_id) AS rk
-        FROM pairs
-    ) WHERE rk <= 60
-),
-ed AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM valid),
-rer AS (
-    SELECT s.query_id, s.neighbor_id,
-           list_cosine_similarity(eq.emb, en.emb) AS sim_raw
-    FROM short s
-    JOIN ed en ON en.vec_id = s.neighbor_id
-    JOIN ed eq ON eq.vec_id = s.query_id
-)
-SELECT query_id, neighbor_id, round(sim_raw, 4) AS sim,
-       CAST(rank AS BIGINT) AS rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim_raw DESC, neighbor_id) AS rank
-    FROM rer
-) WHERE rank <= 3
-"""
-
-
-def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composite ANN (operators/similarity.py::ivfpq_topk_df):
-    coarse k-means cells (k=4, one Lloyd round) prune the scan to the
-    query's cell (nprobe=1), PQ codes (4x8 codebooks) supply asymmetric
-    ADC distances within it -- the classical production configuration.
-    Both stages are exact-integer contract kernels, so the oracle
-    unrolls coarse training, PQ training, encoding, cell routing, and
-    every ADC distance bit-for-bit."""
-    from .operators.similarity import ivfpq_topk_df
-
-    e = _t(spark, sf_dir, "embeddings")
-    return ivfpq_topk_df(e, e.filter("vec_id < 20"), k=3)
-
-
-ANN_IVFPQ_SQL = f"""
-WITH valid AS (
-    SELECT vec_id, embedding FROM embeddings WHERE {_VALID_EMB_SQL}
-),
-dims AS (SELECT max(len(embedding)) // 4 AS ds FROM valid),
-qdim AS (
-    SELECT vec_id, i.i - 1 AS dim,
-           CAST(floor(embedding[i.i]::DOUBLE * 1000 + 0.5) AS BIGINT) AS qx
-    FROM valid, LATERAL (
-        SELECT unnest(generate_series(1, len(embedding))) AS i
-    ) i
-),
-sdim AS (
-    SELECT q.vec_id, CAST(q.dim // d.ds AS INT) AS sub,
-           CAST(q.dim % d.ds AS INT) AS sd, q.qx
-    FROM qdim q, dims d
-    WHERE q.dim < 4 * d.ds
-),
-stats AS (SELECT count(*) AS n FROM valid),
-ranked AS (
-    SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM valid
-),
--- coarse quantizer: k=4 cells, strided-rank seeds, ONE Lloyd round
-kinit AS (
-    SELECT r.vec_id,
-           CAST(r.rn // greatest(s.n // 4, 1) AS INT) AS cell
-    FROM ranked r, stats s
-    WHERE r.rn % greatest(s.n // 4, 1) = 0
-      AND r.rn // greatest(s.n // 4, 1) < 4
-),
-kc0 AS (SELECT i.cell, d.dim, d.qx AS cx
-        FROM kinit i JOIN qdim d USING (vec_id)),
-kd1 AS (SELECT q.vec_id, c.cell,
-               sum((q.qx - c.cx) * (q.qx - c.cx)) AS dist
-        FROM qdim q JOIN kc0 c ON c.dim = q.dim
-        GROUP BY q.vec_id, c.cell),
-ka1 AS (SELECT vec_id, cell FROM (
-            SELECT vec_id, cell, row_number() OVER (
-                PARTITION BY vec_id ORDER BY dist, cell) AS rk FROM kd1)
-        WHERE rk = 1),
-kc1 AS (SELECT a.cell, d.dim,
-               CAST(floor(sum(d.qx) * 1.0 / count(*) + 0.5) AS BIGINT) AS cx
-        FROM ka1 a JOIN qdim d USING (vec_id) GROUP BY a.cell, d.dim),
-kd2 AS (SELECT q.vec_id, c.cell,
-               sum((q.qx - c.cx) * (q.qx - c.cx)) AS dist
-        FROM qdim q JOIN kc1 c ON c.dim = q.dim
-        GROUP BY q.vec_id, c.cell),
-ka2 AS (SELECT vec_id, cell FROM (
-            SELECT vec_id, cell, row_number() OVER (
-                PARTITION BY vec_id ORDER BY dist, cell) AS rk FROM kd2)
-        WHERE rk = 1),
--- PQ codebooks: k=8 codewords per subspace, strided-rank seeds, one round
-init AS (
-    SELECT r.vec_id,
-           CAST(r.rn // greatest(s.n // 8, 1) AS INT) AS cluster
-    FROM ranked r, stats s
-    WHERE r.rn % greatest(s.n // 8, 1) = 0
-      AND r.rn // greatest(s.n // 8, 1) < 8
-),
-c0 AS (SELECT i.cluster, s.sub, s.sd, s.qx AS cx
-       FROM init i JOIN sdim s USING (vec_id)),
-d1 AS (SELECT s.vec_id, s.sub, c.cluster,
-              sum((s.qx - c.cx) * (s.qx - c.cx)) AS dist
-       FROM sdim s JOIN c0 c ON c.sub = s.sub AND c.sd = s.sd
-       GROUP BY s.vec_id, s.sub, c.cluster),
-a1 AS (SELECT vec_id, sub, cluster FROM (
-           SELECT vec_id, sub, cluster, row_number() OVER (
-               PARTITION BY vec_id, sub ORDER BY dist, cluster) AS rk
-           FROM d1)
-       WHERE rk = 1),
-c1 AS (
-    SELECT a.sub, a.cluster, s.sd,
-           CAST(floor(sum(s.qx) * 1.0 / count(*) + 0.5) AS BIGINT) AS cx
-    FROM a1 a JOIN sdim s ON s.vec_id = a.vec_id AND s.sub = a.sub
-    GROUP BY a.sub, a.cluster, s.sd),
-d2 AS (SELECT s.vec_id, s.sub, c.cluster,
-              sum((s.qx - c.cx) * (s.qx - c.cx)) AS dist
-       FROM sdim s JOIN c1 c ON c.sub = s.sub AND c.sd = s.sd
-       GROUP BY s.vec_id, s.sub, c.cluster),
-a2 AS (SELECT vec_id, sub, cluster FROM (
-           SELECT vec_id, sub, cluster, row_number() OVER (
-               PARTITION BY vec_id, sub ORDER BY dist, cluster) AS rk
-           FROM d2)
-       WHERE rk = 1),
-recon AS (
-    SELECT a.vec_id, c.sub, c.sd, c.cx
-    FROM a2 a JOIN c1 c ON c.sub = a.sub AND c.cluster = a.cluster),
--- queries are corpus rows, so their cell comes from the same assignment
-q AS (SELECT s.vec_id AS query_id, k.cell AS qcell, s.sub, s.sd, s.qx
-      FROM sdim s JOIN ka2 k USING (vec_id) WHERE s.vec_id < 20),
-pairs AS (
-    SELECT q.query_id, r.vec_id AS neighbor_id, q.qcell AS cell,
-           sum((r.cx - q.qx) * (r.cx - q.qx)) AS adc_dist
-    FROM q
-    JOIN ka2 kr ON kr.cell = q.qcell
-    JOIN recon r ON r.vec_id = kr.vec_id
-      AND r.sub = q.sub AND r.sd = q.sd AND r.vec_id <> q.query_id
-    GROUP BY q.query_id, r.vec_id, q.qcell
-)
-SELECT query_id, neighbor_id, CAST(cell AS INT) AS cell,
-       CAST(adc_dist AS BIGINT) AS adc_dist, CAST(rank AS BIGINT) AS rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adc_dist, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
-"""
-
-
 def axiom_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op-19 (TrainingResult.scala:66-79): per language, axiom count vs
     induction count with score != 0.0, over the mean-adjust fold's final
@@ -4833,66 +4400,6 @@ SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
        coalesce(c.n_cust, 0) AS n_cust,
        coalesce(s.n_supp, 0) AS n_supp
 FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
-"""
-
-
-def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode/feature-extract, END-TO-END under the DuckDB gate:
-    synthesize the opaque-binary media table from documents (payload =
-    utf-8 text bytes, modality round-robin), run the deterministic fake
-    decode (16-bin nibble histogram) through the real mapInPandas plumbing
-    (multimodal/binary_ops.py), and emit the nonzero bins.  The documents
-    domain is [a-z ] so exactly bins 2 (space 0x20), 6 (a-o 0x6*) and
-    7 (p-z 0x7*) are populated — each independently recomputable from the
-    text in SQL, which makes the whole decode path oracle-checkable."""
-    from .multimodal.binary_ops import decode_media_df, synthesize_media
-
-    d = _t(spark, sf_dir, "documents")
-    feats = decode_media_df(synthesize_media(spark, d), fake=True)
-    return feats.select(
-        "doc_id", "modality", "n_bytes",
-        F.round(F.element_at("features", 3), 6).alias("f_space"),
-        F.round(F.element_at("features", 7), 6).alias("f_ao"),
-        F.round(F.element_at("features", 8), 6).alias("f_pz"),
-    )
-
-
-MULTIMODAL_DECODE_SQL = """
-SELECT doc_id,
-       list_extract(['image', 'audio', 'video'],
-                    CAST(doc_id % 3 AS INTEGER) + 1) AS modality,
-       CAST(coalesce(octet_length(encode(text)), 0) AS BIGINT) AS n_bytes,
-       -- the kernel's features are NIBBLE-BIN byte histograms: bin 2 =
-       -- 0x20-0x2F (space..'/'), bin 6 = 0x60-0x6F ('`'..'o'), bin 7 =
-       -- 0x70-0x7F ('p'..DEL); ASCII text, so chars == bytes
-       round(coalesce(length(regexp_replace(text, '[^ -/]', '', 'g'))
-             / CAST(nullif(length(text), 0) AS DOUBLE), 0.0), 6) AS f_space,
-       round(coalesce(length(regexp_replace(text, '[^`-o]', '', 'g'))
-             / CAST(nullif(length(text), 0) AS DOUBLE), 0.0), 6) AS f_ao,
-       round(coalesce(length(regexp_replace(text, '[^p-\\x7f]', '', 'g'))
-             / CAST(nullif(length(text), 0) AS DOUBLE), 0.0), 6) AS f_pz
-FROM documents
-"""
-
-
-def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-style frame sampling through the stub plumbing: one row per
-    1024-byte 'frame' offset (multimodal/binary_ops.py::frame_sample_df);
-    the offset arithmetic is recomputed relationally in the oracle."""
-    from .multimodal.binary_ops import frame_sample_df, synthesize_media
-
-    d = _t(spark, sf_dir, "documents")
-    media = synthesize_media(spark, d).filter("modality = 'video'")
-    return frame_sample_df(media, every_n_bytes=1024, fake=True)
-
-
-MULTIMODAL_FRAMES_SQL = """
-SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-       CAST(i * 1024 AS BIGINT) AS offset
-FROM documents,
-     unnest(range(CAST(ceil(octet_length(encode(text)) / 1024.0) AS BIGINT)))
-         AS t(i)
-WHERE doc_id % 3 = 2
 """
 
 
@@ -5643,89 +5150,6 @@ SELECT sz AS cluster_size,
        sz * count(*) AS n_docs,
        (sz - 1) * count(*) AS surplus_docs
 FROM sizes GROUP BY sz
-"""
-
-
-def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive training (DPR/Contriever
-    recipe): for each query vector, the top-3 most-similar vectors whose
-    label DIFFERS — the near-miss impostors that make the best negatives.
-    Same broadcast-query brute-force scan as embedding_topk with the
-    label-mismatch predicate pushed into the join.
-
-    Scale shape: the query side is broadcast, the big side is a map-only
-    scan (no data x data join); per-query top-3 is a bounded window over
-    |queries| x |corpus| candidate rows, and at real scale the scan
-    composes with the IVF/PQ operators in operators/similarity.py for
-    sublinear candidate generation."""
-    from .operators.similarity import valid_embeddings
-
-    e = valid_embeddings(
-        _t(spark, sf_dir, "embeddings"), "embedding"
-    ).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    norm = F.sqrt(
-        F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    e = e.withColumn("nrm", norm).transform(_cached)
-    q = e.filter("vec_id < 20").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"),
-    )
-    pairs = e.join(
-        F.broadcast(q), F.col("label") != F.col("query_label")
-    )
-    dot = F.aggregate(
-        F.zip_with("emb", "qemb", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = (dot / (F.col("nrm") * F.col("qnrm"))).alias("sim_raw")
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.select(
-            "query_id",
-            "query_label",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("neighbor_label"),
-            sim,
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter("rank <= 3")
-        .select(
-            "query_id", "query_label", "neighbor_id", "neighbor_label",
-            F.round("sim_raw", 4).alias("sim"), "rank",
-        )
-    )
-
-
-ANN_HARD_NEGATIVES_SQL = """
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings
-      WHERE embedding IS NOT NULL
-      AND len(list_filter(embedding, x -> x IS NULL)) = 0
-      AND list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) > 0),
-q AS (SELECT vec_id AS query_id, label AS query_label, emb AS qemb
-      FROM e WHERE vec_id < 20),
-pairs AS (
-    SELECT q.query_id, q.query_label, e.vec_id AS neighbor_id,
-           e.label AS neighbor_label,
-           list_cosine_similarity(q.qemb, e.emb) AS sim_raw
-    FROM q, e WHERE e.label <> q.query_label
-)
-SELECT query_id, query_label, neighbor_id, neighbor_label,
-       round(sim_raw, 4) AS sim, rank
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim_raw DESC, neighbor_id) AS rank
-    FROM pairs
-) WHERE rank <= 3
 """
 
 
@@ -6693,35 +6117,20 @@ LSH_BAND_SWEEP_SQL = (
 # ---------------------------------------------------------------------------
 
 # Registry order matters: the driver's CORRECTNESS gate checks the FIRST 50
-# entries only.  Queries that have never produced a driver row lead the dict
-# (r2 judge ask #1: ann_multitable_topk, multimodal_decode/frames,
-# range_join_tiers, percentile_stats, ntile_value_quartiles,
-# full_outer_nation_counts were at positions 50-56 for two rounds).
-# Long-stable TPC-H-ish entries rotate to the tail; the repo's own
-# parametrized contract test (tests/test_entry_contract.py) still covers all
-# 57 names every run regardless of position.
+# entries only, so the rows with the oldest external evidence lead the dict.
+# The repo's own parametrized contract test (tests/test_entry_contract.py)
+# covers every name on every run regardless of position.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- r5 driver window (50), VERDICT r4 ask #1: the 5 queries whose
-    #     behavior/plan changed this round, then ALL 25 r2-era stale rows,
-    #     then the 20 stalest r3-era rows (golden-fold, fastText, float-
-    #     heavy and multimodal oracles first) -- after this round no
-    #     contract row's external evidence predates r3 ---
     "label_knn_agreement": label_knn_agreement,
     "dedup_edit_distance": dedup_edit_distance,
     "sequence_packing": sequence_packing,
     "embedding_kmeans": embedding_kmeans,
-    "ann_ivfpq_topk": ann_ivfpq_topk,
-    # --- new in r5 (needs first-round driver evidence): the export stage;
-    #     displaces source_pagerank (r3-green, lowest-risk of the stale
-    #     tail) to position 51 ---
     "conv_export": conv_export,
-    # --- the 25 r2-era rotations (complete) ---
     "bpe_token_count": bpe_token_count,
     "langid_heuristic": langid_heuristic,
     "mean_adjust_fold": mean_adjust_fold,
     "langid_fasttext": langid_fasttext,
     "conv_quality_report": conv_quality_report,
-    "ann_sq_topk": ann_sq_topk,
     "axiom_distribution": axiom_distribution,
     "confusion_matrix": confusion_matrix,
     "approx_aggregates": approx_aggregates,
@@ -6741,10 +6150,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rollup_revenue": rollup_revenue,
     "pivot_events": pivot_events,
     "json_events": json_events,
-    # --- the 20 stalest r3-era rows ---
-    "ann_multitable_topk": ann_multitable_topk,
-    "multimodal_decode": multimodal_decode,
-    "multimodal_frames": multimodal_frames,
     "tfidf_top_terms": tfidf_top_terms,
     "label_centroids": label_centroids,
     "mixture_rates": mixture_rates,
@@ -6761,11 +6166,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lm_bigram_ppl": lm_bigram_ppl,
     "bm25_topk": bm25_topk,
     "heavy_hitters": heavy_hitters,
-    # --- outside the window (position 51+): source_pagerank stays
-    #     r3-green, displaced by conv_export; then 15 low-risk r3-green
-    #     entries (relational/
-    #     text kernels, untouched) then the 45 r4-green entries; all
-    #     remain covered by the repo's parametrized oracle tests ---
     "source_pagerank": source_pagerank,
     "range_join_tiers": range_join_tiers,
     "percentile_stats": percentile_stats,
@@ -6782,7 +6182,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lang_resolution": lang_resolution,
     "tokenize_explode": tokenize_explode,
     "tokenize_per_char": tokenize_per_char,
-    # --- r4-green (checked last round, unchanged) ---
     "doc_char_entropy": doc_char_entropy,
     "inverted_index": inverted_index,
     "classify_relational": classify_relational,
@@ -6791,9 +6190,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "vocab_build": vocab_build,
     "word_cumsum": word_cumsum,
     "semdedup_pairs": semdedup_pairs,
-    "ann_pq_topk": ann_pq_topk,
-    "ann_pq_rerank": ann_pq_rerank,
-    "ann_ivf_topk": ann_ivf_topk,
     "sample_weighted": sample_weighted,
     "streaming_hourly": streaming_hourly,
     "streaming_late_data": streaming_late_data,
@@ -6806,7 +6202,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "doc_novelty": doc_novelty,
     "ppl_buckets": ppl_buckets,
     "dedup_cluster_stats": dedup_cluster_stats,
-    "ann_hard_negatives": ann_hard_negatives,
     "token_budget_select": token_budget_select,
     "user_retention_cohorts": user_retention_cohorts,
     "funnel_conversion": funnel_conversion,
@@ -6826,7 +6221,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_components": dedup_components,
     "sample_stratified": sample_stratified,
     "decontaminate": decontaminate,
-    "ann_bucketed_topk": ann_bucketed_topk,
     "dedup_embedding_cosine": dedup_embedding_cosine,
 }
 
@@ -6836,7 +6230,6 @@ ORACLE_SQL: dict[str, str] = {
     "doc_novelty": DOC_NOVELTY_SQL,
     "ppl_buckets": PPL_BUCKETS_SQL,
     "dedup_cluster_stats": DEDUP_CLUSTER_STATS_SQL,
-    "ann_hard_negatives": ANN_HARD_NEGATIVES_SQL,
     "token_budget_select": TOKEN_BUDGET_SELECT_SQL,
     "user_retention_cohorts": USER_RETENTION_COHORTS_SQL,
     "funnel_conversion": FUNNEL_CONVERSION_SQL,
@@ -6878,7 +6271,6 @@ ORACLE_SQL: dict[str, str] = {
     "dedup_components": DEDUP_COMPONENTS_SQL,
     "sample_stratified": SAMPLE_STRATIFIED_SQL,
     "decontaminate": DECONTAMINATE_SQL,
-    "ann_bucketed_topk": ANN_BUCKETED_SQL,
     "dedup_embedding_cosine": DEDUP_EMBEDDING_SQL,
     "doc_fingerprint": DOC_FINGERPRINT_SQL,
     "bpe_token_count": BPE_TOKEN_COUNT_SQL,
@@ -6893,18 +6285,13 @@ ORACLE_SQL: dict[str, str] = {
     "conv_quality_report": CONV_QUALITY_SQL,
     "conv_export": CONV_EXPORT_SQL,
     "word_cumsum": WORD_CUMSUM_SQL,
-    "ann_ivf_topk": ANN_IVF_SQL,
-    "ann_sq_topk": ANN_SQ_SQL,
     "streaming_hourly": STREAMING_HOURLY_SQL,
     "streaming_dedup": STREAMING_DEDUP_SQL,
     "cube_revenue": CUBE_SQL,
     "range_join_tiers": RANGE_JOIN_SQL,
     "percentile_stats": PERCENTILE_SQL,
     "ntile_value_quartiles": NTILE_SQL,
-    "multimodal_decode": MULTIMODAL_DECODE_SQL,
-    "multimodal_frames": MULTIMODAL_FRAMES_SQL,
     "full_outer_nation_counts": FULL_OUTER_SQL,
-    "ann_multitable_topk": ANN_MULTITABLE_SQL,
     "tfidf_top_terms": TFIDF_TOP_TERMS_SQL,
     "doc_char_entropy": DOC_CHAR_ENTROPY_SQL,
     "inverted_index": INVERTED_INDEX_SQL,
@@ -6920,8 +6307,6 @@ ORACLE_SQL: dict[str, str] = {
     "importance_weights": IMPORTANCE_WEIGHTS_SQL,
     "embedding_kmeans": EMBEDDING_KMEANS_SQL,
     "semdedup_pairs": SEMDEDUP_PAIRS_SQL,
-    "ann_pq_topk": ANN_PQ_SQL,
-    "ann_ivfpq_topk": ANN_IVFPQ_SQL,
     "bloom_decontaminate": BLOOM_DECONTAMINATE_SQL,
     "bpe_merges": BPE_MERGES_SQL,
     "streaming_enrich": STREAMING_ENRICH_SQL,
@@ -6932,7 +6317,6 @@ ORACLE_SQL: dict[str, str] = {
     "containment_pairs": CONTAINMENT_PAIRS_SQL,
     "segment_dedup": SEGMENT_DEDUP_SQL,
     "doc_chunks": DOC_CHUNKS_SQL,
-    "ann_pq_rerank": ANN_PQ_RERANK_SQL,
     "streaming_session": SESSION_WINDOW_SQL,
     "nb_quality_score": NB_QUALITY_SQL,
     "lm_bigram_ppl": LM_BIGRAM_SQL,

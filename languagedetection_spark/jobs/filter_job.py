@@ -41,6 +41,15 @@ def build_model(spark, corpus_path: str | None):
     return FilterModel.from_corpus(rows)
 
 
+def _norm_path(path: str) -> str:
+    """Local path as Spark may qualify it: ``file:/x`` and ``/x`` match."""
+    import os
+
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+    return os.path.abspath(path)
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True)
@@ -132,13 +141,17 @@ def main(argv: list[str] | None = None) -> int:
     if args.warehouse_dir:
         # getOrCreate() silently ignores builder conf when a session
         # already exists in this process -- the bucketed table would land
-        # in the WRONG warehouse while the job output claims success
-        active = SparkSession.getActiveSession()
-        if active is not None and active.conf.get(
-                "spark.sql.warehouse.dir") != args.warehouse_dir:
-            p.error("--warehouse-dir requires a fresh process: an active "
-                    "SparkSession already pins spark.sql.warehouse.dir to "
-                    f"{active.conf.get('spark.sql.warehouse.dir')}")
+        # in the WRONG warehouse while the job output claims success.  It
+        # reuses the thread's active session, else the process default
+        # one, so check both.
+        existing = (SparkSession.getActiveSession()
+                    or SparkSession._instantiatedSession)
+        if existing is not None and existing._sc._jsc is not None:
+            pinned = existing.conf.get("spark.sql.warehouse.dir")
+            if _norm_path(pinned) != _norm_path(args.warehouse_dir):
+                p.error("--warehouse-dir requires a fresh process: an "
+                        "existing SparkSession already pins "
+                        f"spark.sql.warehouse.dir to {pinned}")
 
     # the console progress bar is a build-time setting (changing it on a
     # running session raises CANNOT_MODIFY_CONFIG)

@@ -1,19 +1,11 @@
-"""Similarity search over embedding columns (array<float>).
+"""Exact similarity operators over embedding columns (array<float>).
 
-* ``cosine_topk_df``     -- brute-force exact top-k: broadcast the query
-  side, JVM-side zip_with/aggregate dot products in double precision, one
-  window for the per-query rank.  The baseline every ANN variant is
-  verified against.
-* ``ann_bucketed_topk_df`` -- sign-LSH bucketing with axis-aligned
-  hyperplanes (bucket code = sign bits of the first H components).
-  Deterministic (no RNG), so an SQL oracle can reproduce it exactly; at
-  scale candidates shrink ~2^H-fold.  Recall < 1 by construction -- the
-  operator reports only what the bucket contains; pair it with the exact
-  baseline to measure recall.
-
-At 100 TB the broadcast side is the (small) query set and the big side
-streams map-only; bucketing turns the all-pairs product into a per-bucket
-join keyed by the code.
+* ``dedup_embedding_cosine_df`` -- near-dup pairs: sign-LSH bucket
+  candidates (bucket code = sign bits of the first H components,
+  deterministic so an SQL oracle can reproduce it), cosine verified.
+* ``quantized_kmeans_df`` -- Lloyd k-means over integer-quantized vectors,
+  seeded by a distributed strided rank.
+* ``semdedup_pairs_df`` -- cosine near-dup pairs within k-means clusters.
 """
 
 from __future__ import annotations
@@ -48,36 +40,6 @@ def _with_norm(df: DataFrame, emb_col: str) -> DataFrame:
     )
 
 
-def cosine_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-                   id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
-    """Exact top-k cosine neighbors of each query row among df rows."""
-    base = _with_norm(df, emb_col).select(
-        F.col(id_col).alias("neighbor_id"), "_emb", "_nrm"
-    )
-    q = _with_norm(queries, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_emb").alias("_qemb"),
-        F.col("_nrm").alias("_qnrm"),
-    )
-    pairs = base.join(F.broadcast(q),
-                      F.col("neighbor_id") != F.col("query_id"))
-    dot = F.aggregate(
-        F.zip_with("_emb", "_qemb", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = (dot / (F.col("_nrm") * F.col("_qnrm"))).alias("sim_raw")
-    w = W.partitionBy("query_id").orderBy(F.desc("sim_raw"),
-                                          F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim_raw", 4).alias("sim"), "rank")
-    )
-
-
 def bucket_code(emb_col: str = "embedding", n_bits: int = 8,
                 offset: int = 0):
     """Sign-LSH code: bit i = (embedding[offset + i] > 0)."""
@@ -90,126 +52,6 @@ def bucket_code(emb_col: str = "embedding", n_bits: int = 8,
     for b in bits[1:]:
         code = code + b
     return code.cast("int")
-
-
-def ann_bucketed_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-                         id_col: str = "vec_id", emb_col: str = "embedding",
-                         n_bits: int = 8, n_tables: int = 1) -> DataFrame:
-    """Top-k cosine among sign-LSH bucket candidates.
-
-    ``n_tables`` > 1 is the standard recall lever: table t hashes dims
-    [t*n_bits, (t+1)*n_bits) and candidates are the UNION over tables (a
-    near neighbor only needs to agree on ONE table's sign pattern to be
-    found).  Requires dim >= n_bits * n_tables.  Candidate pairs found by
-    several tables are deduplicated before ranking, so n_tables=1
-    reproduces the single-table results exactly."""
-    codes = F.array(*[
-        F.struct(F.lit(t).alias("t"),
-                 bucket_code(emb_col, n_bits, t * n_bits).alias("c"))
-        for t in range(n_tables)
-    ])
-    base = _with_norm(df, emb_col).select(
-        F.col(id_col).alias("neighbor_id"), "_emb", "_nrm",
-        F.explode(codes).alias("code"),
-    )
-    q = _with_norm(queries, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_emb").alias("_qemb"),
-        F.col("_nrm").alias("_qnrm"),
-        F.explode(codes).alias("code"),
-    )
-    pairs = base.join(F.broadcast(q), "code").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    if n_tables > 1:  # same pair may surface from several tables
-        pairs = pairs.dropDuplicates(["query_id", "neighbor_id"])
-    dot = F.aggregate(
-        F.zip_with("_emb", "_qemb", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = (dot / (F.col("_nrm") * F.col("_qnrm"))).alias("sim_raw")
-    w = W.partitionBy("query_id").orderBy(F.desc("sim_raw"),
-                                          F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim_raw", 4).alias("sim"), "rank")
-    )
-
-
-def ann_ivf_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-                    id_col: str = "vec_id", emb_col: str = "embedding",
-                    cell_col: str = "cell") -> DataFrame:
-    """IVF-style ANN: top-k cosine within the query's coarse cell
-    (inverted-file lists = the ``cell_col`` partitioning; search only the
-    query's own cell via a broadcast equi-join instead of all-pairs).
-
-    Recall depends entirely on the cell assignment capturing geometric
-    structure: with nearest-centroid cells on clustered data recall is
-    test-pinned ≥ 0.9 (`test_ann_ivf_recall_on_clustered_data`), while on
-    isotropic data ANY sublinear ANN's expected recall collapses to the
-    scanned fraction (~1/n_cells) — there is no structure to exploit."""
-    base = _with_norm(df, emb_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(cell_col).alias("_cell"), "_emb", "_nrm",
-    )
-    q = _with_norm(queries, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(cell_col).alias("_qcell"),
-        F.col("_emb").alias("_qemb"),
-        F.col("_nrm").alias("_qnrm"),
-    )
-    pairs = base.join(
-        F.broadcast(q),
-        (F.col("_cell") == F.col("_qcell"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    )
-    dot = F.aggregate(
-        F.zip_with("_emb", "_qemb", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    sim = (dot / (F.col("_nrm") * F.col("_qnrm"))).alias("sim_raw")
-    w = W.partitionBy("query_id").orderBy(F.desc("sim_raw"),
-                                          F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim_raw", 4).alias("sim"), "rank")
-    )
-
-
-def assign_cells_df(df: DataFrame, centroids: list[list[float]],
-                    id_col: str = "vec_id", emb_col: str = "embedding",
-                    cell_col: str = "cell") -> DataFrame:
-    """Coarse quantizer: assign each row to its max-cosine centroid
-    (numpy over Arrow batches, centroid matrix captured in the closure —
-    tiny, so closure serialization is the broadcast).  Deterministic
-    ties: lowest centroid index wins (np.argmax)."""
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(centroids, dtype=np.float64)
-        C = C / np.linalg.norm(C, axis=1, keepdims=True)
-        for pdf in batches:
-            X = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[emb_col]])
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                                1e-12)
-            cells = (Xn @ C.T).argmax(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col], cell_col: cells.astype("int32"),
-            })
-
-    out_schema = f"{id_col} long, {cell_col} int"
-    assigned = df.select(id_col, emb_col).mapInPandas(run, out_schema)
-    return df.join(assigned, id_col)
 
 
 MAX_BUCKET_FREQ_DEFAULT = 256
@@ -259,78 +101,8 @@ def dedup_embedding_cosine_df(df: DataFrame, threshold: float = 0.95,
 
 
 # ---------------------------------------------------------------------------
-# scalar-quantized ANN (SQ8): the memory-bounded scan path
+# k-means over integer-quantized vectors
 # ---------------------------------------------------------------------------
-
-SQ_LEVELS = 256
-SQ_LO = -1.0
-SQ_HI = 1.0
-
-
-def sq_encode(emb_col: str = "embedding"):
-    """1-byte-per-dim scalar quantization: code_i = clamp(floor((x_i - lo)
-    / (hi - lo) * 256), 0, 255) with a FIXED [-1, 1) range (no trained
-    codebook -> fully deterministic and engine-portable).  A 100 TB
-    float32 embedding column scans 4x smaller as codes; cosine runs
-    against the midpoint reconstruction (asymmetric distance: exact query
-    vs quantized database, the ADC idea from product quantization)."""
-    scale = SQ_LEVELS / (SQ_HI - SQ_LO)
-    return F.transform(
-        F.col(emb_col),
-        lambda x: F.least(
-            F.lit(SQ_LEVELS - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((x.cast("double") - SQ_LO) * scale).cast("int"),
-            ),
-        ),
-    )
-
-
-def sq_reconstruct(code_col):
-    """Midpoint decode: x̂_i = lo + (code_i + 0.5) * (hi - lo) / 256."""
-    step = (SQ_HI - SQ_LO) / SQ_LEVELS
-    return F.transform(code_col, lambda c: SQ_LO + (c + 0.5) * step)
-
-
-def ann_sq_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-                   id_col: str = "vec_id",
-                   emb_col: str = "embedding") -> DataFrame:
-    """Top-k cosine over the SQ8-compressed database: encode map-only
-    (stored as the compact column at scale), reconstruct per scan,
-    asymmetric cosine against the exact query, rank per query.  The plan
-    is the exact-baseline's broadcast scan shape at a quarter of the
-    bytes; recall vs the exact baseline is test-pinned."""
-    base = valid_embeddings(df, emb_col).select(
-        F.col(id_col).alias("neighbor_id"), sq_encode(emb_col).alias("_code")
-    ).select(
-        "neighbor_id", F.col("_code"), sq_reconstruct(F.col("_code")).alias("_emb")
-    ).withColumn(
-        "_nrm",
-        F.sqrt(F.aggregate("_emb", F.lit(0.0), lambda a, x: a + x * x)),
-    ).drop("_code")
-    q = _with_norm(queries, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_emb").alias("_qemb"),
-        F.col("_nrm").alias("_qnrm"),
-    )
-    pairs = base.join(F.broadcast(q),
-                      F.col("neighbor_id") != F.col("query_id"))
-    dot = F.aggregate(
-        F.zip_with("_emb", "_qemb", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = (dot / (F.col("_nrm") * F.col("_qnrm"))).alias("sim_raw")
-    w = W.partitionBy("query_id").orderBy(F.desc("sim_raw"),
-                                          F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim_raw", 4).alias("sim"), "rank")
-    )
 
 
 KMEANS_SCALE = 1000
@@ -400,10 +172,8 @@ def quantized_kmeans_df(emb: DataFrame, k: int = 8, iters: int = 2,
 
 def kmeans_train_centroids(v: DataFrame, k: int,
                            iters: int) -> list[tuple[int, list[int]]]:
-    """The Lloyd training loop of quantized_kmeans_df, factored so the
-    IVF-PQ composite can assign NEW vectors (queries) with the same
-    trained coarse centroids.  v = (vec_id, qv); same exact-integer
-    arithmetic and strided-rank seeding as the contract operator.
+    """The Lloyd training loop of quantized_kmeans_df.  v = (vec_id, qv);
+    exact-integer arithmetic and strided-rank seeding.
 
     v is persisted for the duration of training (count + seed rank +
     one assignment aggregate per round all re-traverse it) and released
@@ -537,278 +307,4 @@ def semdedup_pairs_df(emb: DataFrame, threshold: float = 0.2,
         .withColumn("sim", sim)
         .filter(F.col("sim") >= threshold)
         .select("vec_a", "vec_b", "cluster", "sim")
-    )
-
-
-# ---------------------------------------------------------------------------
-# product-quantized ANN (PQ + ADC): the trained-codebook compression path
-# ---------------------------------------------------------------------------
-
-PQ_SUB = 4      # subspaces (dim must divide evenly)
-PQ_CODES = 8    # codewords per subspace -> code = PQ_SUB small ints/vector
-
-
-def _pq_best(sub_slice, cents_m, with_cent=False):
-    """Map-only nearest-codeword pick for ONE subspace: codewords are
-    LITERAL integer arrays compiled into the plan, squared-L2 folds
-    row-locally in exact long arithmetic, argmin = array_min over
-    (dist, cluster[, cent]) structs with the smallest-cluster tie-break.
-    The optional `cent` field rides along for reconstruction and never
-    affects ordering ((dist, cluster) is already unique per struct)."""
-    structs = []
-    for j, cen in cents_m:
-        fields = [
-            F.aggregate(
-                F.zip_with(
-                    sub_slice,
-                    F.array(*[F.lit(int(c)) for c in cen]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-            F.lit(j).alias("cluster"),
-        ]
-        if with_cent:
-            fields.append(
-                F.array(*[F.lit(int(c)) for c in cen]).alias("cent"))
-        structs.append(F.struct(*fields))
-    return F.array_min(F.array(*structs))
-
-
-def pq_train_codebooks(v: DataFrame, m_sub: int, ds: int,
-                       k_codes: int, iters: int):
-    """Deterministic per-subspace Lloyd training over quantized vectors
-    (v = (vec_id, qv)): seeds are the k vectors at evenly-strided vec_id
-    ranks (each seed contributes its m-th slice as subspace m's codeword
-    j), then `iters` update rounds.  Same exact-integer arithmetic as
-    quantized_kmeans_df, so an SQL unroll reproduces every codeword.
-
-    Scale shape: assignment is map-only (literal codewords); the update
-    aggregate is bounded by m_sub*k_codes*ds groups (map-side combined);
-    per-round collects are model-sized, never corpus-proportional.
-    v is persisted across the training passes (see
-    kmeans_train_centroids) and released before returning."""
-    v = v.persist()
-    try:
-        return _pq_train_inner(v, m_sub, ds, k_codes, iters)
-    finally:
-        v.unpersist(blocking=False)
-
-
-def _pq_train_inner(v: DataFrame, m_sub: int, ds: int,
-                    k_codes: int, iters: int):
-    # seeding via the scale-safe two-pass rank (see _strided_seed_rows)
-    stride, init = _strided_seed_rows(v, k_codes)
-    cents = {
-        m: [(int(r["rn"] // stride),
-             [int(x) for x in r["qv"][m * ds:(m + 1) * ds]])
-            for r in init]
-        for m in range(m_sub)
-    }
-    for _ in range(iters):
-        codes = F.array(*[
-            _pq_best(F.slice("qv", m * ds + 1, ds), cents[m])["cluster"]
-            for m in range(m_sub)
-        ])
-        sums = (
-            v.select("qv", F.posexplode(codes).alias("sub", "cluster"))
-            .select(
-                "sub", "cluster",
-                F.posexplode(
-                    F.slice("qv", F.col("sub") * ds + 1, F.lit(ds))
-                ).alias("sdim", "qx"),
-            )
-            .groupBy("sub", "cluster", "sdim")
-            .agg(F.floor(F.sum("qx") / F.count("*") + F.lit(0.5))
-                 .cast("long").alias("cx"))
-            .collect()
-        )
-        by: dict[tuple[int, int], dict[int, int]] = {}
-        for r in sums:
-            by.setdefault((r["sub"], r["cluster"]), {})[r["sdim"]] = r["cx"]
-        cents = {m: [] for m in range(m_sub)}
-        for (m, j), dims in sorted(by.items()):
-            cents[m].append((j, [dims[i] for i in range(len(dims))]))
-    return cents
-
-
-def pq_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-               m_sub: int = PQ_SUB, k_codes: int = PQ_CODES,
-               iters: int = 1, id_col: str = "vec_id",
-               emb_col: str = "embedding") -> DataFrame:
-    """Product-quantization ANN (Jegou, Douze & Schmid 2011, TPAMI):
-    train per-subspace codebooks, encode each database vector as m_sub
-    codeword ids, scan with asymmetric squared-L2 (exact quantized query
-    vs codeword reconstruction), rank per query.  All arithmetic is
-    exact integer, so the DuckDB oracle reproduces codebooks, codes, and
-    every ADC distance bit-for-bit.
-
-    Scale shape: a 100 TB float32 embedding column stores as m_sub
-    small ints/vector (64x smaller here); encode + ADC scan are map-only
-    against broadcast-literal codebooks (the classical ADC lookup-table
-    trick is exactly this distance, factored per subspace); the only
-    shuffle is the per-query top-k rank.  Pair with IVF cells for the
-    pruned IVF-PQ composite."""
-    v = valid_embeddings(df, emb_col).select(
-        F.col(id_col).alias("vec_id"), _quantize(emb_col).alias("qv"))
-    drow = v.select(F.max(F.size("qv")).alias("d")).collect()[0]
-    if drow["d"] is None:   # no valid vectors: empty result, right schema
-        return v.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.lit(0).cast("long").alias("adc_dist"),
-            F.lit(0).cast("long").alias("rank"),
-        ).limit(0)
-    ds = int(drow["d"]) // m_sub
-    cents = pq_train_codebooks(v, m_sub, ds, k_codes, iters)
-    bests = [
-        _pq_best(F.slice("qv", m * ds + 1, ds), cents[m], with_cent=True)
-        for m in range(m_sub)
-    ]
-    recon = F.concat(*[b["cent"] for b in bests])
-    base = v.select(F.col("vec_id").alias("neighbor_id"),
-                    recon.alias("_recon"))
-    q = valid_embeddings(queries, emb_col).select(
-        F.col(id_col).alias("query_id"), _quantize(emb_col).alias("_qqv"))
-    pairs = base.join(F.broadcast(q),
-                      F.col("neighbor_id") != F.col("query_id"))
-    dist = F.aggregate(
-        F.zip_with("_recon", "_qqv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"),
-                                          F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", dist.alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
-
-
-def ivfpq_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-                  n_cells: int = 4, m_sub: int = PQ_SUB,
-                  k_codes: int = PQ_CODES, iters: int = 1,
-                  id_col: str = "vec_id",
-                  emb_col: str = "embedding") -> DataFrame:
-    """IVF-PQ composite (the production configuration of Jegou et al.
-    2011): a coarse quantizer prunes the scan to the query's cell
-    (nprobe = 1), and within the cell distances come from PQ codes via
-    asymmetric ADC.  Both stages reuse the exact-integer contract
-    kernels (kmeans_train_centroids + pq_train_codebooks), so the
-    DuckDB oracle reproduces cells, codebooks, codes, and every ADC
-    distance bit-for-bit.
-
-    Scale shape: the database stores (cell, 4 codeword ids) per vector
-    -- partition the codes table BY CELL and a query touches one
-    partition (the IVF prune is partition pruning); the scan join is a
-    cell-keyed equi-join against the broadcast query set instead of
-    pq_topk_df's broadcast-all, cutting scanned candidates ~n_cells x;
-    codebooks and coarse centroids are literal/model-sized.  Queries
-    are assigned with the SAME trained centroids, so out-of-corpus
-    query vectors route identically on any engine."""
-    v = valid_embeddings(df, emb_col).select(
-        F.col(id_col).alias("vec_id"), _quantize(emb_col).alias("qv"))
-    drow = v.select(F.max(F.size("qv")).alias("d")).collect()[0]
-    if drow["d"] is None:   # no valid vectors: empty result, right schema
-        return v.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.lit(0).cast("int").alias("cell"),
-            F.lit(0).cast("long").alias("adc_dist"),
-            F.lit(0).cast("long").alias("rank"),
-        ).limit(0)
-    ds = int(drow["d"]) // m_sub
-    cell_cents = kmeans_train_centroids(v, n_cells, iters)
-    pq_cents = pq_train_codebooks(v, m_sub, ds, k_codes, iters)
-    bests = [
-        _pq_best(F.slice("qv", m * ds + 1, ds), pq_cents[m], with_cent=True)
-        for m in range(m_sub)
-    ]
-    recon = F.concat(*[b["cent"] for b in bests])
-    base = _kmeans_assign(v, cell_cents).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cluster").alias("cell"),
-        recon.alias("_recon"),
-    )
-    vq = valid_embeddings(queries, emb_col).select(
-        F.col(id_col).alias("vec_id"), _quantize(emb_col).alias("qv"))
-    q = _kmeans_assign(vq, cell_cents).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cluster").alias("_qcell"),
-        F.col("qv").alias("_qqv"),
-    )
-    pairs = base.join(
-        F.broadcast(q),
-        (F.col("cell") == F.col("_qcell"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    )
-    dist = F.aggregate(
-        F.zip_with("_recon", "_qqv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"),
-                                          F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", "cell",
-                     dist.alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cell", "adc_dist", "rank")
-    )
-
-
-def pq_rerank_topk_df(df: DataFrame, queries: DataFrame, k: int = 3,
-                      shortlist: int = 10, id_col: str = "vec_id",
-                      emb_col: str = "embedding") -> DataFrame:
-    """PQ shortlist + exact-cosine re-rank — the 'refine' stage that makes
-    lossy PQ production-usable (Jegou et al. 2011, §V.D): the ADC scan
-    proposes `shortlist` candidates per query from the compressed codes,
-    then ONLY those candidates fetch their full vectors for an exact
-    cosine re-rank of the top k.
-
-    Scale shape: the full-precision vectors are touched for
-    |queries| x shortlist rows instead of the whole corpus — the scan
-    side stays 64x-compressed PQ codes; the candidate fetch is a
-    broadcast equi-join of the (tiny) shortlist against the embedding
-    table, and the re-rank window is shortlist-sized per query."""
-    short = pq_topk_df(df, queries, k=shortlist,
-                       id_col=id_col, emb_col=emb_col)
-    ve = valid_embeddings(df, emb_col).select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(emb_col, lambda x: x.cast("double")).alias("emb"),
-    )
-    nrm = F.sqrt(F.aggregate("emb", F.lit(0.0), lambda a, x: a + x * x))
-    ve = ve.withColumn("nrm", nrm)
-    qe = valid_embeddings(queries, emb_col).select(
-        F.col(id_col).alias("query_id"),
-        F.transform(emb_col, lambda x: x.cast("double")).alias("qemb"),
-    ).withColumn(
-        "qnrm",
-        F.sqrt(F.aggregate("qemb", F.lit(0.0), lambda a, x: a + x * x)),
-    )
-    nb = ve.select(F.col("vec_id").alias("neighbor_id"), "emb", "nrm")
-    joined = (
-        nb.join(F.broadcast(short.select("query_id", "neighbor_id")),
-                "neighbor_id")
-        .join(F.broadcast(qe), "query_id")
-    )
-    dot = F.aggregate(
-        F.zip_with("emb", "qemb", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim_raw"),
-                                          F.asc("neighbor_id"))
-    return (
-        joined.select(
-            "query_id", "neighbor_id",
-            (dot / (F.col("nrm") * F.col("qnrm"))).alias("sim_raw"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.round("sim_raw", 4).alias("sim"), "rank")
     )

@@ -82,7 +82,7 @@ def test_fixture_text_domain_precondition():
 # found (and fixed) by this sweep in round 2
 EDGE_SAFE_QUERIES = (
     "lang_resolution",
-    "langid_fasttext", "multimodal_decode", "multimodal_frames",
+    "langid_fasttext",
     "tokenize_explode", "tokenize_per_char", "vocab_build",
     "classify_relational", "classify_vectorized", "accuracy_metrics",
     "confusion_matrix", "pipeline_scrub", "doc_fingerprint",
@@ -162,12 +162,9 @@ def test_oracle_edge_documents(name, spark, edge_docs_dir):
 
 
 EDGE_EMBEDDING_QUERIES = (
-    "embedding_topk", "ann_bucketed_topk", "ann_multitable_topk",
-    "ann_ivf_topk", "ann_sq_topk", "ann_pq_topk", "ann_ivfpq_topk",
-    "ann_pq_rerank",
-    "dedup_embedding_cosine",
+    "embedding_topk", "dedup_embedding_cosine",
     "label_centroids", "embedding_kmeans", "semdedup_pairs",
-    "ann_hard_negatives", "label_knn_agreement",
+    "label_knn_agreement",
 )
 
 

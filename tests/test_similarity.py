@@ -1,6 +1,4 @@
-"""ANN quality tests: the IVF operator must achieve high recall when the
-cell assignment captures real geometric structure, and the isotropic-data
-recall floor (scanned fraction) is documented behavior, not a bug.
+"""Quality tests for the exact embedding operators on planted structure.
 
 The driver's embeddings fixture is isotropic noise (measured: same-label and
 cross-label mean cosine both ~0.000, true-NN shares label at chance), so the
@@ -30,126 +28,6 @@ def clustered_df(spark):
     rows = [(i, [float(v) for v in X[i]]) for i in range(len(X))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     return df, C, X
-
-
-def test_assign_cells_recovers_planted_clusters(clustered_df):
-    from languagedetection_spark.operators.similarity import assign_cells_df
-
-    df, C, X = clustered_df
-    assigned = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells_df(df, [list(c) for c in C]).collect()
-    }
-    # noise = 0.15 around unit-norm centroids -> assignment is clean
-    true_cells = np.repeat(np.arange(10), 30)
-    agree = sum(assigned[i] == true_cells[i] for i in range(len(X)))
-    assert agree / len(X) >= 0.99
-
-
-def test_ann_ivf_recall_on_clustered_data(clustered_df):
-    """Nearest-centroid cells + per-cell search -> recall >= 0.9 of the
-    exact top-3, at ~1/10th the pairwise work."""
-    from languagedetection_spark.operators.similarity import (
-        ann_ivf_topk_df, assign_cells_df, cosine_topk_df,
-    )
-
-    df, C, X = clustered_df
-    celled = assign_cells_df(df, [list(c) for c in C]).cache()
-    queries = celled.filter("vec_id % 15 = 0")
-
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in cosine_topk_df(df, queries.select("vec_id", "embedding"),
-                                     k=3).collect()}
-    approx = {(r["query_id"], r["neighbor_id"])
-              for r in ann_ivf_topk_df(celled, queries, k=3).collect()}
-    celled.unpersist()
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.9, f"recall {recall:.3f}"
-
-
-def test_sign_lsh_multi_table_recall(clustered_df):
-    """Multi-table sign-LSH is the recall lever: 4 tables over disjoint
-    dim ranges recover most of the exact top-3 on clustered data, and
-    strictly dominate the single-table recall."""
-    from languagedetection_spark.operators.similarity import (
-        ann_bucketed_topk_df, cosine_topk_df,
-    )
-
-    df, C, X = clustered_df
-    queries = df.filter("vec_id % 15 = 0")
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in cosine_topk_df(df, queries, k=3).collect()}
-
-    def recall(n_bits, n_tables):
-        got = {(r["query_id"], r["neighbor_id"])
-               for r in ann_bucketed_topk_df(
-                   df, queries, k=3, n_bits=n_bits,
-                   n_tables=n_tables).collect()}
-        return len(got & exact) / len(exact)
-
-    single = recall(8, 1)          # measured ~0.13 on this data
-    multi = recall(4, 8)           # coarser buckets x more tables
-    assert multi > single
-    assert multi >= 0.9, f"(4,8) recall {multi:.3f} (8,1 was {single:.3f})"
-
-
-def test_ann_isotropic_recall_floor(spark):
-    """On isotropic data the IVF recall ~= scanned fraction (1/n_cells):
-    the documented floor for ANY sublinear ANN without structure."""
-    from languagedetection_spark.operators.similarity import (
-        ann_ivf_topk_df, cosine_topk_df,
-    )
-
-    rng = np.random.default_rng(11)
-    X = rng.normal(size=(300, 32))
-    rows = [(i, [float(v) for v in X[i]], int(i % 10))
-            for i in range(len(X))]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, cell int"
-    ).cache()
-    queries = df.filter("vec_id < 20")
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in cosine_topk_df(df, queries.select("vec_id", "embedding"),
-                                     k=3).collect()}
-    approx = {(r["query_id"], r["neighbor_id"])
-              for r in ann_ivf_topk_df(df, queries, k=3).collect()}
-    df.unpersist()
-    recall = len(exact & approx) / len(exact)
-    assert recall < 0.4  # ~0.1 expected; far from clustered-data quality
-
-
-def test_sq_recall_near_exact(spark):
-    """8-bit scalar quantization barely perturbs cosine ranking: top-3 SQ
-    neighbors must recover >= 0.9 of the exact top-3 on the fixture."""
-    from languagedetection_spark.operators.similarity import (
-        ann_sq_topk_df, cosine_topk_df,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.filter("vec_id < 30")
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_df(e, q, k=3).collect()
-    }
-    sq = {
-        (r["query_id"], r["neighbor_id"])
-        for r in ann_sq_topk_df(e, q, k=3).collect()
-    }
-    recall = len(exact & sq) / len(exact)
-    assert recall >= 0.9, f"SQ recall {recall:.3f}"
-
-
-def test_sq_codes_in_range(spark):
-    from pyspark.sql import functions as F
-
-    from languagedetection_spark.operators.similarity import sq_encode
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    stats = e.select(sq_encode().alias("code")).select(
-        F.min(F.array_min("code")).alias("lo"),
-        F.max(F.array_max("code")).alias("hi"),
-    ).collect()[0]
-    assert 0 <= stats["lo"] and stats["hi"] <= 255
 
 
 def test_embedding_bucket_guard_bounds_identical_crowds(spark):
@@ -226,111 +104,3 @@ def test_semdedup_finds_planted_near_dups(spark):
              for r in semdedup_pairs_df(df, threshold=0.9, k=4).collect()}
     assert (0, 1) in pairs and pairs[(0, 1)] >= 0.99
     assert all(p == (0, 1) for p in pairs)
-
-
-def test_pq_neighbors_respect_planted_clusters(clustered_df):
-    """Product quantization (4 subspaces x 8 codewords, one training
-    round) compresses each vector to 4 small ints, yet on planted
-    clusters the ADC top-1 neighbor must still come from the query's own
-    cluster almost always -- the compression preserves the coarse
-    geometry that matters at 100 TB (64x smaller scans)."""
-    from languagedetection_spark.operators.similarity import pq_topk_df
-
-    df, C, X = clustered_df
-    queries = df.filter("vec_id < 40")
-    top1 = {
-        r["query_id"]: r["neighbor_id"]
-        for r in pq_topk_df(df, queries, k=1).collect()
-    }
-    true_cells = np.repeat(np.arange(10), 30)
-    agree = sum(true_cells[q] == true_cells[n] for q, n in top1.items())
-    assert agree / len(top1) >= 0.9, f"cluster agreement {agree}/{len(top1)}"
-
-
-def test_pq_shortlist_recall_vs_exact(clustered_df):
-    """PQ in its production role: a SHORTLIST generator ahead of exact
-    rerank (Jegou et al. 2011 use it exactly this way).  With 4x8
-    codewords every member of a 30-point cluster gets a near-identical
-    code, so fine within-cluster order is gone by design -- but the
-    exact cosine top-1 must survive into a 10%-of-corpus ADC shortlist
-    nearly always (measured 0.975; exact-top-3-at-k=3 is ~0.15, the
-    documented cost of 64x compression, not a bug)."""
-    from languagedetection_spark.operators.similarity import (
-        cosine_topk_df, pq_topk_df,
-    )
-
-    df, C, X = clustered_df
-    queries = df.filter("vec_id < 40")
-    exact1 = {
-        r["query_id"]: r["neighbor_id"]
-        for r in cosine_topk_df(
-            df, queries.select("vec_id", "embedding"), k=1).collect()
-    }
-    short: dict[int, set] = {}
-    for r in pq_topk_df(df, queries, k=30).collect():
-        short.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hit = sum(exact1[q] in short.get(q, set()) for q in exact1)
-    assert hit / len(exact1) >= 0.9, f"shortlist recall {hit}/{len(exact1)}"
-
-
-def test_ivfpq_prunes_to_cell_and_respects_clusters(clustered_df):
-    """The IVF-PQ composite must (a) only pair a query with SAME-CELL
-    neighbors -- the prune is the whole point -- and (b) keep the top-1
-    neighbor inside the query's planted cluster, like plain PQ."""
-    from languagedetection_spark.operators.similarity import (
-        ivfpq_topk_df, kmeans_train_centroids, _kmeans_assign, _quantize,
-        valid_embeddings,
-    )
-    from pyspark.sql import functions as F
-
-    df, C, X = clustered_df
-    queries = df.filter("vec_id < 40")
-    out = ivfpq_topk_df(df, queries, k=3).collect()
-    v = valid_embeddings(df, "embedding").select(
-        "vec_id", _quantize("embedding").alias("qv"))
-    cents = kmeans_train_centroids(v, 4, 1)
-    cell = {r["vec_id"]: r["cluster"]
-            for r in _kmeans_assign(v, cents).collect()}
-    assert out, "no pairs"
-    for r in out:
-        assert cell[r["query_id"]] == cell[r["neighbor_id"]] == r["cell"]
-    true_cells = np.repeat(np.arange(10), 30)
-    top1 = {r["query_id"]: r["neighbor_id"] for r in out if r["rank"] == 1}
-    agree = sum(true_cells[q] == true_cells[n] for q, n in top1.items())
-    assert agree / len(top1) >= 0.9, f"cluster agreement {agree}/{len(top1)}"
-
-
-def test_pq_rerank_recovers_recall(spark):
-    """The refine stage's defining property: exact-cosine re-rank of the
-    ADC shortlist beats raw PQ top-k by an order of magnitude on the
-    isotropic (hard) fixture, and a bigger shortlist never hurts.
-    Measured on sf0.001 (deterministic): raw PQ exact-top-3 agreement
-    0.017, re-rank@10 0.117, re-rank@60 0.433."""
-    from languagedetection_spark.entry_queries import (
-        ann_pq_topk, embedding_topk,
-    )
-    from languagedetection_spark.operators.similarity import (
-        pq_rerank_topk_df,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    exact: dict[int, set] = {}
-    for r in embedding_topk(spark, sf).collect():
-        exact.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    total = sum(len(s) for s in exact.values())
-
-    def recall(df):
-        got: dict[int, set] = {}
-        for r in df.collect():
-            got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return sum(len(got.get(q, set()) & s)
-                   for q, s in exact.items()) / total
-
-    raw = recall(ann_pq_topk(spark, sf))
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
-    q = e.filter("vec_id < 20")
-    r10 = recall(pq_rerank_topk_df(e, q, k=3, shortlist=10))
-    r60 = recall(pq_rerank_topk_df(e, q, k=3, shortlist=60))
-    assert r10 >= 3 * raw, (raw, r10)
-    assert r60 >= r10, (r10, r60)
-    assert r60 >= 0.35, r60

@@ -1,5 +1,5 @@
 """Tests for sources (regex-CSV scan, checkpoint/resume), streaming, and
-multimodal plumbing."""
+the filter job."""
 
 import os
 
@@ -322,43 +322,6 @@ def test_streaming_pipeline_matches_batch(spark, fixture_dir, oracle_model,
     assert got == batch
 
 
-def test_multimodal_real_wav_decode(spark):
-    """fake=False audio: WAV payloads decode for REAL via the stdlib wave
-    module -- 16-bin amplitude histogram, distributed through the same
-    mapInPandas plumbing."""
-    import io
-    import math
-    import struct
-    import wave
-
-    from languagedetection_spark.multimodal.binary_ops import (
-        N_FEATURES, decode_media_df,
-    )
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        # deterministic 440 Hz-ish sine at half amplitude
-        frames = b"".join(
-            struct.pack("<h", int(16383 * math.sin(2 * math.pi * 440 * i / 8000)))
-            for i in range(800)
-        )
-        w.writeframes(frames)
-    media = spark.createDataFrame(
-        [(0, "audio", bytearray(buf.getvalue()), {})],
-        "doc_id long, modality string, payload binary, "
-        "meta map<string,string>",
-    )
-    row = decode_media_df(media, fake=False).collect()[0]
-    assert len(row["features"]) == N_FEATURES
-    assert abs(sum(row["features"]) - 1.0) < 1e-9
-    # half-amplitude sine: all mass in bins 0..8, none above
-    assert sum(row["features"][:9]) > 0.999
-    assert row["n_bytes"] == len(buf.getvalue())
-
-
 def test_streaming_parquet_sink_exactly_once(spark, oracle_model,
                                              stream_dir, tmp_path):
     """run_to_parquet (availableNow + checkpoint): output equals the batch
@@ -505,77 +468,6 @@ def test_tws_fold_logic_equals_apply_variant():
     assert vocab["hh"] == 0.0
 
 
-# ---------------------------------------------------------------------------
-# multimodal
-# ---------------------------------------------------------------------------
-
-def test_multimodal_decode_fake(spark):
-    from languagedetection_spark.multimodal.binary_ops import (
-        N_FEATURES, decode_media_df, frame_sample_df, synthesize_media,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    media = synthesize_media(spark, docs)
-    assert media.schema.simpleString() == (
-        "struct<doc_id:bigint,modality:string,payload:binary,"
-        "meta:map<string,string>>"
-    )
-    feats = decode_media_df(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == docs.count()
-    for r in rows[:10]:
-        assert len(r["features"]) == N_FEATURES
-        assert abs(sum(r["features"]) - 1.0) < 1e-9
-        assert r["n_bytes"] > 0
-    # deterministic across partitionings
-    again = sorted(
-        (r["doc_id"], tuple(r["features"]))
-        for r in decode_media_df(media.repartition(7), fake=True).collect()
-    )
-    assert again == sorted((r["doc_id"], tuple(r["features"])) for r in rows)
-    # frame sampling shape
-    frames = frame_sample_df(media, every_n_bytes=64, fake=True)
-    f = frames.filter("doc_id = 0").collect()
-    assert [r["frame_idx"] for r in f] == list(range(len(f)))
-
-
-def test_multimodal_real_decode_optional_pil(spark):
-    """fake=False resolves codecs at runtime: image decodes for real when
-    Pillow is installed (cluster path), raises with setup guidance when it
-    is not (this container); audio/video raise pending torchaudio/ffmpeg
-    either way."""
-    from languagedetection_spark.multimodal.binary_ops import (
-        N_FEATURES, _pil_or_none, decode_media_df, synthesize_media,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # doc_id % 3: 0 -> image, 1 -> audio
-    image_media = synthesize_media(spark, docs.filter("doc_id = 0"))
-    audio_media = synthesize_media(spark, docs.filter("doc_id = 1"))
-
-    with pytest.raises(Exception, match="torchaudio|ffmpeg"):
-        decode_media_df(audio_media, fake=False).collect()
-
-    if _pil_or_none() is None:
-        with pytest.raises(Exception, match="Pillow|pillow"):
-            decode_media_df(image_media, fake=False).collect()
-    else:  # real cluster path: decode an actual PNG end to end
-        import io
-
-        Image = _pil_or_none()
-        buf = io.BytesIO()
-        Image.new("L", (32, 32), color=128).save(buf, format="PNG")
-        media = spark.createDataFrame(
-            [(0, "image", bytearray(buf.getvalue()), {})],
-            "doc_id long, modality string, payload binary, "
-            "meta map<string,string>",
-        )
-        row = decode_media_df(media, fake=False).collect()[0]
-        assert len(row["features"]) == N_FEATURES
-        assert abs(sum(row["features"]) - 1.0) < 1e-9
-        assert row["features"][8] == 1.0  # 128 >> 4 == bin 8
-
-
 def test_filter_job_rejects_nested_conv_report(tmp_path):
     """ADVICE r2: a --conv-report target nested under --output would be
     re-ingested as input on a rerun (the streaming branch reads the sink
@@ -592,90 +484,6 @@ def test_filter_job_rejects_nested_conv_report(tmp_path):
                   "--checkpoint", str(tmp_path / "ckpt"),
                   "--conv-report", out + "/conv_report"] + extra)
         assert exc.value.code == 2
-
-
-def _mini_avi(frame_payloads):
-    """Synthesize a minimal valid RIFF-AVI: hdrl(avih) + movi + idx1."""
-    import struct
-
-    def chunk(ckid, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        return ckid + struct.pack("<I", len(body)) + body + pad
-
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        33333, 0, 0, 0,                  # usec/frame, rate, pad, flags
-        len(frame_payloads), 0, 1, 0,    # total frames, initial, streams, buf
-        320, 240, 0, 0, 0, 0,            # width, height, reserved
-    )
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
-    movi_body = b"movi"
-    idx = b""
-    offsets = []
-    for p in frame_payloads:
-        offsets.append(len(movi_body))  # offset from the movi fourcc
-        movi_body += chunk(b"00dc", p)
-    movi = chunk(b"LIST", movi_body)
-    import struct as _s
-    for off, p in zip(offsets, frame_payloads):
-        idx += b"00dc" + _s.pack("<III", 0x10, off, len(p))
-    riff_body = b"AVI " + hdrl + movi + chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-def test_avi_container_probe_real_path():
-    """VERDICT r2 ask #7: a REAL video-container branch.  The stdlib RIFF
-    probe must return the avih header fields and the absolute payload
-    offset of every indexed frame -- verified byte-for-byte against a
-    synthesized AVI."""
-    from languagedetection_spark.multimodal.binary_ops import (
-        probe_avi_container,
-    )
-
-    frames = [b"frame-zero!", b"frame-one", b"f2"]
-    avi = _mini_avi(frames)
-    info = probe_avi_container(avi)
-    assert (info["total_frames"], info["n_streams"]) == (3, 1)
-    assert (info["width"], info["height"]) == (320, 240)
-    assert info["usec_per_frame"] == 33333
-    assert len(info["frames"]) == 3
-    for off, payload in zip(info["frames"], frames):
-        assert avi[off:off + len(payload)] == payload
-
-
-def test_avi_probe_absent_paths():
-    """Non-AVI containers and index-less AVIs raise with ffmpeg guidance."""
-    import pytest
-
-    from languagedetection_spark.multimodal.binary_ops import (
-        probe_avi_container,
-    )
-
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        probe_avi_container(b"\x00\x00\x00\x20ftypmp42 not riff")
-    import struct
-    bare = b"AVI "  # RIFF-AVI with no movi/idx1
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        probe_avi_container(b"RIFF" + struct.pack("<I", len(bare)) + bare)
-
-
-def test_frame_sample_real_avi_distributed(spark):
-    """frame_sample_df(fake=False) demuxes AVI payloads distributed: one
-    row per indexed frame with the true absolute offset."""
-    from languagedetection_spark.multimodal.binary_ops import (
-        frame_sample_df, probe_avi_container,
-    )
-
-    frames = [b"alpha", b"bravo-longer", b"c"]
-    avi = _mini_avi(frames)
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(avi), {})],
-        "doc_id long, modality string, payload binary, meta map<string,string>",
-    )
-    out = frame_sample_df(media, fake=False).collect()
-    assert [(r["frame_idx"], r["offset"]) for r in out] == [
-        (i, off) for i, off in enumerate(probe_avi_container(avi)["frames"])
-    ]
 
 
 def test_filter_job_dedup_exact_stage(spark, tmp_path):
@@ -780,6 +588,50 @@ def test_filter_job_dedup_exact_stage(spark, tmp_path):
         f"SELECT count(*) FROM '{tmp_path}/wh/kept_compacted/*.parquet'"
     ).fetchone()[0]
     assert n_all == n_run1 > 0  # same input + model => same NON-EMPTY kept set
+
+
+def test_filter_job_warehouse_guard(spark, monkeypatch, tmp_path):
+    """An existing session pins spark.sql.warehouse.dir.  The same path in
+    its ``file:``-qualified form is accepted; a different path is refused
+    before any Spark work, also when the session is only the process
+    default and not this thread's active one."""
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from languagedetection_spark.jobs.filter_job import main
+    from languagedetection_spark.plans import session as session_mod
+
+    class _PastGuard(Exception):
+        pass
+
+    def _no_session(**_kw):
+        raise _PastGuard
+
+    monkeypatch.setattr(session_mod, "get_spark", _no_session)
+    pinned = spark.conf.get("spark.sql.warehouse.dir")
+    plain = pinned[len("file:"):] if pinned.startswith("file:") else pinned
+    args = ["--input", str(tmp_path / "in.parquet"),
+            "--output", str(tmp_path / "out"),
+            "--checkpoint", str(tmp_path / "ckpt"),
+            "--bucketed-table", "kept", "--warehouse-dir"]
+    for same in (plain, "file:" + plain, plain + "/"):
+        with pytest.raises(_PastGuard):
+            main(args + [same])
+
+    other = str(tmp_path / "other_wh")
+    with pytest.raises(SystemExit) as exc:
+        main(args + [other])
+    assert exc.value.code == 2
+    jcls = SparkSession._get_j_spark_session_class(spark._jvm)
+    jcls.clearActiveSession()
+    try:
+        assert SparkSession.getActiveSession() is None
+        with pytest.raises(SystemExit) as exc:
+            main(args + [other])
+        assert exc.value.code == 2
+    finally:
+        jcls.setActiveSession(spark._jsparkSession)
+    assert not os.path.exists(other)
 
 
 def test_filter_job_rejects_dedup_with_streaming(tmp_path):

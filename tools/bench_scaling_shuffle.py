@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -113,7 +114,8 @@ def main() -> None:
                        f"local{n * 4}_sec": best[n * 4],
                        "efficiency": round(eff, 3),
                        "pair_efficiencies": pair_effs,
-                       "best_pair_efficiency": max(pair_effs)}
+                       "best_pair_efficiency": max(pair_effs),
+                       "median_pair_efficiency": statistics.median(pair_effs)}
     print(json.dumps(result))
 
 
