@@ -103,8 +103,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted entries are non-SQL-
-    expressible ops checked rows-only by the driver)."""
+    """DuckDB-equivalent SQL per query; every queries() entry has one."""
     from languagedetection_spark.entry_queries import (
         ORACLE_SQL,
         _axiom_dist_goldens_sql,

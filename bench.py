@@ -24,7 +24,6 @@ BENCH_QUERIES = [
     "revenue_by_nation",
     "order_argmax_per_customer",
     "supplier_running_total",
-    "events_sessionize",
     "classify_relational",
     "classify_vectorized",
     "pipeline_keep",
@@ -40,7 +39,6 @@ BENCH_QUERIES = [
     "inverted_index",
     "normalize_text",
     "collocations_lift",
-    "session_window_events",
     "substring_dup_pairs",
     "word_freq_spectrum",
     "label_centroids",
@@ -70,8 +68,6 @@ BENCH_QUERIES = [
     "ppl_buckets",
     "dedup_cluster_stats",
     "token_budget_select",
-    "user_retention_cohorts",
-    "funnel_conversion",
     "vocab_drift_psi",
     "ngram_coverage_curve",
     "dedup_edit_distance",

@@ -281,120 +281,6 @@ FROM agg
 """
 
 
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization: lag + gap>30min flag + running sum (stateful analog)."""
-    e = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    lag_ts = F.lag("ts").over(w)
-    new_sess = F.when(
-        lag_ts.isNull()
-        | (F.unix_timestamp("ts") - F.unix_timestamp(lag_ts) > 1800),
-        1,
-    ).otherwise(0)
-    wsum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    sess = (
-        e.withColumn("sess_id", F.sum(new_sess).over(wsum))
-    )
-    return sess.groupBy("user_id").agg(
-        F.max("sess_id").cast("long").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-    )
-
-
-EVENTS_SESSIONIZE_SQL = """
-WITH flagged AS (
-    SELECT user_id, ts, event_id,
-           CASE WHEN lag(ts) OVER w IS NULL
-                  OR epoch(ts - lag(ts) OVER w) > 1800
-                THEN 1 ELSE 0 END AS new_sess
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-    SELECT user_id,
-           sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS sess_id
-    FROM flagged
-)
-SELECT user_id, CAST(max(sess_id) AS BIGINT) AS n_sessions,
-       count(*) AS n_events
-FROM sess GROUP BY user_id
-"""
-
-
-def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE session_window operator (the built-in twin of the
-    manual lag/gaps-and-islands `events_sessionize`), pinned against an
-    independent gaps-and-islands SQL derivation.  Semantics detail the
-    oracle encodes (verified empirically on an exact-boundary fixture,
-    test_session_window_exact_gap_boundary): an event arriving EXACTLY
-    `gap` after the previous one is MERGED into the session -- Spark's
-    window end `last_ts + gap` is inclusive for the merge test -- so the
-    oracle's new-session flag is strictly `> 1800`."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-SESSION_WINDOW_SQL = """
-WITH flagged AS (
-    SELECT user_id, ts, event_id, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                  OR epoch(ts - lag(ts) OVER w) > 1800
-                THEN 1 ELSE 0 END AS new_sess
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-    SELECT user_id, ts, value,
-           sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS sess_id
-    FROM flagged
-)
-SELECT user_id,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       count(*) AS n_events,
-       round(sum(value), 4) AS total_value
-FROM sess GROUP BY user_id, sess_id
-"""
-
-
-def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window agg (the batch analog of the streaming pipeline)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hr"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-    )
-
-
-EVENTS_HOURLY_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr,
-       event_type, count(*) AS n, round(sum(value), 4) AS total_value
-FROM events GROUP BY 1, 2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Reference-operator parity on `documents`
 # ---------------------------------------------------------------------------
@@ -1706,7 +1592,7 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# Relational breadth: semi/anti joins, set ops, rollup, pivot, JSON, as-of
+# Relational breadth: semi/anti joins, set ops, rollup
 # ---------------------------------------------------------------------------
 
 
@@ -1781,84 +1667,6 @@ SELECT coalesce(l_returnflag, '<all>') AS returnflag,
        count(*) AS n
 FROM lineitem
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-def pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot event counts per user across event types."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "signup", "error"])
-        .count()
-        .na.fill(0)
-        .select(
-            "user_id",
-            F.col("click").alias("n_click"), F.col("view").alias("n_view"),
-            F.col("purchase").alias("n_purchase"),
-            F.col("signup").alias("n_signup"), F.col("error").alias("n_error"),
-        )
-    )
-
-
-PIVOT_SQL = """
-SELECT user_id,
-       CAST(coalesce(sum(CASE WHEN event_type = 'click' THEN 1 END), 0) AS BIGINT)    AS n_click,
-       CAST(coalesce(sum(CASE WHEN event_type = 'view' THEN 1 END), 0) AS BIGINT)     AS n_view,
-       CAST(coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 END), 0) AS BIGINT) AS n_purchase,
-       CAST(coalesce(sum(CASE WHEN event_type = 'signup' THEN 1 END), 0) AS BIGINT)   AS n_signup,
-       CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN 1 END), 0) AS BIGINT)    AS n_error
-FROM events GROUP BY user_id
-"""
-
-
-def json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON scalar extraction from the events.props column."""
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
-    ).filter("k IS NOT NULL")
-
-
-JSON_EVENTS_SQL = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL
-"""
-
-
-def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (no native Spark operator): for every non-purchase event,
-    the user's most recent purchase at or before it.  Spark side:
-    cogrouped applyInPandas + pd.merge_asof; oracle: DuckDB's native
-    ASOF LEFT JOIN -- two independent engines, one semantics."""
-    from .operators.asof import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    left = e.filter("event_type <> 'purchase'").select(
-        "user_id", "event_id", "ts"
-    )
-    # unique right side per (user, ts): keep the max event_id
-    right = (
-        e.filter("event_type = 'purchase'")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("purchase_id"))
-    )
-    out = asof_join(left, right, key="user_id", ts="ts",
-                    right_cols={"purchase_id": "last_purchase_id"})
-    return out.select("event_id", "last_purchase_id")
-
-
-ASOF_SQL = """
-WITH p AS (
-    SELECT user_id, ts, max(event_id) AS purchase_id
-    FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-),
-l AS (
-    SELECT user_id, event_id, ts FROM events WHERE event_type <> 'purchase'
-)
-SELECT l.event_id, p.purchase_id AS last_purchase_id
-FROM l ASOF LEFT JOIN p ON l.user_id = p.user_id AND l.ts >= p.ts
 """
 
 
@@ -3883,217 +3691,6 @@ def _src_cache_key(sf_dir: str, table: str) -> str:
     return _hl.md5(sig.encode()).hexdigest()[:12]
 
 
-def streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming in the contract: tumbling 1-hour window counts
-    over the events table driven through a real streaming query
-    (memory sink, complete mode, processAllAvailable) -- the result must
-    equal the batch GROUP BY, which is the oracle."""
-    import os
-    import tempfile
-
-    e = _t(spark, sf_dir, "events")
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"ld_stream_events_{_src_cache_key(sf_dir, 'events')}",
-    )
-    # _SUCCESS sentinel, not bare exists(): a crashed prior run leaves a
-    # partial dir that would otherwise be reused forever (ADVICE r3)
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        e.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    agg = (
-        stream.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        ).agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hr"),
-            "event_type", "n",
-        )
-    )
-    name = f"stream_hourly_{_src_cache_key(sf_dir, 'events')}"
-    q = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-STREAMING_HOURLY_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr,
-       event_type, count(*) AS n
-FROM events GROUP BY 1, 2
-"""
-
-
-def streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark + APPEND-mode late-data semantics, driven through a real
-    two-micro-batch streaming query and pinned against a relational
-    derivation of Spark's own rules.
-
-    THREE mtime-ordered micro-batches: the newest 26 hours first (advances
-    the watermark to max(ts) - 1 hour), a middle 26-50h-old slice second,
-    and everything older last.  Spark >= 3.4 (SPARK-40925) filters late
-    records with the PREVIOUS batch's watermark while evicting/emitting
-    with the CURRENT one -- so a two-batch design drops nothing (verified:
-    numRowsDroppedByWatermark stayed 0 and the 'late' rows were emitted);
-    only by batch 3 has the late-filter watermark caught up, and every
-    oldest-slice row is then dropped.  Emitted output = windows over the
-    two newer slices with window end <= max(ts) - 1 hour (windows above
-    the watermark when the query drains are never emitted -- the old
-    batches cannot advance it).  The oracle states exactly that rule."""
-    import datetime
-    import os
-    import tempfile
-
-    e = _t(spark, sf_dir, "events")
-    mx = e.agg(F.max("ts")).collect()[0][0]
-    cut1 = mx - datetime.timedelta(hours=26)
-    cut2 = mx - datetime.timedelta(hours=50)
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"ld_stream_late3_{_src_cache_key(sf_dir, 'events')}",
-    )
-    files = [
-        (os.path.join(src, "00_new.parquet"), F.col("ts") >= F.lit(cut1)),
-        (os.path.join(src, "01_mid.parquet"),
-         (F.col("ts") >= F.lit(cut2)) & (F.col("ts") < F.lit(cut1))),
-        (os.path.join(src, "02_old.parquet"), F.col("ts") < F.lit(cut2)),
-    ]
-    if not all(os.path.exists(t) for t, _ in files):
-        import glob as _glob
-        import shutil
-
-        os.makedirs(src, exist_ok=True)
-        for target, pred in files:
-            tmp = target + ".dir"
-            e.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, target)
-            shutil.rmtree(tmp)
-    # FileStreamSource processes oldest-mtime first: pin the batch order
-    now = 1_700_000_000
-    for i, (target, _pred) in enumerate(files):
-        os.utime(target, (now + 100 * i, now + 100 * i))
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = (
-        # the parquet schema round-trips ts as TIMESTAMP_NTZ; watermarks
-        # require TIMESTAMP_LTZ (session tz is pinned UTC, so the values
-        # are unchanged)
-        stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hr"),
-            "event_type", "n",
-        )
-    )
-    name = f"stream_late_{_src_cache_key(sf_dir, 'events')}"
-    q = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-def streaming_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM interval join (the remaining stateful-streaming
-    operator class): click events joined to the same user's purchases
-    within the following hour -- the classic attribution join -- driven
-    as two real file streams with per-side watermarks and a time-range
-    condition (Spark requires both for state cleanup in stream-stream
-    joins).  Both sides arrive in ONE micro-batch each, so the starting
-    watermark (epoch) admits every row and the emitted inner-join matches
-    equal the batch interval join exactly -- which is the oracle."""
-    import os
-    import tempfile
-
-    e = _t(spark, sf_dir, "events")
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"ld_stream_join_{_src_cache_key(sf_dir, 'events')}",
-    )
-    # _SUCCESS sentinel, not bare exists(): a crashed prior run leaves a
-    # partial dir that would otherwise be reused forever (ADVICE r3)
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        e.repartition(2).write.mode("overwrite").parquet(src)
-
-    def side(event_type: str, prefix: str):
-        s = (
-            spark.readStream.schema(e.schema).parquet(src)
-            .filter(F.col("event_type") == event_type)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 hour")
-        )
-        return s.select(
-            F.col("event_id").alias(f"{prefix}_id"),
-            F.col("user_id").alias(f"{prefix}_user"),
-            F.col("ts").alias(f"{prefix}_ts"),
-            F.col("value").alias(f"{prefix}_value"),
-        )
-
-    clicks = side("click", "c")
-    buys = side("purchase", "p")
-    joined = clicks.join(
-        buys,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select(
-        "c_id", F.col("p_id"),
-        F.col("c_user").alias("user_id"),
-        F.round(F.col("p_value") - F.col("c_value"), 4).alias("uplift"),
-    )
-    name = f"stream_join_{_src_cache_key(sf_dir, 'events')}"
-    q = (
-        joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-STREAMING_JOIN_SQL = """
-SELECT c.event_id AS c_id, p.event_id AS p_id,
-       c.user_id AS user_id,
-       round(p.value - c.value, 4) AS uplift
-FROM events c JOIN events p
-  ON c.event_type = 'click' AND p.event_type = 'purchase'
- AND c.user_id = p.user_id
- AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-"""
-
-
-STREAMING_LATE_SQL = """
-WITH mx AS (SELECT max(ts) AS m FROM events)
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr,
-       event_type, count(*) AS n
-FROM events, mx
-WHERE ts >= mx.m - INTERVAL 50 HOURS
-  AND date_trunc('hour', ts) + INTERVAL 1 HOUR <= mx.m - INTERVAL 1 HOUR
-GROUP BY 1, 2
-"""
-
-
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming STATEFUL exact dedup in the contract: the
     documents table plus planted exact copies (every 7th doc) streams
@@ -4143,121 +3740,6 @@ SELECT DISTINCT md5(text) AS text_hash FROM documents
 """
 
 
-def streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-STATIC enrichment join in the contract -- the last
-    streaming join class (beside the windowed agg, stateful dedup,
-    watermark late-drop, and stream-stream interval join): the events
-    stream joins a static broadcast customer dimension per micro-batch
-    (the canonical enrich-on-ingest shape; the dim is re-broadcast per
-    batch, state-free), then aggregates per (segment, event_type) in
-    complete mode.  Emitted result must equal the batch join+GROUP BY,
-    which is the oracle.
-
-    Scale note: the broadcast HINT is right while the (projected,
-    two-column) dimension fits the executor budget — the standard
-    enrich-on-ingest deployment.  If the dim outgrows that (a ~100M-row
-    customer table), drop the hint: Spark falls back to a shuffled
-    stream-static hash join per micro-batch, correct at any dim size."""
-    import os
-    import tempfile
-
-    e = _t(spark, sf_dir, "events")
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"ld_stream_enrich_{_src_cache_key(sf_dir, 'events')}",
-    )
-    # _SUCCESS sentinel, not bare exists(): a crashed prior run leaves a
-    # partial dir that would otherwise be reused forever (ADVICE r3)
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        e.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    agg = (
-        stream.join(F.broadcast(cust), "user_id")
-        .groupBy("c_mktsegment", "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    name = f"stream_enrich_{_src_cache_key(sf_dir, 'events')}"
-    q = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-STREAMING_ENRICH_SQL = """
-SELECT c.c_mktsegment, e.event_type, count(*) AS n,
-       round(sum(e.value), 2) AS total_value
-FROM events e JOIN customer c ON c.c_custkey = e.user_id
-GROUP BY c.c_mktsegment, e.event_type
-"""
-
-
-def streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session windows over a STREAM: the same session_window
-    aggregation as the batch `session_window_events`, driven through a
-    real multi-micro-batch streaming query (memory sink, complete mode).
-    Sessions that span micro-batch boundaries exercise the state store's
-    session-MERGE path — two open sessions whose gap closes when a later
-    batch bridges them must fuse into one row — and the result must equal
-    the batch computation, whose gaps-and-islands derivation is the
-    oracle (same inclusive exact-gap merge semantics)."""
-    import os
-    import tempfile
-
-    e = _t(spark, sf_dir, "events")
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"ld_stream_events_{_src_cache_key(sf_dir, 'events')}",
-    )
-    # _SUCCESS sentinel, not bare exists(): a crashed prior run leaves a
-    # partial dir that would otherwise be reused forever (ADVICE r3)
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        e.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    agg = (
-        stream.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
-    name = f"stream_session_{_src_cache_key(sf_dir, 'events')}"
-    q = (
-        agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
 def cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE — the full grouping-sets lattice (rollup_revenue covers the
     prefix lattice; CUBE adds the (NULL, linestatus) cells)."""
@@ -4281,86 +3763,6 @@ SELECT coalesce(l_returnflag, '<all>') AS returnflag,
        count(*) AS n
 FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def range_join_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (theta) join: events matched to a tiny value-tier dim on
-    ``lo <= value < hi``.  The dim is broadcast, so the physical plan is a
-    BroadcastNestedLoopJoin — the scale-correct shape for a non-equi join
-    against a small table (no shuffle of the fact side)."""
-    e = _t(spark, sf_dir, "events")
-    tiers = spark.createDataFrame(
-        [("low", 0.0, 50.0), ("mid", 50.0, 200.0), ("high", 200.0, 1e18)],
-        "tier string, lo double, hi double",
-    )
-    j = e.join(
-        F.broadcast(tiers),
-        (e.value >= tiers.lo) & (e.value < tiers.hi),
-    )
-    return j.groupBy("tier").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-
-
-RANGE_JOIN_SQL = """
-SELECT t.tier AS tier, count(*) AS n, round(sum(e.value), 2) AS total_value
-FROM events e
-JOIN (VALUES ('low', 0.0, 50.0), ('mid', 50.0, 200.0),
-             ('high', 200.0, 1e18)) AS t(tier, lo, hi)
-  ON e.value >= t.lo AND e.value < t.hi
-GROUP BY t.tier
-"""
-
-
-def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentiles (linear interpolation) per event type — the exact
-    twin of the sketch-based `approx_aggregates` query."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 4).alias("p90"),
-        F.round(F.min("value"), 4).alias("vmin"),
-        F.round(F.max("value"), 4).alias("vmax"),
-    )
-
-
-PERCENTILE_SQL = """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 4) AS p50,
-       round(quantile_cont(value, 0.9), 4) AS p90,
-       round(min(value), 4) AS vmin,
-       round(max(value), 4) AS vmax
-FROM events GROUP BY event_type
-"""
-
-
-def ntile_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile ranking window: per-event-type value quartiles with a
-    deterministic (value, event_id) order, then a quartile profile."""
-    e = _t(spark, sf_dir, "events")
-    # NULLS LAST pinned: Spark ASC defaults NULLS FIRST, DuckDB NULLS LAST
-    w = W.partitionBy("event_type").orderBy(
-        F.asc_nulls_last("value"), "event_id"
-    )
-    return (
-        e.withColumn("q", F.ntile(4).over(w))
-        .groupBy("event_type", "q")
-        .agg(F.count("*").alias("n"),
-             F.round(F.avg("value"), 4).alias("avg_value"))
-    )
-
-
-NTILE_SQL = """
-SELECT event_type, q, count(*) AS n, round(avg(value), 4) AS avg_value
-FROM (
-    SELECT event_type, value,
-           ntile(4) OVER (PARTITION BY event_type
-                          ORDER BY value NULLS LAST, event_id) AS q
-    FROM events
-)
-GROUP BY event_type, q
 """
 
 
@@ -5219,182 +4621,6 @@ FROM ranked WHERE cum_tokens <= 2000
 """
 
 
-def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention over the events stream: users grouped by
-    the ISO week of their first event; for each (cohort, week offset) the
-    count of cohort users still active and the retention rate — the
-    standard product-analytics triangle, here the engagement readout for
-    transcript/telemetry sources.
-
-    Scale shape: one user-keyed distinct + min aggregate, one user-keyed
-    equi-join back (no fan-out: activity rows are already distinct per
-    (user, week)), then a cohort-keyed aggregate whose output is bounded
-    by weeks x offsets.  No windows at all."""
-    ev = _t(spark, sf_dir, "events").filter(
-        "ts IS NOT NULL AND user_id IS NOT NULL"
-    )
-    act = (
-        # to_date: DuckDB's date_trunc('week', TIMESTAMP) returns DATE,
-        # Spark's returns TIMESTAMP — pin DATE on both sides
-        ev.select(
-            "user_id",
-            F.to_date(F.date_trunc("week", F.col("ts"))).alias("week"),
-        )
-        .distinct()
-        .transform(_cached)
-    )
-    first = act.groupBy("user_id").agg(
-        F.min("week").alias("cohort_week")
-    ).transform(_cached)
-    cohort_sizes = first.groupBy("cohort_week").agg(
-        F.count("*").alias("cohort_n")
-    )
-    ret = (
-        act.join(first, "user_id")
-        .groupBy(
-            "cohort_week",
-            # both weeks are date_trunc'd Mondays, so the day gap is an
-            # exact multiple of 7; floor() pins the double->int edge anyway
-            # (Spark cast truncates, DuckDB cast rounds half-even)
-            F.floor(F.datediff(F.col("week"), F.col("cohort_week")) / 7)
-            .cast("long")
-            .alias("week_offset"),
-        )
-        .agg(F.count("*").alias("n_active"))
-    )
-    return ret.join(cohort_sizes, "cohort_week").select(
-        "cohort_week",
-        "week_offset",
-        "n_active",
-        "cohort_n",
-        F.round(
-            F.col("n_active") / F.col("cohort_n").cast("double"), 4
-        ).alias("retention"),
-    )
-
-
-USER_RETENTION_COHORTS_SQL = """
-WITH act AS (
-    SELECT DISTINCT user_id, date_trunc('week', ts) AS week
-    FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-),
-first AS (
-    SELECT user_id, min(week) AS cohort_week FROM act GROUP BY user_id
-),
-sizes AS (
-    SELECT cohort_week, count(*) AS cohort_n FROM first GROUP BY cohort_week
-),
-ret AS (
-    SELECT f.cohort_week,
-           CAST(floor(date_diff('day', f.cohort_week, a.week) / 7) AS BIGINT)
-               AS week_offset,
-           count(*) AS n_active
-    FROM act a JOIN first f USING (user_id)
-    GROUP BY 1, 2
-)
-SELECT r.cohort_week, r.week_offset, r.n_active, s.cohort_n,
-       round(r.n_active / CAST(s.cohort_n AS DOUBLE), 4) AS retention
-FROM ret r JOIN sizes s USING (cohort_week)
-"""
-
-
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel view -> click -> purchase, by
-    first-event times: a user advances a stage only if their first click
-    is at or after their first view, and their first purchase at or after
-    that click (the standard firsts-ordered funnel simplification — a
-    click that happens only before any view does not count).  One summary
-    row: stage populations + stage-to-stage conversion rates.
-
-    Scale shape: one user-keyed conditional-min aggregate (map-side
-    combined) and a single global rollup of booleans — no windows, no
-    joins; linear in events."""
-    ev = _t(spark, sf_dir, "events").filter(
-        "user_id IS NOT NULL AND ts IS NOT NULL"
-        " AND event_type IN ('view', 'click', 'purchase')"
-    )
-    firsts = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias(
-            "t_view"
-        ),
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias(
-            "t_click"
-        ),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("t_purchase"),
-    )
-    viewed = F.col("t_view").isNotNull()
-    clicked = viewed & (F.col("t_click") >= F.col("t_view"))
-    purchased = clicked & (F.col("t_purchase") >= F.col("t_click"))
-    # clicked/purchased are NULL (not false) when the prior stage exists
-    # but this one doesn't: sum skips them on both engines, and the
-    # coalesce pins the all-NULL column to 0 exactly as the oracle does
-    agg = firsts.agg(
-        F.count("*").alias("n_users"),
-        F.coalesce(F.sum(viewed.cast("long")), F.lit(0)).alias("n_viewed"),
-        F.coalesce(F.sum(clicked.cast("long")), F.lit(0)).alias("n_clicked"),
-        F.coalesce(F.sum(purchased.cast("long")), F.lit(0)).alias(
-            "n_purchased"
-        ),
-    )
-    return agg.select(
-        "n_users",
-        "n_viewed",
-        "n_clicked",
-        "n_purchased",
-        F.when(
-            F.col("n_viewed") > 0,
-            F.round(F.col("n_clicked") / F.col("n_viewed").cast("double"), 4),
-        ).alias("view_to_click"),
-        F.when(
-            F.col("n_clicked") > 0,
-            F.round(
-                F.col("n_purchased") / F.col("n_clicked").cast("double"), 4
-            ),
-        ).alias("click_to_purchase"),
-    )
-
-
-FUNNEL_CONVERSION_SQL = """
-WITH firsts AS (
-    SELECT user_id,
-           min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-           min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-           min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-    FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-      AND event_type IN ('view', 'click', 'purchase')
-    GROUP BY user_id
-),
-flags AS (
-    SELECT t_view IS NOT NULL AS viewed,
-           t_view IS NOT NULL AND t_click >= t_view AS clicked,
-           t_view IS NOT NULL AND t_click >= t_view
-               AND t_purchase >= t_click AS purchased
-    FROM firsts
-),
-agg AS (
-    SELECT count(*) AS n_users,
-           CAST(coalesce(sum(CASE WHEN viewed THEN 1 END), 0) AS BIGINT)
-               AS n_viewed,
-           CAST(coalesce(sum(CASE WHEN clicked THEN 1 END), 0) AS BIGINT)
-               AS n_clicked,
-           CAST(coalesce(sum(CASE WHEN purchased THEN 1 END), 0) AS BIGINT)
-               AS n_purchased
-    FROM flags
-)
-SELECT n_users, n_viewed, n_clicked, n_purchased,
-       CASE WHEN n_viewed > 0
-            THEN round(n_clicked / CAST(n_viewed AS DOUBLE), 4) END
-           AS view_to_click,
-       CASE WHEN n_clicked > 0
-            THEN round(n_purchased / CAST(n_clicked AS DOUBLE), 4) END
-           AS click_to_purchase
-FROM agg
-"""
-
-
 def vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability-index drift monitor over the vocabulary: per
     language, PSI between the even-doc_id slice (reference) and the
@@ -6142,14 +5368,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "supplier_running_total": supplier_running_total,
     "order_argmax_per_customer": order_argmax_per_customer,
     "cube_revenue": cube_revenue,
-    "asof_last_purchase": asof_last_purchase,
-    "events_sessionize": events_sessionize,
-    "events_hourly": events_hourly,
     "semi_anti_customers": semi_anti_customers,
     "set_ops_parts": set_ops_parts,
     "rollup_revenue": rollup_revenue,
-    "pivot_events": pivot_events,
-    "json_events": json_events,
     "tfidf_top_terms": tfidf_top_terms,
     "label_centroids": label_centroids,
     "mixture_rates": mixture_rates,
@@ -6167,13 +5388,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bm25_topk": bm25_topk,
     "heavy_hitters": heavy_hitters,
     "source_pagerank": source_pagerank,
-    "range_join_tiers": range_join_tiers,
-    "percentile_stats": percentile_stats,
-    "ntile_value_quartiles": ntile_value_quartiles,
     "full_outer_nation_counts": full_outer_nation_counts,
     "normalize_text": normalize_text,
     "collocations_lift": collocations_lift,
-    "session_window_events": session_window_events,
     "substring_dup_pairs": substring_dup_pairs,
     "word_freq_spectrum": word_freq_spectrum,
     "source_overlap": source_overlap,
@@ -6191,20 +5408,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "word_cumsum": word_cumsum,
     "semdedup_pairs": semdedup_pairs,
     "sample_weighted": sample_weighted,
-    "streaming_hourly": streaming_hourly,
-    "streaming_late_data": streaming_late_data,
-    "streaming_join_attrib": streaming_join_attrib,
     "streaming_dedup": streaming_dedup,
-    "streaming_enrich": streaming_enrich,
-    "streaming_session": streaming_session,
     "tokenizer_fertility": tokenizer_fertility,
     "padding_waste": padding_waste,
     "doc_novelty": doc_novelty,
     "ppl_buckets": ppl_buckets,
     "dedup_cluster_stats": dedup_cluster_stats,
     "token_budget_select": token_budget_select,
-    "user_retention_cohorts": user_retention_cohorts,
-    "funnel_conversion": funnel_conversion,
     "vocab_drift_psi": vocab_drift_psi,
     "ngram_coverage_curve": ngram_coverage_curve,
     "revenue_range_window": revenue_range_window,
@@ -6231,8 +5441,6 @@ ORACLE_SQL: dict[str, str] = {
     "ppl_buckets": PPL_BUCKETS_SQL,
     "dedup_cluster_stats": DEDUP_CLUSTER_STATS_SQL,
     "token_budget_select": TOKEN_BUDGET_SELECT_SQL,
-    "user_retention_cohorts": USER_RETENTION_COHORTS_SQL,
-    "funnel_conversion": FUNNEL_CONVERSION_SQL,
     "vocab_drift_psi": VOCAB_DRIFT_PSI_SQL,
     "ngram_coverage_curve": NGRAM_COVERAGE_CURVE_SQL,
     "dedup_edit_distance": DEDUP_EDIT_DISTANCE_SQL,
@@ -6244,8 +5452,6 @@ ORACLE_SQL: dict[str, str] = {
     "revenue_by_nation": REVENUE_BY_NATION_SQL,
     "order_argmax_per_customer": ORDER_ARGMAX_SQL,
     "supplier_running_total": SUPPLIER_RUNNING_SQL,
-    "events_sessionize": EVENTS_SESSIONIZE_SQL,
-    "events_hourly": EVENTS_HOURLY_SQL,
     "lang_resolution": LANG_RESOLUTION_SQL,
     "tokenize_explode": TOKENIZE_EXPLODE_SQL,
     "tokenize_per_char": TOKENIZE_PER_CHAR_SQL,
@@ -6261,9 +5467,6 @@ ORACLE_SQL: dict[str, str] = {
     "semi_anti_customers": SEMI_ANTI_SQL,
     "set_ops_parts": SET_OPS_SQL,
     "rollup_revenue": ROLLUP_SQL,
-    "pivot_events": PIVOT_SQL,
-    "json_events": JSON_EVENTS_SQL,
-    "asof_last_purchase": ASOF_SQL,
     "langid_hashed_ngram": LANGID_HASHED_SQL,
     "dedup_ngram_jaccard": DEDUP_NGRAM_SQL,
     "dedup_minhash_lsh": DEDUP_MINHASH_SQL,
@@ -6285,21 +5488,15 @@ ORACLE_SQL: dict[str, str] = {
     "conv_quality_report": CONV_QUALITY_SQL,
     "conv_export": CONV_EXPORT_SQL,
     "word_cumsum": WORD_CUMSUM_SQL,
-    "streaming_hourly": STREAMING_HOURLY_SQL,
     "streaming_dedup": STREAMING_DEDUP_SQL,
     "cube_revenue": CUBE_SQL,
-    "range_join_tiers": RANGE_JOIN_SQL,
-    "percentile_stats": PERCENTILE_SQL,
-    "ntile_value_quartiles": NTILE_SQL,
     "full_outer_nation_counts": FULL_OUTER_SQL,
     "tfidf_top_terms": TFIDF_TOP_TERMS_SQL,
     "doc_char_entropy": DOC_CHAR_ENTROPY_SQL,
     "inverted_index": INVERTED_INDEX_SQL,
     "normalize_text": NORMALIZE_TEXT_SQL,
     "collocations_lift": COLLOCATIONS_LIFT_SQL,
-    "session_window_events": SESSION_WINDOW_SQL,
     "substring_dup_pairs": SUBSTRING_DUP_SQL,
-    "streaming_late_data": STREAMING_LATE_SQL,
     "word_freq_spectrum": WORD_FREQ_SPECTRUM_SQL,
     "doc_repetition": DOC_REPETITION_SQL,
     "lm_perplexity": LM_PERPLEXITY_SQL,
@@ -6309,15 +5506,12 @@ ORACLE_SQL: dict[str, str] = {
     "semdedup_pairs": SEMDEDUP_PAIRS_SQL,
     "bloom_decontaminate": BLOOM_DECONTAMINATE_SQL,
     "bpe_merges": BPE_MERGES_SQL,
-    "streaming_enrich": STREAMING_ENRICH_SQL,
     "label_centroids": LABEL_CENTROIDS_SQL,
     "sequence_packing": SEQUENCE_PACKING_SQL,
     "mixture_rates": MIXTURE_RATES_SQL,
-    "streaming_join_attrib": STREAMING_JOIN_SQL,
     "containment_pairs": CONTAINMENT_PAIRS_SQL,
     "segment_dedup": SEGMENT_DEDUP_SQL,
     "doc_chunks": DOC_CHUNKS_SQL,
-    "streaming_session": SESSION_WINDOW_SQL,
     "nb_quality_score": NB_QUALITY_SQL,
     "lm_bigram_ppl": LM_BIGRAM_SQL,
     "source_overlap": SOURCE_OVERLAP_SQL,

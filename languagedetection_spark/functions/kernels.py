@@ -15,8 +15,9 @@ This is the Spark-side counterpart of the pure oracle
   bit-identical to the oracle regardless of batch/partition layout.
 
 Differential tests (tests/test_spark_pipeline.py) assert kernel == oracle on
-every fixture turn.  The kernel object is pickled once into a Spark broadcast
-and deserialized once per executor (module-level cache in udfs.py).
+every fixture turn.  The kernel object is pickled once into a Spark broadcast;
+``Broadcast.value`` deserializes it once per Python worker and caches it
+there, so later batches on that worker reuse it and its memos.
 """
 
 from __future__ import annotations

@@ -26,9 +26,9 @@ def broadcast_model(spark: SparkSession, model: FilterModel) -> Broadcast:
     return spark.sparkContext.broadcast(model)
 
 
-def with_decisions(df: DataFrame, model: FilterModel | Broadcast,
-                   text_col: str = "text") -> DataFrame:
-    """Append the six decision columns to *df* via one mapInPandas pass.
+def with_decisions(df: DataFrame, model: FilterModel | Broadcast) -> DataFrame:
+    """Append the six decision columns, scored from *df*'s ``text`` column,
+    via one mapInPandas pass.
 
     Map-only: no shuffle is introduced; Catalyst keeps upstream pushdown and
     the Arrow exchange batches rows (spark.sql.execution.arrow.maxRecordsPerBatch).
@@ -40,7 +40,7 @@ def with_decisions(df: DataFrame, model: FilterModel | Broadcast,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = model.value if isinstance(model, Broadcast) else model
         for pdf in batches:
-            res = m.decide_batch(pdf[text_col])
+            res = m.decide_batch(pdf["text"])
             res.index = pdf.index
             yield pd.concat([pdf, res], axis=1)
 

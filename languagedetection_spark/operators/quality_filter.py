@@ -1,7 +1,7 @@
 """The production quality-filter pipeline (EP-3 generalized, SURVEY §3/§7).
 
-transcripts --(salted repartition + stable order)--> mapInPandas(decide) -->
-per-turn (lang, lang_conf, ppl, keep, drop_reason, scrubbed_text).
+transcripts --> mapInPandas(decide) --> per-turn
+(lang, lang_conf, ppl, keep, drop_reason, scrubbed_text).
 
 The scoring stage is map-only: at 10^12 turns the job is embarrassingly
 parallel and scaling is limited only by scan + Python worker throughput,
@@ -15,27 +15,15 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.kernels import FilterModel
 from ..functions.udfs import with_decisions
-from ..plans.partitioning import stable_order_within_partitions
 
 
-def quality_filter(
-    df: DataFrame,
-    model: FilterModel | Broadcast,
-    *,
-    num_partitions: int | None = None,
-    ordered: bool = False,
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply the full per-turn decision pipeline.
+def quality_filter(df: DataFrame, model: FilterModel | Broadcast) -> DataFrame:
+    """Apply the full per-turn decision pipeline to *df*'s ``text`` column.
 
-    ``ordered=True`` adds the stable (conv_id, turn_idx) per-partition
-    ordering the north_rule mandates for order-sensitive consumers; the
-    decisions themselves are row-local, so default is the shuffle-free path.
+    The decisions are row-local, so the plan is scan -> MapInPandas with no
+    shuffle.
     """
-    if ordered:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        df = stable_order_within_partitions(df, n)
-    return with_decisions(df, model, text_col=text_col)
+    return with_decisions(df, model)
 
 
 def kept_turns(decided: DataFrame) -> DataFrame:

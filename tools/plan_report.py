@@ -19,7 +19,6 @@ FEATURES = [
     ("BroadcastNestedLoopJoin", "bcast-nl-join"),
     ("ShuffledHashJoin", "shuffled-hash-join"),
     ("MapInPandas", "mapInPandas"),
-    ("FlatMapCoGroupsInPandas", "cogroup-pandas"),
     ("WindowGroupLimit", "window-group-limit"),
     ("Window", "window"),
     ("HashAggregate", "hash-agg"),
