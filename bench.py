@@ -29,7 +29,6 @@ BENCH_QUERIES = [
     "pipeline_keep",
     "doc_token_stats",
     "pipeline_scrub",
-    "embedding_topk",
     "dedup_minhash_lsh",
     "dedup_simhash",
     "sample_stratified",
@@ -41,15 +40,12 @@ BENCH_QUERIES = [
     "collocations_lift",
     "substring_dup_pairs",
     "word_freq_spectrum",
-    "label_centroids",
     "sequence_packing",
     "mixture_rates",
     "doc_repetition",
     "lm_perplexity",
     "dedup_keep_best",
     "importance_weights",
-    "embedding_kmeans",
-    "semdedup_pairs",
     "bloom_decontaminate",
     "bpe_merges",
     "containment_pairs",
@@ -73,7 +69,6 @@ BENCH_QUERIES = [
     "dedup_edit_distance",
     "revenue_range_window",
     "grouping_sets_revenue",
-    "label_knn_agreement",
     "lsh_band_sweep",
     "conv_export",
 ]  # streaming_* excluded: streaming-query startup dominates

@@ -81,15 +81,9 @@ def main(argv: list[str] | None = None) -> int:
                         "strict superset of 'exact' (batch mode only; the "
                         "streaming mode's analogue is stateful "
                         "dropDuplicates)")
-    p.add_argument("--dedup-threshold", type=float, default=0.8,
-                   help="verified-Jaccard threshold for --dedup minhash "
-                        "(default 0.8)")
-    p.add_argument("--dedup-hash-family", choices=["md5", "xxhash64"],
-                   default="md5",
-                   help="MinHash signature kernel for --dedup minhash: "
-                        "'md5' (oracle-portable Arrow kernel, default) or "
-                        "'xxhash64' (JVM-native, Python-worker-free; "
-                        "same verify contract, different LSH randomness)")
+    p.add_argument("--dedup-threshold", type=float, default=None,
+                   help="verified-Jaccard threshold in (0, 1] for --dedup "
+                        "minhash (default 0.8)")
     p.add_argument("--bucketed-table", default=None,
                    help="after all buckets complete, additionally compact "
                         "the KEPT turns into a bucketed + per-bucket-"
@@ -129,6 +123,14 @@ def main(argv: list[str] | None = None) -> int:
     if args.streaming and args.bucketed_table:
         p.error("--bucketed-table is a batch compaction stage; for a "
                 "stream, run it as a separate batch job over the sink")
+    if args.dedup != "minhash":
+        if args.dedup_threshold is not None:
+            p.error("--dedup-threshold applies only to --dedup minhash")
+    elif args.dedup_threshold is None:
+        args.dedup_threshold = 0.8
+    elif not 0 < args.dedup_threshold <= 1:
+        p.error(f"--dedup-threshold must be in (0, 1], got "
+                f"{args.dedup_threshold}")
 
     from pyspark.sql import SparkSession
 
@@ -211,8 +213,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.dedup == "minhash":
         from ..operators.dedup import dedup_minhash_keep_first
 
-        df = dedup_minhash_keep_first(df, threshold=args.dedup_threshold,
-                                      hash_family=args.dedup_hash_family)
+        df = dedup_minhash_keep_first(df, threshold=args.dedup_threshold)
 
     count = {"n": 0}
 

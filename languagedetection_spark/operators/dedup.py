@@ -280,67 +280,6 @@ def minhash_signatures_df(docs: DataFrame, k: int = MINHASH_K,
     return docs.mapInPandas(run, "doc_id long, sig array<long>")
 
 
-def minhash_signatures_native_df(docs: DataFrame, k: int = MINHASH_K,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text") -> DataFrame:
-    """JVM-native MinHash signatures: the production twin of
-    minhash_signatures_df with ``xxhash64`` as the base hash.
-
-    The whole signature is ONE whole-stage-codegen expression -- no Python
-    workers, no Arrow transfer, no shuffle.  The k minimums are folded in a
-    SINGLE pass over the hashed-shingle array:
-
-        shingles = transform(sequence(...), i -> concat_ws(slice(toks,i,3)))
-        ms       = transform(shingles, s -> pmod(xxhash64(s), P))
-        sig      = aggregate(ms, [P]*k,
-                             (acc, m) -> transform(1..k,
-                                 i -> least(acc[i], (A[i]*m + B[i]) % P)))
-
-    The fold matters: the naive form -- k separate
-    array_min(transform(ms, ...)) columns -- makes Catalyst re-evaluate the
-    whole tokenize+shingle+hash chain once PER signature element (no CSE
-    across sibling Project expressions): measured 20.7 s vs 2.0 s for this
-    form at sf0.1.
-
-    Honest measurement (sf0.1, warm JVM + warm Python workers, single
-    partition): this fold runs 2.0 s; an explode + codegen'd 12-min
-    hash-aggregate twin also 2.1 s (but +1 shuffle); the Arrow+numpy md5
-    kernel (minhash_signatures_df) 0.8 s.  Spark's higher-order functions
-    are interpreted per element (no whole-stage codegen), so the
-    one-C-md5-per-distinct-shingle + vectorized-numpy-affine kernel is
-    ~2.5x FASTER per core than any JVM expression formulation we found --
-    the r2 hypothesis that the Python md5 dominates is false post the
-    one-md5-per-shingle rewrite.  This variant therefore exists for
-    deployments that must run without Python workers (pure-JVM executors,
-    constrained executor memory), not as a speedup; it is map-only,
-    shuffle-free, and differential-tested against the md5 contract form
-    (tests/test_dedup_hash_family.py).  Same affine family/constants as
-    the md5 path (A_i, B_i < P = 2^31-1, so A_i*m + B_i < 2^62 stays exact
-    in signed 64-bit arithmetic)."""
-    a, b = _minhash_coeffs(k)
-    toks = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(1), F.size(toks) - 2)
-    shingles = F.array_distinct(F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3))
-    ))
-    p = F.lit(MINHASH_P).cast("long")
-    ms = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), p))
-    a_arr = F.array(*[F.lit(int(x)).cast("long") for x in a])
-    b_arr = F.array(*[F.lit(int(x)).cast("long") for x in b])
-    init = F.array_repeat(p, k)
-    ks = F.sequence(F.lit(1), F.lit(k))  # element_at is 1-based
-    sig = F.aggregate(
-        ms, init,
-        lambda acc, m: F.transform(ks, lambda i: F.least(
-            F.element_at(acc, i),
-            (F.element_at(a_arr, i) * m + F.element_at(b_arr, i)) % p)),
-    )
-    return (
-        docs.filter(F.size(toks) >= 3)
-        .select(F.col(id_col).alias("doc_id"), sig.alias("sig"))
-    )
-
-
 MAX_BAND_FREQ_DEFAULT = 256
 
 
@@ -367,7 +306,6 @@ def _band_freq_guard(banded: DataFrame, keys: list[str],
 def dedup_minhash_lsh_df(docs: DataFrame, threshold: float = 0.5,
                          k: int = MINHASH_K, bands: int = MINHASH_BANDS,
                          rows: int = MINHASH_ROWS,
-                         hash_family: str = "md5",
                          max_band_freq: int | None =
                          MAX_BAND_FREQ_DEFAULT) -> DataFrame:
     """MinHash + banded LSH candidates, exact-Jaccard verified.
@@ -378,24 +316,13 @@ def dedup_minhash_lsh_df(docs: DataFrame, threshold: float = 0.5,
     are computed map-only; band key = '_'-joined decimal min-hashes of the
     band's R rows; only same-band pairs are shuffled.
 
-    ``hash_family="xxhash64"`` swaps in the JVM-native signature kernel
-    (minhash_signatures_native_df) for production runs: identical banding,
-    verification, and output contract; different (but equally uniform) LSH
-    randomness, so candidate sets may differ while verified pairs at the
-    Jaccard threshold agree (pinned by the differential test).
-
     The shingle set is persisted for the verify stage: _verify_jaccard
     consumes it from three pruned branches (sizes + both intersection
     sides), the same multi-consumer shape that cost the Jaccard operator
     16 corpus re-scans before its persist fix."""
     sh = shingle_df(docs).transform(_cached)
     spark = docs.sparkSession
-    if hash_family == "xxhash64":
-        sig = minhash_signatures_native_df(docs, k)
-    elif hash_family == "md5":
-        sig = minhash_signatures_df(docs, k).filter(F.size("sig") > 0)
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    sig = minhash_signatures_df(docs, k).filter(F.size("sig") > 0)
     band_ids = spark.range(bands).select(F.col("id").cast("int").alias("b"))
     # persisted: the band-frequency guard and both self-join sides are
     # three separately-pruned consumers of the banded signatures -- the
@@ -406,12 +333,6 @@ def dedup_minhash_lsh_df(docs: DataFrame, threshold: float = 0.5,
         F.expr(f"concat_ws('_', slice(sig, b * {rows} + 1, {rows}))")
         .alias("key"),
     ).transform(_cached)
-    if hash_family == "xxhash64":
-        # expression-backed sig would be recomputed once per self-join side;
-        # an explicit band-key shuffle is built once and reused by both
-        # sides (ReuseExchange) -- measured 4.7 s -> 3.5 s at sf0.1.  The
-        # md5 path already reuses its exchange, so it keeps the plain plan.
-        banded = banded.repartition("b", "key")
     banded = _band_freq_guard(banded, ["b", "key"], max_band_freq)
     left = banded.select("b", "key", F.col("doc_id").alias("doc_a"))
     right = banded.select("b", "key", F.col("doc_id").alias("doc_b"))
@@ -810,8 +731,7 @@ def dedup_minhash_keep_first(df: DataFrame,
                              key_cols: tuple[str, str] = ("conv_id",
                                                           "turn_idx"),
                              text_col: str = "text",
-                             threshold: float = 0.8,
-                             hash_family: str = "md5") -> DataFrame:
+                             threshold: float = 0.8) -> DataFrame:
     """Corpus-wide NEAR-dedup keeping one deterministic row per duplicate
     CLUSTER: MinHash-LSH candidates -> exact-Jaccard verify -> connected
     components -> the (conv_id, turn_idx)-minimal turn per cluster.  Built
@@ -830,11 +750,7 @@ def dedup_minhash_keep_first(df: DataFrame,
     LSH's own false-positive band) -- documented, not defended.  The
     final keeper election is one min-of-struct aggregate per cluster --
     partially aggregable, skew-immune (a viral text's million copies
-    combine map-side).
-
-    ``hash_family="xxhash64"`` swaps in the JVM-native signature kernel
-    for Python-worker-free deployments (same contract, different LSH
-    randomness -- see dedup_minhash_lsh_df)."""
+    combine map-side)."""
     a, b = key_cols
     k = F.conv(
         F.substring(
@@ -850,8 +766,7 @@ def dedup_minhash_keep_first(df: DataFrame,
         .distinct()
         .transform(_cached)
     )
-    pairs = dedup_minhash_lsh_df(texts, threshold=threshold,
-                                 hash_family=hash_family)
+    pairs = dedup_minhash_lsh_df(texts, threshold=threshold)
     comp = dedup_components_df(texts.select("doc_id"), pairs)
     turns = df.withColumn("__k", k)
     clustered = turns.join(

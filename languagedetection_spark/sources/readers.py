@@ -17,6 +17,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # Demo.scala:10 -- named groups become group indices 1 and 2
@@ -57,8 +59,13 @@ def read_regex_csv(spark: SparkSession, path: str,
 
 def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
     """Read the transcripts table from an Iceberg identifier
-    (``catalog.db.table``) or a Parquet path."""
-    if "/" not in source and "." in source:
+    (``catalog.db.table``) or a Parquet path.  An existing local path is
+    always Parquet, so a relative ``t.parquet`` never reaches the catalog;
+    it is made absolute because the JVM's working directory need not be
+    this process's."""
+    if os.path.exists(source):
+        source = os.path.abspath(source)
+    elif "/" not in source and "." in source:
         try:
             return spark.read.table(source)
         except Exception as e:  # Iceberg runtime not on classpath here

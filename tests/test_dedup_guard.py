@@ -354,11 +354,7 @@ def test_bloom_decontaminate_no_false_negatives(spark):
     assert not low, f"bloom hit count below exact overlap: {low}"
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("family", ["md5", "xxhash64"])
-def test_minhash_keep_first_clusters_near_and_exact(spark, family):
+def test_minhash_keep_first_clusters_near_and_exact(spark):
     """The --dedup minhash stage: exact copies AND near-dups (one word
     changed) collapse into one cluster keeping the (conv_id, turn_idx)-
     minimal turn; unrelated and NULL texts survive as singletons.  The
@@ -377,9 +373,7 @@ def test_minhash_keep_first_clusters_near_and_exact(spark, family):
         rows, "conv_id string, turn_idx int, text string")
     kept = sorted(
         (r["conv_id"], r["turn_idx"])
-        for r in dedup_minhash_keep_first(
-            df, threshold=0.8, hash_family=family
-        ).collect()
+        for r in dedup_minhash_keep_first(df, threshold=0.8).collect()
     )
     assert kept == [("c1", 0), ("c3", 0), ("c4", 5)]
     # schema passes through untouched (scoring runs on the survivors)

@@ -1,123 +1,49 @@
-"""Differential tests for the MinHash hash-family twins (VERDICT r2 ask #3).
+"""Tests for the MinHash signature kernel and its LSH verification.
 
-The md5 family is the CONTRACT form (bit-reproducible in DuckDB via
-md5_number_lower -> oracle-checkable) and, measured, also the FASTEST form
-(Arrow+numpy beats interpreted JVM higher-order functions ~2.5x per core --
-see minhash_signatures_native_df's docstring).  The xxhash64 family is the
-pure-JVM option for Python-worker-free deployments: one map-only fold
-expression, no Python workers, no Arrow transfer.  Different base hash =>
-different LSH randomness => candidate sets may differ; what must agree is
-the OUTPUT CONTRACT: verified near-dup pairs at the Jaccard threshold,
-because verification is exact Jaccard over the same shingles regardless of
-which family proposed the candidate.
+md5 is the only MinHash hash family: one md5 per distinct shingle, an
+affine family over the digest's lower 64 bits, computed in an Arrow+numpy
+kernel.  It is bit-reproducible in DuckDB via md5_number_lower, so the
+contract oracle checks the same path ``filter_job --dedup minhash`` runs.
+Candidates come from LSH banding; what a caller sees is the verified
+near-dup pairs, whose Jaccard is exact over the shingle sets.
 """
-
-import os
-import sys
-
-import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-
-
-def _docs(spark):
-    return spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-
-
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata absent")
-def test_verified_pairs_identical_across_hash_families(spark):
-    """Planted near-dups in the documents fixture: both families must
-    verify the SAME pair set at the default threshold (near-dups at
-    Jaccard >= 0.5 are caught by a 3x4 banding scheme w.h.p. under any
-    uniform hash; the fixture's planted pairs are comfortably above the
-    LSH S-curve's knee, so equality is deterministic here)."""
-    from languagedetection_spark.operators.dedup import dedup_minhash_lsh_df
-
-    docs = _docs(spark)
-    md5_pairs = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup_minhash_lsh_df(docs, hash_family="md5").collect()
-    }
-    xx_pairs = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup_minhash_lsh_df(docs, hash_family="xxhash64").collect()
-    }
-    assert md5_pairs, "fixture must contain planted near-dups"
-    assert xx_pairs == md5_pairs
-
-
-def test_native_signatures_are_jvm_only(spark):
-    """The production signature plan must contain NO Python evaluation node
-    (that is its whole point): no ArrowEvalPython / BatchEvalPython /
-    FlatMapsInPandas stages."""
-    from languagedetection_spark.operators.dedup import (
-        minhash_signatures_native_df,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "x y")], "doc_id long, text string"
-    )
-    plan = (
-        minhash_signatures_native_df(docs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for marker in ("Python", "Pandas", "Arrow"):
-        assert marker not in plan, plan
 
 
 def test_native_signature_shape_and_short_doc_gate(spark):
-    """Both variants: k-length signature per doc with >= 3 tokens; shorter
-    docs emit nothing (the sequence-descent pitfall guard, CLAUDE.md)."""
+    """k-length signature per doc with >= 3 tokens; shorter docs emit an
+    empty signature (Spark's sequence(1, 0) descends, so they must be
+    gated, not shingled)."""
     from languagedetection_spark.operators.dedup import (
         MINHASH_K,
         MINHASH_P,
         minhash_signatures_df,
-        minhash_signatures_native_df,
     )
 
     docs = spark.createDataFrame(
         [(1, "a b c d e"), (2, "x y"), (3, ""), (4, None)],
         "doc_id long, text string",
     )
-    native = {r["doc_id"]: r["sig"]
-              for r in minhash_signatures_native_df(docs).collect()}
     md5 = {r["doc_id"]: r["sig"]
            for r in minhash_signatures_df(docs)
            .filter("size(sig) > 0").collect()}
-    assert set(native) == set(md5) == {1}
-    assert len(native[1]) == len(md5[1]) == MINHASH_K
-    assert all(0 <= v < MINHASH_P for v in native[1])
+    assert set(md5) == {1}
+    assert len(md5[1]) == MINHASH_K
     assert all(0 <= v < MINHASH_P for v in md5[1])
 
 
 def test_hash_families_share_verification(spark):
-    """A doc pair sharing most shingles must be found by BOTH families with
-    the SAME exact-Jaccard value (verification is family-independent)."""
+    """A doc pair sharing most shingles is found with its exact Jaccard;
+    an unrelated doc pairs with neither."""
     from languagedetection_spark.operators.dedup import dedup_minhash_lsh_df
 
-    # Jaccard must sit WELL above the 3x4 banding S-curve knee for the
-    # catch to be deterministic under any uniform hash: 40 shared tokens
-    # with one trailing edit -> 38 of 39+39 shingles shared, J ~= 0.95
-    # (a J ~= 0.82 pair was caught by md5 but legitimately missed by
-    # xxhash64 -- LSH recall near the knee is family-dependent by design)
+    # 40 shared tokens with one trailing edit -> 38 of 39+39 shingles
+    # shared, J ~= 0.95: well above the 3x4 banding S-curve knee
     base = " ".join(f"tok{i}" for i in range(40))
     docs = spark.createDataFrame(
         [(1, base + " lambda"), (2, base + " omicron"),
          (3, "completely different text with unrelated words here")],
         "doc_id long, text string",
     )
-    md5 = dedup_minhash_lsh_df(docs, hash_family="md5").collect()
-    xx = dedup_minhash_lsh_df(docs, hash_family="xxhash64").collect()
+    md5 = dedup_minhash_lsh_df(docs).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in md5] == [(1, 2)]
-    assert [(r["doc_a"], r["doc_b"]) for r in xx] == [(1, 2)]
-    assert md5[0]["jaccard"] == xx[0]["jaccard"]
-
-
-def test_unknown_hash_family_rejected(spark):
-    from languagedetection_spark.operators.dedup import dedup_minhash_lsh_df
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="hash_family"):
-        dedup_minhash_lsh_df(docs, hash_family="sha1")
+    assert md5[0]["jaccard"] == round(38 / 40, 4)

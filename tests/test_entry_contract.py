@@ -15,7 +15,7 @@ import __spark_entry__ as entry_mod  # noqa: E402
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "documents", "embeddings",
+    "lineitem", "documents",
 ]
 
 
@@ -155,66 +155,6 @@ def test_oracle_edge_documents(name, spark, edge_docs_dir):
         f"'{edge_docs_dir}/documents.parquet'"
     )
     df = entry_mod.queries()[name](spark, edge_docs_dir)
-    s_cols, s_rows = _norm(df.columns, [tuple(r) for r in df.collect()])
-    res = con.execute(entry_mod.oracle_sql()[name])
-    d_cols, d_rows = _norm([d[0] for d in res.description], res.fetchall())
-    assert s_cols == d_cols, name
-    assert s_rows == d_rows, name
-
-
-EDGE_EMBEDDING_QUERIES = (
-    "embedding_topk", "dedup_embedding_cosine",
-    "label_centroids", "embedding_kmeans", "semdedup_pairs",
-    "label_knn_agreement",
-)
-
-
-@pytest.fixture(scope="module")
-def edge_embeddings_dir(tmp_path_factory):
-    """Embeddings with a zero vector, a NULL embedding, and a NULL element
-    -- degenerate rows every real pipeline eventually sees.  Both engines
-    hard-error on them in cosine math unless filtered, so every similarity
-    operator and its oracle apply the same validity filter."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rng = np.random.default_rng(5)
-    vecs = [rng.normal(size=64).astype("float32").tolist()
-            for _ in range(30)]
-    vecs.append([0.0] * 64)          # zero vector: no direction
-    vecs.append(None)                # NULL embedding
-    bad = rng.normal(size=64).astype("float32").tolist()
-    bad[3] = None                    # NULL element
-    vecs.append(bad)
-    # two VALID vectors with NULL labels (ADVICE r4): unlabeled rows are
-    # routine in real embedding tables, and NULL labels stress the
-    # engines' diverging NULL semantics (grouping, <> comparisons,
-    # window ORDER BY NULLS placement) across the whole similarity family
-    vecs.append(rng.normal(size=64).astype("float32").tolist())
-    vecs.append(rng.normal(size=64).astype("float32").tolist())
-    n = len(vecs)
-    labels = [i % 3 for i in range(n - 2)] + [None, None]
-    d = tmp_path_factory.mktemp("edge_emb")
-    pq.write_table(
-        pa.table({
-            "vec_id": pa.array(list(range(n)), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
-            "label": pa.array(labels, pa.int32()),
-        }),
-        str(d / "embeddings.parquet"),
-    )
-    return str(d)
-
-
-@pytest.mark.parametrize("name", EDGE_EMBEDDING_QUERIES)
-def test_oracle_edge_embeddings(name, spark, edge_embeddings_dir):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{edge_embeddings_dir}/embeddings.parquet'"
-    )
-    df = entry_mod.queries()[name](spark, edge_embeddings_dir)
     s_cols, s_rows = _norm(df.columns, [tuple(r) for r in df.collect()])
     res = con.execute(entry_mod.oracle_sql()[name])
     d_cols, d_rows = _norm([d[0] for d in res.description], res.fetchall())

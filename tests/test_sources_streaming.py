@@ -646,6 +646,64 @@ def test_filter_job_rejects_dedup_with_streaming(tmp_path):
     assert exc.value.code == 2
 
 
+def test_filter_job_rejects_bad_dedup_threshold(monkeypatch, tmp_path):
+    """--dedup-threshold only means something under --dedup minhash and
+    only inside (0, 1]; anything else exits 2 before a session is built.
+    A valid threshold, or none, gets past the guard."""
+    import pytest
+
+    from languagedetection_spark.jobs.filter_job import main
+    from languagedetection_spark.plans import session as session_mod
+
+    class _PastGuard(Exception):
+        pass
+
+    def _no_session(**_kw):
+        raise _PastGuard
+
+    monkeypatch.setattr(session_mod, "get_spark", _no_session)
+    base = ["--input", "x.parquet", "--output", str(tmp_path / "o"),
+            "--checkpoint", str(tmp_path / "c")]
+    for extra in (["--dedup-threshold", "0.5"],
+                  ["--dedup", "exact", "--dedup-threshold", "0.5"],
+                  ["--dedup", "minhash", "--dedup-threshold", "80"],
+                  ["--dedup", "minhash", "--dedup-threshold", "0"],
+                  ["--dedup", "minhash", "--dedup-threshold", "nan"]):
+        with pytest.raises(SystemExit) as exc:
+            main(base + extra)
+        assert exc.value.code == 2, extra
+    for extra in (["--dedup", "minhash"],
+                  ["--dedup", "minhash", "--dedup-threshold", "1"]):
+        with pytest.raises(_PastGuard):
+            main(base + extra)
+
+
+def test_read_transcripts_relative_parquet_path(spark, monkeypatch,
+                                                tmp_path):
+    """A relative ``t.parquet`` looks like a ``db.table`` identifier; it
+    must still read as the Parquet file it names."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from languagedetection_spark.sources.readers import read_transcripts
+
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    pq.write_table(pa.table({
+        "conv_id": ["c1", "c2"],
+        "turn_idx": pa.array([0, 1], pa.int32()),
+        "role": ["user", "asst"],
+        "text": ["hello there", "good day"],
+        "tool": pa.array([None, None], pa.string()),
+        "ts": pa.array([ts, ts], pa.timestamp("us", tz="UTC")),
+    }), tmp_path / "t.parquet")
+    monkeypatch.chdir(tmp_path)
+    rows = read_transcripts(spark, "t.parquet").orderBy("conv_id").collect()
+    assert [(r.conv_id, r.text) for r in rows] == [
+        ("c1", "hello there"), ("c2", "good day")]
+
+
 def test_filter_job_dedup_minhash_stage(spark, tmp_path):
     """--dedup minhash collapses near-dup clusters (not just exact copies)
     before scoring, keeping the minimal (conv_id, turn_idx) per cluster."""

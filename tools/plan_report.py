@@ -69,7 +69,7 @@ def main() -> None:
         os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(lines) - 7} queries)")
+    print(f"wrote {out} ({len(entry_mod.queries())} queries)")
 
 
 if __name__ == "__main__":
