@@ -20,10 +20,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "revenue_by_nation",
-    "order_argmax_per_customer",
-    "supplier_running_total",
     "classify_relational",
     "classify_vectorized",
     "pipeline_keep",
@@ -67,8 +63,6 @@ BENCH_QUERIES = [
     "vocab_drift_psi",
     "ngram_coverage_curve",
     "dedup_edit_distance",
-    "revenue_range_window",
-    "grouping_sets_revenue",
     "lsh_band_sweep",
     "conv_export",
 ]  # streaming_* excluded: streaming-query startup dominates

@@ -130,158 +130,6 @@ ranked AS (
 
 
 # ---------------------------------------------------------------------------
-# TPC-H-ish relational coverage (scan/filter/agg/join/window/sort/topk)
-# ---------------------------------------------------------------------------
-
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan + filter + 8-agg groupBy (SURVEY §2 op-8/18)."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= "1998-09-02"
-    )
-    return (
-        l.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                2,
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)          AS sum_qty,
-       round(sum(l_extendedprice), 2)     AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-       round(avg(l_quantity), 4)          AS avg_qty,
-       round(avg(l_extendedprice), 4)     AS avg_price,
-       round(avg(l_discount), 4)          AS avg_disc,
-       count(*)                           AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join + agg; nation/region are broadcast-side dims."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-REVENUE_BY_NATION_SQL = """
-SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
-def order_argmax_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op-10 argmax/top-1 (Language.scala:359-361) as row_number over a
-    deterministic (value desc, key asc) order."""
-    o = _t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select(
-            "o_custkey",
-            F.col("o_orderkey").alias("best_order"),
-            F.round("o_totalprice", 2).alias("best_price"),
-        )
-    )
-
-
-ORDER_ARGMAX_SQL = """
-SELECT o_custkey, o_orderkey AS best_order, round(o_totalprice, 2) AS best_price
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY o_custkey
-                                 ORDER BY o_totalprice DESC, o_orderkey) AS rn
-    FROM orders
-) WHERE rn = 1
-"""
-
-
-def supplier_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op-21 cumulative prefix-scan (TestResult.scala:69-103) as a running-sum
-    window with a fully deterministic order."""
-    # the synthetic lineitem has duplicate (orderkey, linenumber) keys, so
-    # ties are pre-aggregated to make the prefix scan deterministic
-    l = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_suppkey", "l_shipdate", "l_orderkey", "l_linenumber")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    # explicit NULLS LAST: Spark's ASC default is NULLS FIRST, DuckDB's is
-    # NULLS LAST -- a nullable order column silently reorders the prefix
-    # scan between engines unless pinned
-    w = (
-        W.partitionBy("l_suppkey")
-        .orderBy(F.asc_nulls_last("l_shipdate"), "l_orderkey",
-                 "l_linenumber")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return l.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.sum("qty").over(w), 2).alias("running_qty"),
-    )
-
-
-SUPPLIER_RUNNING_SQL = """
-WITH agg AS (
-    SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
-           sum(l_quantity) AS qty
-    FROM lineitem GROUP BY ALL
-)
-SELECT l_suppkey, l_orderkey, l_linenumber,
-       round(sum(qty) OVER (
-           PARTITION BY l_suppkey
-           ORDER BY l_shipdate NULLS LAST, l_orderkey, l_linenumber
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_qty
-FROM agg
-"""
-
-
-# ---------------------------------------------------------------------------
 # Reference-operator parity on `documents`
 # ---------------------------------------------------------------------------
 
@@ -1481,85 +1329,6 @@ WITH toks AS (
 ),
 freq AS (SELECT word, count(*) AS f FROM toks GROUP BY word)
 SELECT f, count(*) AS n_words FROM freq GROUP BY f
-"""
-
-
-# ---------------------------------------------------------------------------
-# Relational breadth: semi/anti joins, set ops, rollup
-# ---------------------------------------------------------------------------
-
-
-def semi_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left-semi (EXISTS) + left-anti (NOT EXISTS) in one result: customers
-    flagged by whether they have any order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey").distinct()
-    with_orders = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", F.lit(True).alias("has_orders")
-    )
-    without = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", F.lit(False).alias("has_orders")
-    )
-    return with_orders.unionAll(without)
-
-
-SEMI_ANTI_SQL = """
-SELECT c_custkey, TRUE AS has_orders FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-UNION ALL
-SELECT c_custkey, FALSE AS has_orders FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
-def set_ops_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT / UNION over part-key sets from two relations."""
-    lp = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").alias("partkey")
-    )
-    pp = _t(spark, sf_dir, "part").select(F.col("p_partkey").alias("partkey"))
-    both = lp.intersect(pp).withColumn("tag", F.lit("both"))
-    only_part = pp.exceptAll(lp.distinct()).withColumn("tag", F.lit("part_only"))
-    return both.unionAll(only_part)
-
-
-SET_OPS_SQL = """
-SELECT partkey, 'both' AS tag FROM (
-    SELECT l_partkey AS partkey FROM lineitem
-    INTERSECT
-    SELECT p_partkey FROM part
-)
-UNION ALL
-SELECT partkey, 'part_only' AS tag FROM (
-    SELECT p_partkey AS partkey FROM part
-    EXCEPT ALL
-    SELECT DISTINCT l_partkey FROM lineitem
-)
-"""
-
-
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP (grouping-sets family) over returnflag/linestatus."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.rollup("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-             F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("linestatus"),
-            "sum_qty", "n",
-        )
-    )
-
-
-ROLLUP_SQL = """
-SELECT coalesce(l_returnflag, '<all>') AS returnflag,
-       coalesce(l_linestatus, '<all>') AS linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       count(*) AS n
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
 
@@ -3367,45 +3136,6 @@ FROM toks t LEFT JOIN vocab v ON t.word = v.word
 """
 
 
-def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate aggregates (HLL distinct + quantile sketch) VALIDATED
-    in-query against their exact twins.  Sketch values are engine-specific
-    (DuckDB cannot reproduce Spark's HLL++ or GK registers), so the
-    contract columns are the exact values plus booleans asserting the
-    sketch error sits inside the published bounds -- HLL++ default rsd 5%,
-    percentile_approx default accuracy 10000 checked against the exact
-    p49..p51 rank window.  If a Spark sketch ever drifts outside its bound
-    the boolean flips and the driver's hash check fails loudly."""
-    l = _t(spark, sf_dir, "lineitem")
-    agg = l.agg(
-        F.countDistinct("l_partkey").alias("exact_parts"),
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.expr("percentile_approx(l_extendedprice, 0.5)").alias("apx_median"),
-        F.expr("percentile(l_extendedprice, 0.49)").alias("p49"),
-        F.expr("percentile(l_extendedprice, 0.51)").alias("p51"),
-    )
-    return agg.select(
-        "exact_parts",
-        (
-            F.abs(F.col("approx_parts") - F.col("exact_parts"))
-            / F.col("exact_parts")
-            <= 0.05
-        ).alias("hll_within_5pct"),
-        (
-            (F.col("apx_median") >= F.col("p49"))
-            & (F.col("apx_median") <= F.col("p51"))
-        ).alias("median_within_1pct_rank"),
-    )
-
-
-APPROX_AGG_SQL = """
-SELECT count(DISTINCT l_partkey) AS exact_parts,
-       TRUE AS hll_within_5pct,
-       TRUE AS median_within_1pct_rank
-FROM lineitem
-"""
-
-
 def axiom_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op-19 (TrainingResult.scala:66-79): per language, axiom count vs
     induction count with score != 0.0, over the mean-adjust fold's final
@@ -3485,71 +3215,6 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 STREAMING_DEDUP_SQL = """
 SELECT DISTINCT md5(text) AS text_hash FROM documents
-"""
-
-
-def cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE — the full grouping-sets lattice (rollup_revenue covers the
-    prefix lattice; CUBE adds the (NULL, linestatus) cells)."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.cube("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-             F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("<all>")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("<all>")).alias("linestatus"),
-            "sum_price", "n",
-        )
-    )
-
-
-CUBE_SQL = """
-SELECT coalesce(l_returnflag, '<all>') AS returnflag,
-       coalesce(l_linestatus, '<all>') AS linestatus,
-       round(sum(l_extendedprice), 2) AS sum_price,
-       count(*) AS n
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def full_outer_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join — per-nation counts of a sparse customer subset vs a
-    sparse supplier subset, so both unmatched sides actually occur."""
-    c = (
-        _t(spark, sf_dir, "customer").filter("c_custkey % 5 = 0")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_cust"))
-    )
-    s = (
-        _t(spark, sf_dir, "supplier").filter("s_suppkey % 7 = 0")
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_supp"))
-    )
-    return (
-        c.join(s, "nationkey", "full_outer")
-        .select(
-            "nationkey",
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-        )
-    )
-
-
-FULL_OUTER_SQL = """
-WITH c AS (
-    SELECT c_nationkey AS nationkey, count(*) AS n_cust
-    FROM customer WHERE c_custkey % 5 = 0 GROUP BY 1
-),
-s AS (
-    SELECT s_nationkey AS nationkey, count(*) AS n_supp
-    FROM supplier WHERE s_suppkey % 7 = 0 GROUP BY 1
-)
-SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-       coalesce(c.n_cust, 0) AS n_cust,
-       coalesce(s.n_supp, 0) AS n_supp
-FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
 """
 
 
@@ -4704,88 +4369,6 @@ WHERE levenshtein(a.text, b.text) <= 3
 """
 
 
-def revenue_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-calendar-day revenue per customer via a RANGE window
-    frame — the value-based frame class (peers included, frame bounded by
-    the ORDER-BY VALUE not the row offset) that the ROWS-frame queries
-    (running totals, cumsum) don't exercise.  Order key = integer days
-    since epoch, so the frame arithmetic is exact on both engines
-    (Spark's interval-range and DuckDB's differ in type plumbing; the
-    day-index form is engine-portable).
-
-    Scale shape: window partitioned by customer — bounded skew, no
-    global sort.  NULL order dates are filtered (a RANGE frame over a
-    NULL key is an engine-specific peer-group edge; the NULL-laden edge
-    fixture exercises the filter)."""
-    o = _t(spark, sf_dir, "orders").filter("o_orderdate IS NOT NULL")
-    day = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01"))
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy(day.cast("long"))
-        .rangeBetween(-6, 0)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("rev_7d"),
-        F.count("*").over(w).alias("n_7d"),
-    )
-
-
-REVENUE_RANGE_WINDOW_SQL = """
-SELECT o_orderkey, o_custkey, o_orderdate,
-       round(sum(o_totalprice) OVER w, 2) AS rev_7d,
-       count(*) OVER w AS n_7d
-FROM orders
-WHERE o_orderdate IS NOT NULL
-WINDOW w AS (
-    PARTITION BY o_custkey
-    ORDER BY date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW
-)
-"""
-
-
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — the arbitrary-lattice form that rollup
-    (prefix lattice) and cube (full lattice) don't cover: the
-    (returnflag x linestatus) detail cells plus the linestatus-only
-    marginals, and nothing else.  grouping() indicator columns keep
-    aggregated-out cells distinct from genuine NULL group keys (the
-    NULL-laden edge fixture nulls l_returnflag), so no coalesce
-    conflation.
-
-    Scale shape: Expand + one hash aggregate, map-side combined — the
-    same shape as rollup/cube, output bounded by the value lattice."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.groupingSets(
-            [["l_returnflag", "l_linestatus"], ["l_linestatus"]],
-            "l_returnflag",
-            "l_linestatus",
-        )
-        .agg(
-            F.grouping("l_returnflag").cast("long").alias("rf_aggregated"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-            F.count("*").alias("n"),
-        )
-        .select(
-            "l_returnflag", "l_linestatus", "rf_aggregated", "sum_price", "n"
-        )
-    )
-
-
-GROUPING_SETS_REVENUE_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(grouping(l_returnflag) AS BIGINT) AS rf_aggregated,
-       round(sum(l_extendedprice), 2) AS sum_price,
-       count(*) AS n
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus))
-"""
-
-
 def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH parameter-tuning readout: the SAME 12-hash MinHash signature
     set banded three ways — (2 bands x 6 rows), (3 x 4, the production
@@ -4942,17 +4525,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "conv_quality_report": conv_quality_report,
     "axiom_distribution": axiom_distribution,
     "confusion_matrix": confusion_matrix,
-    "approx_aggregates": approx_aggregates,
     "doc_fingerprint": doc_fingerprint,
     "holdout_split": holdout_split,
     "langid_hashed_ngram": langid_hashed_ngram,
-    "revenue_by_nation": revenue_by_nation,
-    "supplier_running_total": supplier_running_total,
-    "order_argmax_per_customer": order_argmax_per_customer,
-    "cube_revenue": cube_revenue,
-    "semi_anti_customers": semi_anti_customers,
-    "set_ops_parts": set_ops_parts,
-    "rollup_revenue": rollup_revenue,
     "tfidf_top_terms": tfidf_top_terms,
     "mixture_rates": mixture_rates,
     "doc_repetition": doc_repetition,
@@ -4969,14 +4544,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bm25_topk": bm25_topk,
     "heavy_hitters": heavy_hitters,
     "source_pagerank": source_pagerank,
-    "full_outer_nation_counts": full_outer_nation_counts,
     "normalize_text": normalize_text,
     "collocations_lift": collocations_lift,
     "substring_dup_pairs": substring_dup_pairs,
     "word_freq_spectrum": word_freq_spectrum,
     "source_overlap": source_overlap,
     "code_switch_segments": code_switch_segments,
-    "q1_pricing_summary": q1_pricing_summary,
     "lang_resolution": lang_resolution,
     "tokenize_explode": tokenize_explode,
     "tokenize_per_char": tokenize_per_char,
@@ -4997,8 +4570,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "token_budget_select": token_budget_select,
     "vocab_drift_psi": vocab_drift_psi,
     "ngram_coverage_curve": ngram_coverage_curve,
-    "revenue_range_window": revenue_range_window,
-    "grouping_sets_revenue": grouping_sets_revenue,
     "lsh_band_sweep": lsh_band_sweep,
     "accuracy_metrics": accuracy_metrics,
     "dedup_exact": dedup_exact,
@@ -5023,13 +4594,7 @@ ORACLE_SQL: dict[str, str] = {
     "vocab_drift_psi": VOCAB_DRIFT_PSI_SQL,
     "ngram_coverage_curve": NGRAM_COVERAGE_CURVE_SQL,
     "dedup_edit_distance": DEDUP_EDIT_DISTANCE_SQL,
-    "revenue_range_window": REVENUE_RANGE_WINDOW_SQL,
-    "grouping_sets_revenue": GROUPING_SETS_REVENUE_SQL,
     "lsh_band_sweep": LSH_BAND_SWEEP_SQL,
-    "q1_pricing_summary": Q1_SQL,
-    "revenue_by_nation": REVENUE_BY_NATION_SQL,
-    "order_argmax_per_customer": ORDER_ARGMAX_SQL,
-    "supplier_running_total": SUPPLIER_RUNNING_SQL,
     "lang_resolution": LANG_RESOLUTION_SQL,
     "tokenize_explode": TOKENIZE_EXPLODE_SQL,
     "tokenize_per_char": TOKENIZE_PER_CHAR_SQL,
@@ -5041,9 +4606,6 @@ ORACLE_SQL: dict[str, str] = {
     "doc_token_stats": DOC_TOKEN_STATS_SQL,
     "doc_quality_score": DOC_QUALITY_SQL,
     "pipeline_scrub": PIPELINE_SCRUB_SQL,
-    "semi_anti_customers": SEMI_ANTI_SQL,
-    "set_ops_parts": SET_OPS_SQL,
-    "rollup_revenue": ROLLUP_SQL,
     "langid_hashed_ngram": LANGID_HASHED_SQL,
     "dedup_ngram_jaccard": DEDUP_NGRAM_SQL,
     "dedup_minhash_lsh": DEDUP_MINHASH_SQL,
@@ -5057,7 +4619,6 @@ ORACLE_SQL: dict[str, str] = {
     "holdout_split": HOLDOUT_SPLIT_SQL,
     "confusion_matrix": CONFUSION_SQL,
     "mean_adjust_fold": MEAN_ADJUST_SQL,
-    "approx_aggregates": APPROX_AGG_SQL,
     "axiom_distribution": AXIOM_DIST_SQL,
     "langid_fasttext": LANGID_FASTTEXT_SQL,
     "pipeline_keep": PIPELINE_KEEP_SQL,
@@ -5065,8 +4626,6 @@ ORACLE_SQL: dict[str, str] = {
     "conv_export": CONV_EXPORT_SQL,
     "word_cumsum": WORD_CUMSUM_SQL,
     "streaming_dedup": STREAMING_DEDUP_SQL,
-    "cube_revenue": CUBE_SQL,
-    "full_outer_nation_counts": FULL_OUTER_SQL,
     "tfidf_top_terms": TFIDF_TOP_TERMS_SQL,
     "doc_char_entropy": DOC_CHAR_ENTROPY_SQL,
     "inverted_index": INVERTED_INDEX_SQL,

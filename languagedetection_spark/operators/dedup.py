@@ -3,7 +3,8 @@
 Four families, all deterministic and engine-portable (hashes are md5-based so
 a DuckDB oracle can reproduce them bit-for-bit):
 
-* exact          -- hash-groupBy on the full text.
+* exact          -- hash-groupBy on the text md5, keeping the first turn
+                    per text (``dedup_exact_keep_first``).
 * ngram_jaccard  -- exact Jaccard over distinct word-3-gram shingles via a
                     shingle self-join (candidates = pairs sharing >= 1
                     shingle).  At 100 TB, prune ultra-frequent shingles
@@ -58,14 +59,6 @@ def shingle_df(docs: DataFrame, id_col: str = "doc_id",
                 F.explode(shingles).alias("shingle"))
         .distinct()
     )
-
-
-def dedup_exact_df(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    return docs.groupBy(text_col).agg(
-        F.min(id_col).alias("keep_doc_id"),
-        F.count("*").alias("n_copies"),
-    ).select("keep_doc_id", "n_copies")
 
 
 def _verify_jaccard(pairs: DataFrame, shingles: DataFrame,

@@ -30,14 +30,6 @@ FP_BASE = 131
 BPE_REGEX = r"'[a-z]+|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 
 
-def fingerprint_py(text: str) -> int:
-    """Reference implementation (oracle for tests)."""
-    h = 0
-    for c in text:
-        h = (h * FP_BASE + ord(c)) % FP_MOD
-    return h
-
-
 def fingerprint_df(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     def run(batches):

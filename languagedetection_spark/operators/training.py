@@ -1,23 +1,14 @@
-"""Distributed semi-supervised training fold (EP-2, SURVEY §3/§7 item 8).
+"""Distributed training: the frozen filter model and the reference's
+semi-supervised fold (EP-2, SURVEY §3/§7 item 8).
 
-The reference trains ONLINE: each classification mutates the vocabulary the
-next one reads (Language.scala:335-341), which is inherently sequential.
-This operator makes it distributable with micro-batch synchronous updates:
-
-1. axioms are loaded from the labeled split (distributed explode/gate),
-2. the unlabeled stream is globally ordered by (order_cols),
-3. per micro-batch: every sample is classified AGAINST THE BATCH-START
-   VOCABULARY SNAPSHOT in parallel (one broadcast, one map-only job,
-   returning winner/tokens/total/n per sample),
-4. the driver applies the mean-adjust updates IN SAMPLE ORDER to the
-   vocabulary dict (cheap: model-sized state), then re-broadcasts.
-
-``batch_size=1`` reproduces the reference fold EXACTLY (each sample sees
-every prior update -- verified against the pure oracle).  Larger batches
-trade fidelity for parallelism: within a batch, samples don't see each
-other's updates (batch-synchronous approximation, the standard
-parameter-server trade).  Convergence-sensitive users pick the batch size;
-the default favors throughput.
+* ``axiom_rows_df`` / ``trigram_counts_df`` / ``build_model_distributed``
+  build the frozen ``FilterModel`` from a corpus DataFrame; only the
+  model-sized aggregates reach the driver.
+* ``train_fold_streamed`` is the reference's ONLINE mean-adjust fold
+  (Language.scala:335-364), where each classification mutates the
+  vocabulary the next one reads.  Micro-batches are classified in
+  parallel against a vocabulary snapshot and stale samples are replayed
+  on the driver, so the fold is bit-exact at ANY batch size.
 """
 
 from __future__ import annotations
@@ -351,44 +342,3 @@ def _apply_batch_exact(
                 touched[winner].update(tokens)
     return replays
 
-
-def train_fold_distributed(
-    spark: SparkSession,
-    labeled: list[tuple[str, str]],
-    unlabeled: list[tuple[str, str]],
-    batch_size: int = 256,
-) -> Vocabulary:
-    """labeled/unlabeled: ordered (language_or_none, text) rows.  For
-    unlabeled rows the language element is the ground-truth label (unused by
-    training, kept for caller bookkeeping).  Returns the final Vocabulary.
-
-    batch_size=1 == the reference's per-sample online fold, bit-for-bit
-    (tests/test_training_fold.py); larger batches are batch-synchronous.
-    """
-    v = Vocabulary()
-    for lang, text in labeled:
-        v.load_labeled(lang, text)
-
-    texts = [(i, text) for i, (_lang, text) in enumerate(unlabeled)]
-    for start in range(0, len(texts), batch_size):
-        chunk = texts[start:start + batch_size]
-        results = _classify_batch_distributed(spark, chunk, v.entries)
-        # apply updates in sample order (Language.scala:350-364 semantics:
-        # inductions for ALL gated languages, then winner mean-adjust) --
-        # NOTE: with batch_size > 1 only the winner-language inductions are
-        # shipped back (the gate results of non-winning languages are
-        # recomputed driver-side to stay faithful)
-        for (seq, winner, tokens, total, n), (_i, text) in zip(
-            results, chunk
-        ):
-            # faithful per-sample mutation against the CURRENT state
-            for lang in LANGUAGES:
-                v.load_nonlabeled(lang, text)
-            if n > ADJUST_THRESHOLD:
-                vocab = v.entries[winner]
-                mean = total / n
-                for t in tokens:
-                    score, is_axiom = vocab[t]
-                    if not is_axiom:
-                        vocab[t] = ((score + mean) / 2.0, False)
-    return v

@@ -1,9 +1,7 @@
 """Structured Streaming face of the quality filter.
 
-The reference has no streams (SURVEY §2 'Streaming: none'), but its
-continuous-learning loop (op-12 applied per classification, Demo.scala:76-79)
-is morally a stateful stream: state = vocabulary keyed by language, updated
-per arriving sample in arrival order.  This module provides:
+The reference has no streams (SURVEY §2 'Streaming: none'); the filter's
+row-local decisions run unchanged on a stream.  This module provides:
 
 * ``stream_transcripts``        -- readStream over a transcripts directory.
 * ``streaming_quality_filter``  -- the SAME mapInPandas decision kernel
@@ -12,9 +10,6 @@ per arriving sample in arrival order.  This module provides:
   rates per language (late data handled by the watermark).
 * ``run_batch_to_memory``       -- test/demo driver: processAllAvailable
   against a memory sink.
-
-The online mean-adjust analogue (applyInPandasWithState keyed by language)
-lives in online_learning.py.
 """
 
 from __future__ import annotations

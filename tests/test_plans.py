@@ -45,10 +45,14 @@ def test_filter_pushdown_and_column_pruning(spark):
 
 
 def test_small_dims_are_broadcast(spark):
-    from languagedetection_spark.entry_queries import revenue_by_nation
+    """The language dim joins `documents` by broadcast, so the big side is
+    never shuffled for it."""
+    from languagedetection_spark.entry_queries import lang_resolution
 
-    plan = _plan(revenue_by_nation(spark, SF))
+    plan = _plan(lang_resolution(spark, SF))
     assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_classify_vocab_join_is_broadcast(spark):
@@ -336,26 +340,6 @@ def test_r4_query_plans_scale_shapes(spark):
 
     plan = _plan(token_budget_select(spark, SF))
     assert "SinglePartition" not in plan, plan
-
-
-def test_r4_batch5_query_plans(spark):
-    """Later r4 additions:
-
-    * revenue_range_window -- the RANGE frame partitions by customer,
-      never a SinglePartition global sort;
-    * grouping_sets_revenue -- Expand + map-side partial aggregation
-      (the rollup/cube shape, lattice-bounded output)."""
-    from languagedetection_spark.entry_queries import (
-        grouping_sets_revenue,
-        revenue_range_window,
-    )
-
-    plan = _plan(revenue_range_window(spark, SF))
-    assert "SinglePartition" not in plan, plan
-
-    plan = _plan(grouping_sets_revenue(spark, SF))
-    assert "Expand" in plan, plan
-    assert "partial" in plan.lower(), plan
 
 
 def test_conv_export_plan(spark):

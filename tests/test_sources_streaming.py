@@ -380,94 +380,6 @@ def test_streaming_windowed_rates(spark, fixture_dir, oracle_model,
     assert all(r["n_kept"] <= r["n_turns"] for r in rows)
 
 
-def test_online_mean_adjust_stateful(spark, tmp_path):
-    from languagedetection_spark.streaming.online_learning import (
-        INPUT_SCHEMA, online_mean_adjust,
-    )
-    from languagedetection_spark.streaming.pipeline import run_batch_to_memory
-
-    src = str(tmp_path / "updates")
-    os.makedirs(src)
-    batch = spark.createDataFrame(
-        [
-            ("english", 1, ["aa", "bb", "cc", "dd", "ee", "ff", "gg"], 6.0, 7),
-            ("english", 2, ["gg", "hh"], 1.0, 2),  # n <= 6: insert only
-            ("french", 1, ["un", "deux"], 0.0, 2),
-        ],
-        INPUT_SCHEMA,
-    )
-    batch.write.parquet(src, mode="overwrite")
-    stream = spark.readStream.schema(INPUT_SCHEMA).parquet(src)
-    out = online_mean_adjust(stream)
-    run_batch_to_memory(out, "adj_out", output_mode="update")
-    rows = {r["language"]: r for r in spark.sql("SELECT * FROM adj_out").collect()}
-    assert rows["english"]["vocab_size"] == 8  # aa..gg + hh
-    assert rows["english"]["adjusted"] == 7    # only the n=7 event adjusts
-    assert rows["french"]["adjusted"] == 0
-
-
-def test_online_mean_adjust_transform_with_state(spark, tmp_path):
-    """The transformWithStateInPandas variant (Spark 4.x successor API)
-    produces the same per-language results as applyInPandasWithState.
-    Runs only where google.protobuf (the TWS state protocol) exists; in
-    environments without it the operator must raise a clear ImportError."""
-    from languagedetection_spark.streaming.online_learning import (
-        INPUT_SCHEMA, online_mean_adjust_tws,
-    )
-    from languagedetection_spark.streaming.pipeline import run_batch_to_memory
-
-    src = str(tmp_path / "updates_tws")
-    os.makedirs(src)
-    batch = spark.createDataFrame(
-        [
-            ("english", 1, ["aa", "bb", "cc", "dd", "ee", "ff", "gg"], 6.0, 7),
-            ("english", 2, ["gg", "hh"], 1.0, 2),  # n <= 6: insert only
-            ("french", 1, ["un", "deux"], 0.0, 2),
-        ],
-        INPUT_SCHEMA,
-    )
-    batch.write.parquet(src, mode="overwrite")
-    stream = spark.readStream.schema(INPUT_SCHEMA).parquet(src)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            online_mean_adjust_tws(stream)
-        return
-    out = online_mean_adjust_tws(stream)
-    run_batch_to_memory(out, "adj_tws_out", output_mode="update")
-    rows = {r["language"]: r
-            for r in spark.sql("SELECT * FROM adj_tws_out").collect()}
-    assert rows["english"]["vocab_size"] == 8
-    assert rows["english"]["adjusted"] == 7
-    assert rows["french"]["adjusted"] == 0
-
-
-def test_tws_fold_logic_equals_apply_variant():
-    """The shared micro-batch fold both streaming variants delegate to:
-    seq-ordered induction inserts + n>6 mean-adjust (Language.scala:62,
-    192,254-255), checked against a hand-computed trace."""
-    import pandas as pd
-
-    from languagedetection_spark.streaming.online_learning import _adjust_rows
-
-    vocab = {}
-    rows = pd.DataFrame({
-        "seq": [2, 1],  # delivered out of order; fold must sort
-        "tokens": [["gg", "hh"],
-                   ["aa", "bb", "cc", "dd", "ee", "ff", "gg"]],
-        "total": [1.0, 6.0],
-        "n": [2, 7],
-    })
-    adjusted = _adjust_rows(vocab, rows)
-    # seq=1 first: 7 inserts at 0.0 then adjust to (0 + 6/7)/2 each
-    # seq=2: gg exists, hh inserted at 0.0; n=2 <= 6 -> no adjust
-    assert adjusted == 7
-    assert len(vocab) == 8
-    assert abs(vocab["aa"] - (6.0 / 7) / 2) < 1e-15
-    assert vocab["hh"] == 0.0
-
-
 def test_filter_job_rejects_nested_conv_report(tmp_path):
     """ADVICE r2: a --conv-report target nested under --output would be
     re-ingested as input on a rerun (the streaming branch reads the sink

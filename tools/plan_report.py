@@ -25,7 +25,6 @@ FEATURES = [
     ("ObjectHashAggregate", "obj-hash-agg"),
     ("SortAggregate", "sort-agg"),
     ("Generate", "explode"),
-    ("Expand", "expand/rollup"),
 ]
 
 
