@@ -3044,6 +3044,9 @@ def conv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("keep")
         .select("doc_id")
         .join(d, "doc_id")
+        # a conv whose kept texts are all NULL would export '' from
+        # array_join but NULL from the twin's string_agg
+        .filter(F.col("text").isNotNull())
         .select("source", "doc_id", "text")
     )
     return (
@@ -3067,7 +3070,7 @@ WITH decisions AS ({PIPELINE_KEEP_SQL})
 , kept AS (
     SELECT d.source AS conv_id, d.doc_id, d.text
     FROM documents d JOIN decisions k ON k.doc_id = d.doc_id
-    WHERE k.keep
+    WHERE k.keep AND d.text IS NOT NULL
 )
 SELECT conv_id,
        count(*) AS n_turns_kept,

@@ -10,7 +10,8 @@ Reads transcripts (Parquet path or Iceberg identifier), builds/loads the
 frozen model, and processes per-conv_id hash buckets with checkpoint/resume
 and per-bucket lineage (sources/checkpoint.py).  With more than one bucket
 to run, the input (deduped, with --dedup) is staged once under --checkpoint,
-partitioned by bucket, and each bucket reads only its own partition; the
+rebalanced and partitioned by bucket, and each bucket reads only its own
+partition; up to defaultParallelism bucket writes run at once, and the
 lineage metrics are observed on each bucket's write.  Killing the job
 mid-run and re-submitting with the same --checkpoint/--run-id resumes
 exactly where it stopped, reusing the staged input; completed buckets are

@@ -16,13 +16,17 @@ resume after failure); each bucket's output is written to its own
 subdirectory, so a partially-written bucket is simply overwritten on retry
 (overwrite-by-partition idempotency).  The model fingerprint ties every
 bucket's output to the exact broadcast artifact that produced it (lineage).
+Up to ``defaultParallelism`` bucket writes run at once, each on its own
+thread; the buckets are planned in order on the calling thread.
 
 When more than one bucket is left to run, the input is first staged once
-under the checkpoint dir, partitioned by bucket:
+under the checkpoint dir, rebalanced on the bucket column and partitioned
+by it:
 
     <checkpoint>/_staged/<run_id>/_bucket=<b>/part-*.parquet
 
-and each bucket reads only its own ``_bucket=<b>`` directory.  The staging
+so a bucket dir holds one file, or one per advisory partition size when
+the bucket is large, and each bucket reads only its own dir.  The staging
 is recorded in its own ``_progress`` row (``<run_id>-staged.json``:
 run_id, status "staged", n_buckets, path, finished_at), so a resume with
 the same bucket count reuses the staged files; the staged dir is deleted
@@ -36,8 +40,10 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..refmodel.quality import DROP_REASONS
 
@@ -129,7 +135,11 @@ def _staged_input(bucketed: DataFrame, checkpoint_dir: str, run_id: str,
         row_path = os.path.join(_progress_path(checkpoint_dir), row_name)
         if os.path.exists(row_path):
             os.remove(row_path)
-        bucketed.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+        # the rebalance gives each bucket dir one file, or several when the
+        # bucket is larger than AQE's advisory partition size, instead of
+        # one per scan task (each file is a split, so a Python task)
+        (bucketed.hint("rebalance", "_bucket").write.mode("overwrite")
+         .partitionBy("_bucket").parquet(path))
         _write_row(checkpoint_dir, row_name,
                    {"run_id": run_id, "status": "staged",
                     "n_buckets": n_buckets, "path": path,
@@ -181,6 +191,15 @@ def _bucket_metrics(obs: Observation, columns: list[str]) -> dict:
     return metrics
 
 
+def _inheriting(spark: SparkSession, fn):
+    """*fn*, to run on another thread with this thread's job group, local
+    properties and tags as they are now."""
+    wrap = inheritable_thread_target(spark)
+    # with unpinned threads (PYSPARK_PIN_THREAD=false) there is no thread
+    # state to carry over, and PySpark hands the session itself back
+    return fn if wrap is spark else wrap(fn)
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     df: DataFrame,
@@ -192,13 +211,21 @@ def run_with_checkpoint(
     key: str = "conv_id",
     extra_lineage: dict | None = None,
 ) -> list[int]:
-    """Process ``df`` bucket-by-bucket with resume.  Returns the buckets
-    processed in THIS invocation (completed ones are skipped).
+    """Process ``df`` bucket by bucket, with up to ``defaultParallelism``
+    bucket writes in flight, and resume.  Returns the buckets processed in
+    THIS invocation (completed ones are skipped), sorted.
 
     Buckets are ``crc32(key) % n_buckets`` so membership is stable across
     runs and engines.  With more than one bucket to run, ``df`` is
     evaluated once, into the staged copy (see the module docstring), and
-    each bucket's filter prunes that copy by partition."""
+    each bucket's filter prunes that copy by partition.
+
+    ``process`` is called on the calling thread, in bucket order, when a
+    write slot is free; each bucket's write, lineage and ``_progress`` row
+    run on a pool thread.  On the first error, from ``process`` or from a
+    write, no further bucket is planned: the running writes finish and
+    commit, then the error is raised (of several failed writes, the lowest
+    bucket's)."""
     done = load_completed(spark, checkpoint_dir, run_id)
     todo = [b for b in range(n_buckets) if b not in done]
     bucketed = df.withColumn(
@@ -206,10 +233,8 @@ def run_with_checkpoint(
     )
     source = _staged_input(bucketed, checkpoint_dir, run_id, n_buckets,
                            len(todo))
-    processed = []
-    for b in todo:
-        part = source.filter(F.col("_bucket") == b).drop("_bucket")
-        out, obs = _observe_lineage(process(part))
+
+    def write(b: int, out: DataFrame, obs: Observation) -> int:
         dest = os.path.join(output_dir, f"bucket={b}")
         out.write.mode("overwrite").parquet(dest)
         record_done(
@@ -217,6 +242,23 @@ def run_with_checkpoint(
             {**_bucket_metrics(obs, out.columns), "output": dest,
              **(extra_lineage or {})},
         )
-        processed.append(b)
+        return b
+
+    slots = max(1, min(len(todo), spark.sparkContext.defaultParallelism))
+    writes, running = [], set()
+    with ThreadPoolExecutor(max_workers=slots) as pool:
+        for b in todo:
+            if len(running) == slots:
+                wait(running, return_when=FIRST_COMPLETED)
+            finished = {w for w in running if w.done()}
+            running -= finished
+            if any(w.exception() for w in finished):
+                break
+            part = source.filter(F.col("_bucket") == b).drop("_bucket")
+            out, obs = _observe_lineage(process(part))
+            w = pool.submit(_inheriting(spark, write), b, out, obs)
+            writes.append(w)
+            running.add(w)
+    processed = [w.result() for w in writes]
     shutil.rmtree(_staging_path(checkpoint_dir, run_id), ignore_errors=True)
     return processed

@@ -202,6 +202,155 @@ def test_checkpoint_single_bucket_left_is_not_staged(spark, fixture_dir,
     assert not os.path.exists(os.path.join(ck, "_staged"))
 
 
+def test_checkpoint_process_error_lets_running_writes_commit(
+        spark, fixture_dir, tmp_path):
+    """``process`` failing on bucket 6 of 8 plans no further bucket; the
+    writes already running (buckets 0-5) finish and commit, and a resume
+    runs exactly the rest."""
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, run_with_checkpoint,
+    )
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    calls = {"n": 0}
+
+    def failing(part):
+        calls["n"] += 1
+        if calls["n"] == 7:
+            raise RuntimeError("boom")
+        return part
+
+    with pytest.raises(RuntimeError, match="boom"):
+        run_with_checkpoint(spark, df, failing, out, ck, "a", n_buckets=8)
+    assert calls["n"] == 7
+    assert load_completed(spark, ck, "a") == set(range(6))
+    assert run_with_checkpoint(spark, df, lambda part: part, out, ck, "a",
+                               n_buckets=8) == [6, 7]
+    clean = str(tmp_path / "clean")
+    run_with_checkpoint(spark, df, lambda part: part, clean,
+                        str(tmp_path / "ck2"), "a", n_buckets=8)
+    a = sorted(map(tuple, spark.read.parquet(out + "/bucket=*").collect()))
+    b = sorted(map(tuple, spark.read.parquet(clean + "/bucket=*").collect()))
+    assert a == b and len(a) == df.count()
+
+
+def test_checkpoint_write_error_marks_no_row(spark, fixture_dir, tmp_path):
+    """A bucket whose write fails raises out of the run and gets no
+    ``_progress`` row; every bucket marked done has its output dir, and a
+    resume runs exactly the buckets not marked done."""
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, run_with_checkpoint,
+    )
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    calls = {"n": 0}
+
+    def broken(batches):
+        for _ in batches:
+            raise ValueError("bucket 3 write failed")
+        yield from ()
+
+    def failing(part):
+        calls["n"] += 1
+        if calls["n"] == 4:  # bucket 3
+            return part.mapInPandas(broken, part.schema)
+        return part
+
+    with pytest.raises(Exception, match="bucket 3 write failed"):
+        run_with_checkpoint(spark, df, failing, out, ck, "w", n_buckets=8)
+    done = load_completed(spark, ck, "w")
+    assert 3 not in done
+    assert not os.path.exists(os.path.join(ck, "_progress", "w-3.json"))
+    for b in done:
+        assert os.path.isdir(os.path.join(out, f"bucket={b}"))
+    rest = sorted(set(range(8)) - done)
+    assert run_with_checkpoint(spark, df, lambda part: part, out, ck, "w",
+                               n_buckets=8) == rest
+    n = spark.read.parquet(*[f"{out}/bucket={b}" for b in range(8)]).count()
+    assert n == df.count()
+
+
+def test_checkpoint_bucket_writes_overlap(spark, fixture_dir, tmp_path):
+    """Bucket writes run side by side: with a slow Python map, at least
+    two buckets' tasks are in flight at the same time."""
+    import glob
+    import time
+
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    log = tmp_path / "log"
+    log.mkdir()
+    calls = {"n": 0}
+
+    def proc(part):
+        b = calls["n"]
+        calls["n"] += 1
+
+        def slow(batches):
+            start = time.time()
+            rows = list(batches)
+            time.sleep(0.3)
+            with open(os.path.join(str(log), f"{b}-{start}"), "w") as f:
+                f.write(f"{b} {start} {time.time()}\n")
+            yield from rows
+
+        return part.mapInPandas(slow, part.schema)
+
+    run_with_checkpoint(spark, df, proc, str(tmp_path / "out"),
+                        str(tmp_path / "ck"), "o", n_buckets=4)
+    spans = {}
+    for p in glob.glob(os.path.join(str(log), "*")):
+        with open(p) as f:
+            b, start, end = f.read().split()
+        lo, hi = spans.get(int(b), (float("inf"), 0.0))
+        spans[int(b)] = (min(lo, float(start)), max(hi, float(end)))
+    assert sorted(spans) == [0, 1, 2, 3]
+    assert any(spans[a][0] < spans[b][1] and spans[b][0] < spans[a][1]
+               for a in spans for b in spans if a < b), spans
+
+
+def test_checkpoint_runs_with_unpinned_threads(spark, monkeypatch,
+                                               tmp_path):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(session)``
+    returns the session itself; the bucket writes must still run."""
+    from languagedetection_spark.sources import checkpoint
+
+    monkeypatch.setattr(checkpoint, "inheritable_thread_target",
+                        lambda session: session)
+    df = spark.createDataFrame([(f"c{i}", "x") for i in range(20)],
+                               "conv_id string, text string")
+    assert checkpoint.run_with_checkpoint(
+        spark, df, lambda part: part, str(tmp_path / "out"),
+        str(tmp_path / "ck"), "u", n_buckets=4) == [0, 1, 2, 3]
+
+
+def test_checkpoint_stages_one_file_per_bucket(spark, fixture_dir, tmp_path):
+    """An input of several files stages to one file per small bucket (the
+    staging write is rebalanced on ``_bucket``), so each bucket's scan is
+    one split."""
+    from languagedetection_spark.sources.checkpoint import run_with_checkpoint
+
+    src = str(tmp_path / "src")
+    (spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+     .repartition(4).write.parquet(src))
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) >= 4
+    df = spark.read.parquet(src)
+    ck = str(tmp_path / "ck")
+
+    def failing(part):
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError):
+        run_with_checkpoint(spark, df, failing, str(tmp_path / "out"), ck,
+                            "s", n_buckets=4)
+    staged = _staged_files(ck, "s")
+    dirs = [os.path.basename(os.path.dirname(p)) for p in staged]
+    assert sorted(dirs) == [f"_bucket={b}" for b in range(4)], staged
+
+
 def test_checkpoint_observed_lineage_matches_reread(spark, fixture_dir,
                                                     oracle_model, tmp_path):
     """Differential: the lineage metrics observed on each bucket's write
