@@ -26,7 +26,6 @@ BENCH_QUERIES = [
     "doc_token_stats",
     "pipeline_scrub",
     "dedup_minhash_lsh",
-    "dedup_simhash",
     "sample_stratified",
     "decontaminate",
     "tfidf_top_terms",
@@ -34,18 +33,14 @@ BENCH_QUERIES = [
     "inverted_index",
     "normalize_text",
     "collocations_lift",
-    "substring_dup_pairs",
     "word_freq_spectrum",
     "sequence_packing",
     "mixture_rates",
     "doc_repetition",
     "lm_perplexity",
-    "dedup_keep_best",
     "importance_weights",
     "bloom_decontaminate",
     "bpe_merges",
-    "containment_pairs",
-    "segment_dedup",
     "doc_chunks",
     "nb_quality_score",
     "lm_bigram_ppl",
@@ -62,7 +57,6 @@ BENCH_QUERIES = [
     "token_budget_select",
     "vocab_drift_psi",
     "ngram_coverage_curve",
-    "dedup_edit_distance",
     "lsh_band_sweep",
     "conv_export",
 ]  # streaming_* excluded: streaming-query startup dominates

@@ -71,8 +71,6 @@ def main(argv: list[str] | None = None) -> int:
                         "rate, dominant language, mean perplexity per "
                         "conv_id) to this parquet path, computed from the "
                         "completed per-turn output")
-    p.add_argument("--fail-after", type=int, default=None,
-                   help="TESTING: raise after N buckets to exercise resume")
     p.add_argument("--dedup", choices=["exact", "minhash"], default=None,
                    help="corpus-wide dedup stage before scoring: 'exact' "
                         "keeps the (conv_id, turn_idx)-minimal turn per "
@@ -216,16 +214,9 @@ def main(argv: list[str] | None = None) -> int:
 
         df = dedup_minhash_keep_first(df, threshold=args.dedup_threshold)
 
-    count = {"n": 0}
-
-    def process(part):
-        count["n"] += 1
-        if args.fail_after is not None and count["n"] > args.fail_after:
-            raise RuntimeError(f"injected failure after {args.fail_after} buckets")
-        return quality_filter(part, bc)
-
     processed = run_with_checkpoint(
-        spark, df, process, args.output, args.checkpoint, args.run_id,
+        spark, df, lambda part: quality_filter(part, bc), args.output,
+        args.checkpoint, args.run_id,
         n_buckets=args.buckets,
         extra_lineage={"model_fingerprint": fp, "input_path": args.input},
     )

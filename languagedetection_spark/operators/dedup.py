@@ -1,25 +1,24 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, all deterministic and engine-portable (hashes are md5-based so
-a DuckDB oracle can reproduce them bit-for-bit):
+One implementation per ``filter_job --dedup`` choice, plus the
+decontamination pair; all deterministic and engine-portable (hashes are
+md5-based so a DuckDB oracle can reproduce them bit-for-bit):
 
 * exact          -- hash-groupBy on the text md5, keeping the first turn
                     per text (``dedup_exact_keep_first``).
-* ngram_jaccard  -- exact Jaccard over distinct word-3-gram shingles via a
-                    shingle self-join (candidates = pairs sharing >= 1
-                    shingle).  At 100 TB, prune ultra-frequent shingles
-                    (they generate quadratic candidates) before the join;
-                    the operator takes ``max_shingle_freq`` for that.
-* minhash_lsh    -- K min-hashes from ONE md5 per shingle (affine family
+* minhash        -- K min-hashes from ONE md5 per shingle (affine family
                     over the digest's lower 64 bits, = DuckDB's
                     md5_number_lower), banded into B bands of R rows; docs
                     sharing a band key are candidates, then verified with
-                    exact Jaccard.  Shuffles only candidate pairs, not the
-                    cross product.
-* simhash        -- 60-bit SimHash computed ROW-LOCALLY inside an Arrow
-                    batch (no shingle explode -- the whole signature is one
-                    map), banded on 15-bit slices, verified by hamming
-                    distance via bit_count(xor).
+                    exact Jaccard (``dedup_minhash_lsh_df``).  Shuffles only
+                    candidate pairs, not the cross product.  Connected
+                    components over the verified pairs give the duplicate
+                    clusters, and ``dedup_minhash_keep_first`` keeps the
+                    first turn per cluster.
+* decontaminate  -- flag corpus docs sharing word-3-gram shingles with a
+                    benchmark, by exact broadcast join
+                    (``contamination_overlap_df``) or by a constant-size
+                    Bloom probe (``bloom_decontaminate_df``).
 
 All take/return DataFrames so they compose with any source.
 """
@@ -34,9 +33,6 @@ from ..plans.cache_registry import cache as _cached
 MINHASH_K = 12
 MINHASH_BANDS = 3
 MINHASH_ROWS = 4  # K = BANDS * ROWS
-SIMHASH_BITS = 60
-SIMHASH_BANDS = 4
-SIMHASH_BAND_BITS = 15
 
 
 def shingle_df(docs: DataFrame, id_col: str = "doc_id",
@@ -92,116 +88,6 @@ def _verify_jaccard(pairs: DataFrame, shingles: DataFrame,
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-MAX_SHINGLE_FREQ_DEFAULT = 128
-
-
-def dedup_ngram_jaccard_df(docs: DataFrame, threshold: float = 0.5,
-                           max_shingle_freq: int | None =
-                           MAX_SHINGLE_FREQ_DEFAULT) -> DataFrame:
-    """Exact near-dup pairs by shingle Jaccard.  ``max_shingle_freq`` drops
-    shingles shared by more than that many docs from CANDIDATE GENERATION
-    only (verification still uses all shingles), the standard guard against
-    quadratic blowup on stop-shingles at scale.
-
-    The guard is ON BY DEFAULT (cap 128): a shingle shared by f docs emits
-    O(f^2) candidate pairs, so one boilerplate phrase repeated across a
-    100 TB corpus would otherwise dominate the join.  Pairs whose ONLY
-    shared shingles are ultra-frequent are missed by design (they are
-    boilerplate matches, not near-duplicates); pass ``None`` to disable
-    for exhaustive small-corpus runs.
-
-    The shingle set is persisted: the plan consumes it from six branches
-    (guard frequency, two candidate sides, two verify sides, sizes) whose
-    per-branch column pruning defeats exchange reuse — unpersisted, the
-    corpus is re-scanned and re-shingled 16x per run (measured; post-AQE
-    ReusedExchange count stays 0).  The cache is registered with
-    plans.cache_registry (NOT left to the ContextCleaner, which never
-    frees DataFrame caches — CacheManager pins the InMemoryRelation until
-    an explicit unpersist): the next top-level registry query releases
-    it, once this query's consumers have been collected."""
-    sh = shingle_df(docs).transform(_cached)
-    cand_src = sh
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("f"))
-        cand_src = sh.join(
-            F.broadcast(freq.filter(F.col("f") <= max_shingle_freq)),
-            "shingle",
-        ).select("doc_id", "shingle")
-    a = cand_src.select(F.col("doc_id").alias("doc_a"),
-                        F.col("shingle").alias("sh"))
-    b = cand_src.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingle").alias("sh"))
-    pairs = (
-        a.join(b, "sh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _verify_jaccard(pairs, sh, threshold)
-
-
-def containment_pairs_df(docs: DataFrame, threshold: float = 0.9,
-                         max_shingle_freq: int | None =
-                         MAX_SHINGLE_FREQ_DEFAULT) -> DataFrame:
-    """Asymmetric set-containment near-dup pairs (Broder 1997): for each
-    candidate pair, c(A,B) = |A ∩ B| / |A| and c(B,A) = |A ∩ B| / |B| over
-    distinct word-3-gram shingles; a pair qualifies when EITHER direction
-    reaches *threshold*.  This is the detector for truncated or quoted
-    copies: a 40-token prefix of a 200-token doc has containment 1.0 while
-    its symmetric Jaccard is ~0.2 — whole-doc Jaccard dedup misses it by
-    design.
-
-    Scale shape is the guarded-Jaccard one: candidates come from the
-    stop-shingle-guarded equi-join (never all-pairs), verification is
-    candidate-bounded, per-doc sizes broadcast; the shingle set is
-    persisted for the same six-branch-reuse reason as
-    dedup_ngram_jaccard_df (16 corpus re-scans otherwise)."""
-    sh = shingle_df(docs).transform(_cached)
-    cand_src = sh
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("f"))
-        cand_src = sh.join(
-            F.broadcast(freq.filter(F.col("f") <= max_shingle_freq)),
-            "shingle",
-        ).select("doc_id", "shingle")
-    a = cand_src.select(F.col("doc_id").alias("doc_a"),
-                        F.col("shingle").alias("sh"))
-    b = cand_src.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingle").alias("sh"))
-    pairs = (
-        a.join(b, "sh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    av = sh.select(F.col("doc_id").alias("doc_a"),
-                   F.col("shingle").alias("sh"))
-    bv = sh.select(F.col("doc_id").alias("doc_b"),
-                   F.col("shingle").alias("sh"))
-    inter = (
-        pairs.join(av, "doc_a").join(bv, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n_sh").alias("nb"))
-    ca = F.col("n_inter") / F.col("na")
-    cb = F.col("n_inter") / F.col("nb")
-    return (
-        inter.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .filter(F.greatest(ca, cb) >= threshold)
-        .select(
-            "doc_a", "doc_b", "n_inter",
-            F.round(ca, 4).alias("cont_a"),
-            F.round(cb, 4).alias("cont_b"),
-        )
     )
 
 
@@ -311,8 +197,9 @@ def dedup_minhash_lsh_df(docs: DataFrame, threshold: float = 0.5,
 
     The shingle set is persisted for the verify stage: _verify_jaccard
     consumes it from three pruned branches (sizes + both intersection
-    sides), the same multi-consumer shape that cost the Jaccard operator
-    16 corpus re-scans before its persist fix."""
+    sides), and per-branch column pruning defeats exchange reuse
+    (unpersisted, a shingle self-join was measured re-scanning and
+    re-shingling the corpus 16x per run)."""
     sh = shingle_df(docs).transform(_cached)
     spark = docs.sparkSession
     sig = minhash_signatures_df(docs, k).filter(F.size("sig") > 0)
@@ -338,50 +225,7 @@ def dedup_minhash_lsh_df(docs: DataFrame, threshold: float = 0.5,
     return _verify_jaccard(pairs, sh, threshold)
 
 
-def simhash_df(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """60-bit SimHash per doc, computed row-locally in an Arrow batch.
-
-    bit_p(doc) = 1 iff sum over distinct shingles of (2*bit_p(h)-1) > 0,
-    h = int(md5(shingle)[:15], 16).  Map-only: nothing shuffles."""
-
-    def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-        weights = (np.uint64(1) << shifts).astype(np.int64)
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in (text or "").split(" ") if t]
-                shingles = {
-                    " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)
-                }
-                if not shingles:
-                    # no signature: emitting fp=0 would cluster every
-                    # shingle-less doc into one fake hamming-0 'near-dup'
-                    # group (and diverge from the relational oracle, where
-                    # such docs simply have no rows)
-                    continue
-                ids.append(doc_id)
-                # one md5 per shingle, then ONE vectorized (n, 60) bit
-                # matrix: sum(2b-1) = 2*sum(b) - n per bit position
-                hs = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                     for s in shingles),
-                    dtype=np.uint64, count=len(shingles),
-                )
-                ones = ((hs[:, None] >> shifts[None, :])
-                        & np.uint64(1)).sum(axis=0).astype(np.int64)
-                acc = 2 * ones - np.int64(len(shingles))
-                fp = int(((acc > 0) * weights).sum())
-                fps.append(fp)
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    return docs.mapInPandas(run, schema="doc_id long, fp long")
+MAX_SHINGLE_FREQ_DEFAULT = 128
 
 
 def contamination_overlap_df(docs: DataFrame, benchmark: DataFrame,
@@ -395,8 +239,9 @@ def contamination_overlap_df(docs: DataFrame, benchmark: DataFrame,
 
     Scale shape: benchmark shingles are DISTINCT and usually tiny relative
     to the corpus -> the join is a broadcast semi-ish equi-join on the
-    shingle; ``max_shingle_freq`` prunes stop-shingles from the CORPUS side
-    (same guard as dedup_ngram_jaccard_df) so boilerplate doesn't fan out.
+    shingle; ``max_shingle_freq`` prunes stop-shingles (shared by more than
+    that many corpus docs) from the CORPUS side so boilerplate doesn't fan
+    out.  The guard is ON BY DEFAULT (cap 128); pass ``None`` to disable.
     Returns (doc_id, n_overlap) for contaminated docs; anti-join this
     against the corpus to decontaminate."""
     sh = shingle_df(docs)
@@ -485,7 +330,7 @@ def dedup_components_df(nodes: DataFrame, pairs: DataFrame,
                         max_iter: int = 25) -> DataFrame:
     """Connected components over near-dup pairs -> duplicate CLUSTERS.
 
-    The missing last step of every dedup family: pair lists don't dedupe a
+    The last step of near-dup dedup: pair lists don't dedupe a
     corpus -- you need the transitive closure (a~b, b~c => one cluster) and
     one canonical keeper per cluster.  Algorithm: iterative min-label
     propagation (the standard distributed CC formulation: each round,
@@ -560,132 +405,6 @@ def dedup_components_df(nodes: DataFrame, pairs: DataFrame,
         F.lit(1).cast("long").alias("cluster_size"),
     )
     return clustered.unionAll(singletons)
-
-
-def dedup_simhash_df(docs: DataFrame, max_hamming: int = 3,
-                     max_band_freq: int | None =
-                     MAX_BAND_FREQ_DEFAULT) -> DataFrame:
-    """SimHash near-dup pairs: band on 15-bit slices (a pair within hamming
-    distance 3 of a 60-bit code must agree on >= 1 of 4 bands), verify with
-    bit_count(xor).  Band buckets fuller than ``max_band_freq`` are dropped
-    from candidate generation (see _band_freq_guard -- exact-dup crowds
-    share every band and go quadratic otherwise).
-
-    The signature DataFrame is persisted: the banded view feeds three
-    pruned branches (guard frequency + both self-join sides), and without
-    the cache each branch re-runs the Arrow signature kernel over the
-    whole corpus (the shingle-family exchange-reuse lesson; signatures
-    are one small row per doc, the cheapest thing in the plan to hold)."""
-    fps = simhash_df(docs).transform(_cached)
-    spark = docs.sparkSession
-    band_ids = spark.range(SIMHASH_BANDS).select(
-        F.col("id").cast("int").alias("b")
-    )
-    banded = fps.crossJoin(F.broadcast(band_ids)).select(
-        "doc_id", "fp", "b",
-        F.expr(f"shiftright(fp, b * {SIMHASH_BAND_BITS}) & 32767").alias("key"),
-    )
-    banded = _band_freq_guard(banded, ["b", "key"], max_band_freq)
-    left = banded.select("b", "key", F.col("doc_id").alias("doc_a"),
-                         F.col("fp").alias("fp_a"))
-    right = banded.select("b", "key", F.col("doc_id").alias("doc_b"),
-                          F.col("fp").alias("fp_b"))
-    return (
-        left.join(right, ["b", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b",
-                F.expr("bit_count(fp_a ^ fp_b)").cast("int").alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Winnowing fingerprints (Schleimer, Wilkerson, Aiken 2003): substring-level
-# near-dup detection -- the standard guarantee is that any shared substring
-# of length >= K + W - 1 chars leaves at least one shared fingerprint, while
-# storing only ~2/(W+1) of the k-gram hashes.
-# ---------------------------------------------------------------------------
-
-WINNOW_K = 8          # char k-gram length
-WINNOW_W = 4          # winnow window (guarantee threshold = K + W - 1 = 11)
-WINNOW_P = (1 << 61) - 1  # int64-safe range for the md5-lower-64 base hash
-WINNOW_CAP = 32       # stop-fingerprint guard: drop fps in > CAP docs
-WINNOW_MIN_SHARED = 15
-
-
-def winnow_fingerprints_df(docs: DataFrame, k: int = WINNOW_K,
-                           w: int = WINNOW_W, id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
-    """Distinct winnowed fingerprint VALUES per doc, map-only over Arrow
-    batches: m_i = md5_lower64(text[i:i+k]) % P per char k-gram, then the
-    minimum of each w-length window of m, deduplicated.  Keeping only the
-    VALUE set (not positions) makes the classic rightmost-tie-break
-    irrelevant -- ties collapse in the set -- so the DuckDB twin is a
-    plain windowed MIN over the identical md5_number_lower hashes.  Docs
-    shorter than k + w - 1 chars emit nothing (no full window)."""
-
-    def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        p = np.uint64(WINNOW_P)
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                t = text if isinstance(text, str) else ""
-                n = len(t)
-                if n < k + w - 1:
-                    continue
-                ms = np.fromiter(
-                    (int.from_bytes(
-                        hashlib.md5(t[i:i + k].encode()).digest()[8:],
-                        "little")
-                     for i in range(n - k + 1)),
-                    dtype=np.uint64, count=n - k + 1,
-                ) % p
-                wins = np.lib.stride_tricks.sliding_window_view(ms, w)
-                for fp in np.unique(wins.min(axis=1)).astype(np.int64):
-                    ids.append(doc_id)
-                    fps.append(int(fp))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
-
-    return docs.mapInPandas(run, "doc_id long, fp long")
-
-
-def substring_dup_pairs_df(docs: DataFrame, k: int = WINNOW_K,
-                           w: int = WINNOW_W,
-                           min_shared: int = WINNOW_MIN_SHARED,
-                           cap: int = WINNOW_CAP) -> DataFrame:
-    """Doc pairs sharing >= min_shared winnowed fingerprints -- substring-
-    level near-dup candidates (catches copied PASSAGES that whole-doc
-    MinHash dilutes away).
-
-    Scale shape: fingerprints are map-only; the stop-fingerprint guard
-    (df <= cap, same design as the n-gram stop-shingle guard) bounds the
-    equi-join fanout per fp at cap^2 pairs, so a boilerplate substring
-    shared by half the corpus cannot quadratically explode the join; all
-    shuffles are fp-keyed with map-side combine on the pair counts.
-
-    Fingerprints are persisted: the guard frequency and both equi-join
-    sides are separately-pruned consumers, and without the cache each
-    re-runs the winnowing Arrow kernel over the whole corpus."""
-    fps = winnow_fingerprints_df(docs, k, w).transform(_cached)
-    keep = fps.groupBy("fp").agg(F.count("*").alias("df_")).filter(
-        F.col("df_") <= cap
-    ).select("fp")
-    guarded = fps.join(keep, "fp")
-    left = guarded.select("fp", F.col("doc_id").alias("doc_a"))
-    right = guarded.select("fp", F.col("doc_id").alias("doc_b"))
-    return (
-        left.join(right, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
 
 
 def dedup_exact_keep_first(df: DataFrame,

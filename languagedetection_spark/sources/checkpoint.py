@@ -5,14 +5,17 @@ at production scale these are Iceberg partitions), processes each bucket
 independently, and records one row per completed bucket in a ``_progress``
 JSON-lines table (one atomically-renamed file per bucket):
 
-    run_id, bucket, status, n_rows, n_kept, mean_lang_conf, n_no_lang,
-    drop_reasons, model_fingerprint, input_path, finished_at
+    run_id, bucket, n_buckets, status, n_rows, n_kept, mean_lang_conf,
+    n_no_lang, drop_reasons, model_fingerprint, input_path, finished_at
 
 (the detector-confidence fields appear when the processed output carries
 the quality-filter columns; a generic ``process`` gets counts only)
 
 A re-run with the same checkpoint dir skips completed buckets (idempotent
-resume after failure); each bucket's output is written to its own
+resume after failure).  A row counts only under the bucket count it
+records: under another count, bucket b holds other conversations, so a
+re-run with a different ``n_buckets`` recomputes every bucket, and so do
+rows without the field.  Each bucket's output is written to its own
 subdirectory, so a partially-written bucket is simply overwritten on retry
 (overwrite-by-partition idempotency).  The model fingerprint ties every
 bucket's output to the exact broadcast artifact that produced it (lineage).
@@ -89,12 +92,14 @@ def _progress_rows(checkpoint_dir: str) -> list[dict]:
     return rows
 
 
-def load_completed(spark: SparkSession, checkpoint_dir: str,
-                   run_id: str) -> set[int]:
-    """Buckets of *run_id* marked done.  (The table is local JSON files;
-    *spark* is not needed to read it.)"""
+def load_completed(spark: SparkSession, checkpoint_dir: str, run_id: str,
+                   n_buckets: int | None = None) -> set[int]:
+    """Buckets of *run_id* marked done; with *n_buckets*, only those done
+    under that bucket count.  (The table is local JSON files; *spark* is
+    not needed to read it.)"""
     return {r["bucket"] for r in _progress_rows(checkpoint_dir)
-            if r["run_id"] == run_id and r["status"] == "done"}
+            if r["run_id"] == run_id and r["status"] == "done"
+            and (n_buckets is None or r.get("n_buckets") == n_buckets)}
 
 
 def _write_row(checkpoint_dir: str, name: str, row: dict) -> None:
@@ -226,7 +231,7 @@ def run_with_checkpoint(
     write, no further bucket is planned: the running writes finish and
     commit, then the error is raised (of several failed writes, the lowest
     bucket's)."""
-    done = load_completed(spark, checkpoint_dir, run_id)
+    done = load_completed(spark, checkpoint_dir, run_id, n_buckets)
     todo = [b for b in range(n_buckets) if b not in done]
     bucketed = df.withColumn(
         "_bucket", F.crc32(F.col(key).cast("string")) % n_buckets
@@ -239,8 +244,8 @@ def run_with_checkpoint(
         out.write.mode("overwrite").parquet(dest)
         record_done(
             checkpoint_dir, run_id, b,
-            {**_bucket_metrics(obs, out.columns), "output": dest,
-             **(extra_lineage or {})},
+            {"n_buckets": n_buckets, **_bucket_metrics(obs, out.columns),
+             "output": dest, **(extra_lineage or {})},
         )
         return b
 

@@ -32,7 +32,8 @@ Two write-path notes that matter at scale:
   is still internally sorted; the Exchange, the expensive part, is
   still eliminated — pinned in the split test).
 - **Catalog, not path.**  Bucketing metadata lives in the table catalog
-  (``saveAsTable``); a bare ``.parquet(path)`` write silently drops it.
+  (``saveAsTable``); a bare ``.parquet(path)`` write silently drops it,
+  and a path read ignores it: read the table back with ``spark.table``.
   On a cluster this is the Hive/Iceberg metastore; locally it's the
   session warehouse.  (Iceberg's own bucket partition transform is the
   same idea via ``plans.session.iceberg_conf`` once the runtime jar is
@@ -41,7 +42,7 @@ Two write-path notes that matter at scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def write_bucketed(
@@ -82,9 +83,3 @@ def write_bucketed(
         .sortBy(*sort_cols)
         .saveAsTable(table)
     )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back through the catalog (a path read would
-    lose the bucketing metadata and with it the shuffle elimination)."""
-    return spark.table(table)

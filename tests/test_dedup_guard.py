@@ -1,44 +1,12 @@
-"""Stop-shingle guard in dedup_ngram_jaccard_df: the default cap must bound
-candidate generation (quadratic-blowup protection at scale) while keeping
-genuine near-duplicates (verdict r1 item 4)."""
+"""Near-dup and decontamination operators (operators/dedup.py): connected
+components, the on-by-default candidate guards that bound quadratic
+blowup at scale, the Bloom probe's no-false-negative guarantee and the
+``--dedup minhash`` keep-first stage."""
 
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _corpus(spark):
-    # 40 docs that share ONLY one boilerplate shingle ("common stop shingle")
-    # plus one genuine near-dup pair (100, 101) sharing many rare shingles.
-    rows = [
-        (i, f"common stop shingle u{i}a u{i}b u{i}c u{i}d u{i}e")
-        for i in range(40)
-    ]
-    near = "rare alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows.append((100, near + " lambda"))
-    rows.append((101, near + " omicron"))
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_guard_bounds_candidates_and_keeps_near_dups(spark):
-    from languagedetection_spark.operators.dedup import dedup_ngram_jaccard_df
-
-    docs = _corpus(spark)
-    # threshold 0: output == verified candidate set, so row counts expose
-    # candidate generation directly
-    unguarded = dedup_ngram_jaccard_df(docs, threshold=0.0,
-                                       max_shingle_freq=None).count()
-    guarded_rows = dedup_ngram_jaccard_df(docs, threshold=0.0,
-                                          max_shingle_freq=10).collect()
-    guarded_pairs = {(r["doc_a"], r["doc_b"]) for r in guarded_rows}
-    # boilerplate-only pairs: C(40,2) = 780 of them, all pruned by the guard
-    assert unguarded >= 780 + 1
-    assert guarded_pairs == {(100, 101)}
-    # and the surviving pair's Jaccard uses ALL shingles (guard only applies
-    # to candidate generation): 9 shared of (10 + 10 - 9... ) -- just assert
-    # a sane positive value
-    assert 0.0 < guarded_rows[0]["jaccard"] <= 1.0
 
 
 def test_components_transitive_closure(spark):
@@ -99,78 +67,14 @@ def test_default_guard_is_on():
 
     from languagedetection_spark.operators.dedup import (
         MAX_SHINGLE_FREQ_DEFAULT,
-        dedup_ngram_jaccard_df,
+        contamination_overlap_df,
     )
 
     default = inspect.signature(
-        dedup_ngram_jaccard_df
+        contamination_overlap_df
     ).parameters["max_shingle_freq"].default
     assert default == MAX_SHINGLE_FREQ_DEFAULT
     assert default is not None and default <= 1024
-
-
-def test_winnow_guarantee_shared_substring(spark):
-    """Winnowing guarantee (Schleimer et al. 2003): any shared substring of
-    length >= K + W - 1 chars leaves at least one shared fingerprint.  Two
-    docs sharing a 60-char passage inside otherwise-different text must
-    share fingerprints; two fully different docs share none."""
-    from languagedetection_spark.operators.dedup import (
-        WINNOW_K,
-        WINNOW_W,
-        winnow_fingerprints_df,
-    )
-
-    passage = "the shared secret passage hidden inside both documents here"
-    assert len(passage) >= WINNOW_K + WINNOW_W - 1
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma " + passage + " delta epsilon zeta"),
-            (2, "one two three four " + passage + " five six seven"),
-            (3, "completely unrelated content with no overlap at all ok"),
-        ],
-        "doc_id long, text string",
-    )
-    fps = {}
-    for r in winnow_fingerprints_df(docs).collect():
-        fps.setdefault(r["doc_id"], set()).add(r["fp"])
-    assert fps[1] & fps[2], "shared passage must leave a shared fingerprint"
-    assert not (fps[1] & fps[3])
-    assert not (fps[2] & fps[3])
-
-
-def test_winnow_short_and_null_docs_emit_nothing(spark):
-    from languagedetection_spark.operators.dedup import (
-        WINNOW_K,
-        WINNOW_W,
-        winnow_fingerprints_df,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x" * (WINNOW_K + WINNOW_W - 2)), (2, ""), (3, None),
-         (4, "y" * (WINNOW_K + WINNOW_W - 1))],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"] for r in winnow_fingerprints_df(docs).collect()}
-    assert out == {4}
-
-
-def test_substring_dup_finds_planted_copies(spark):
-    """The truncated-prefix copies in the near-dup corpus share a long
-    passage with their originals: the pair (d, d+1000000) must be found
-    for nearly all planted copies at the contract thresholds."""
-    from languagedetection_spark.entry_queries import (
-        _neardup_corpus,
-        substring_dup_pairs,
-    )
-
-    out = substring_dup_pairs(spark, "/root/testdata/sf0.001").collect()
-    planted = {(r["doc_a"], r["doc_b"]) for r in out
-               if r["doc_b"] - r["doc_a"] == 1000000}
-    n_copies = _neardup_corpus(spark, "/root/testdata/sf0.001").filter(
-        "doc_id >= 1000000").count()
-    assert len(planted) >= 0.85 * n_copies
-    for a, b in planted:
-        assert b == a + 1000000
 
 
 def test_band_freq_guard_bounds_exact_dup_crowds(spark):
@@ -184,10 +88,7 @@ def test_band_freq_guard_bounds_exact_dup_crowds(spark):
 
     import pyspark.sql.functions as F
 
-    from languagedetection_spark.operators.dedup import (
-        dedup_minhash_lsh_df,
-        dedup_simhash_df,
-    )
+    from languagedetection_spark.operators.dedup import dedup_minhash_lsh_df
 
     crowd_text = " ".join(f"w{i}" for i in range(30))
     # the near-dup pair uses a DISJOINT token universe so its band keys
@@ -208,9 +109,6 @@ def test_band_freq_guard_bounds_exact_dup_crowds(spark):
     assert (100000, 100001) in ids
     assert not any(a < 2000 and b < 2000 for a, b in ids)
     assert elapsed < 60, elapsed
-    sim = dedup_simhash_df(docs).collect()
-    sim_ids = {(r["doc_a"], r["doc_b"]) for r in sim}
-    assert not any(a < 2000 and b < 2000 for a, b in sim_ids)
 
 
 def test_band_freq_guard_off_restores_exhaustive(spark):
@@ -227,103 +125,6 @@ def test_band_freq_guard_off_restores_exhaustive(spark):
     assert len(pairs) == 45  # all 10-choose-2 exact-dup pairs
     guarded = dedup_minhash_lsh_df(docs, max_band_freq=5).collect()
     assert guarded == []
-
-
-def test_keep_best_prefers_longest_not_min_id(spark, tmp_path):
-    """dedup_keep_best must elect the LONGEST doc in a cluster even when
-    its doc_id is higher -- the case that distinguishes quality-keeper
-    election from naive min-id keeping (canonical_id stays the min id;
-    only the keep flag moves)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from languagedetection_spark.entry_queries import dedup_keep_best
-
-    words = [f"w{i}" for i in range(60)]
-    trunc = " ".join(words)          # doc 3: the shorter copy, LOWER id
-    full = trunc + " extra"          # doc 13: fuller original (hamming 3)
-    filler = [
-        (100 + i, " ".join(f"x{i}y{j}z{i + j}" for j in range(30)))
-        for i in range(5)
-    ]
-    tbl = pa.table({
-        "doc_id": pa.array([3, 13] + [f[0] for f in filler], pa.int64()),
-        "text": [trunc, full] + [f[1] for f in filler],
-        "lang": ["en"] * 7,
-        "source": ["src0"] * 7,
-    })
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    rows = {r["doc_id"]: r for r in
-            dedup_keep_best(spark, str(tmp_path)).collect()}
-    assert rows[3]["canonical_id"] == rows[13]["canonical_id"] == 3
-    assert rows[13]["keep"] is True      # longest wins ...
-    assert rows[3]["keep"] is False      # ... not the min id
-    assert rows[100]["keep"] is True     # singletons keep themselves
-
-
-def test_containment_catches_truncations_jaccard_misses(spark):
-    """containment_pairs' raison d'etre: the near-dup corpus plants
-    40-token PREFIX copies, so the copy's shingle set is a subset of the
-    original's -- containment is exactly 1.0 for every planted pair, while
-    symmetric Jaccard at the same 0.9 bar misses the pairs whose original
-    is much longer than 40 tokens."""
-    from languagedetection_spark.entry_queries import (
-        _neardup_corpus,
-        containment_pairs,
-    )
-    from languagedetection_spark.operators.dedup import dedup_ngram_jaccard_df
-
-    sf = "/root/testdata/sf0.001"
-    out = containment_pairs(spark, sf).collect()
-    planted = {(r["doc_a"], r["doc_b"]): r for r in out
-               if r["doc_b"] - r["doc_a"] == 1000000}
-    corpus = _neardup_corpus(spark, sf)
-    n_copies = corpus.filter("doc_id >= 1000000").count()
-    assert len(planted) == n_copies
-    for r in planted.values():
-        assert max(r["cont_a"], r["cont_b"]) == 1.0
-    jacc = dedup_ngram_jaccard_df(corpus, threshold=0.9).collect()
-    jacc_planted = {(r["doc_a"], r["doc_b"]) for r in jacc
-                    if r["doc_b"] - r["doc_a"] == 1000000}
-    assert len(jacc_planted) < n_copies, (
-        "fixture drift: Jaccard@0.9 now catches every planted truncation, "
-        "so the containment query no longer demonstrates its advantage"
-    )
-
-
-def test_segment_dedup_drops_cross_doc_repeats(spark, tmp_path):
-    """A 16-token segment repeated across docs survives only at its first
-    (doc_id, seg_no) occurrence; reassembly keeps surviving segments in
-    order; 0-token docs pass through with empty dedup_text."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from languagedetection_spark.entry_queries import segment_dedup
-
-    seg_a = " ".join(f"a{i}" for i in range(16))
-    seg_b = " ".join(f"b{i}" for i in range(16))
-    seg_c = " ".join(f"c{i}" for i in range(16))
-    tail = "t0 t1 t2 t3"  # a short trailing segment
-    tbl = pa.table({
-        "doc_id": pa.array([1, 2, 3, 4], pa.int64()),
-        "text": [seg_a + " " + seg_b,   # both kept (first occurrences)
-                 seg_a + " " + seg_c,   # seg_a dropped, seg_c kept
-                 "",                    # 0 tokens
-                 seg_b + " " + tail],   # seg_b dropped, short tail kept
-        "lang": ["en"] * 4,
-        "source": ["src0"] * 4,
-    })
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    rows = {r["doc_id"]: r for r in
-            segment_dedup(spark, str(tmp_path)).collect()}
-    assert rows[1]["dedup_text"] == seg_a + " " + seg_b
-    assert (rows[1]["n_segs"], rows[1]["kept_segs"]) == (2, 2)
-    assert rows[2]["dedup_text"] == seg_c
-    assert (rows[2]["n_segs"], rows[2]["kept_segs"]) == (2, 1)
-    assert (rows[3]["n_segs"], rows[3]["kept_segs"]) == (0, 0)
-    assert rows[3]["dedup_text"] == ""
-    assert rows[4]["dedup_text"] == tail
-    assert (rows[4]["n_segs"], rows[4]["kept_segs"]) == (2, 1)
 
 
 def test_bloom_decontaminate_no_false_negatives(spark):
@@ -379,65 +180,3 @@ def test_minhash_keep_first_clusters_near_and_exact(spark):
     # schema passes through untouched (scoring runs on the survivors)
     out_cols = dedup_minhash_keep_first(df, threshold=0.8).columns
     assert out_cols == ["conv_id", "turn_idx", "text"]
-
-
-def test_edit_distance_catches_short_typo_clones(spark, tmp_path):
-    """The motivation for the edit-distance family: a 1-char typo clone of
-    a SHORT text rewrites every 3-word shingle (Jaccard 0 on word
-    shingles), so the shingle/MinHash families cannot see it; Levenshtein
-    does.  Pins the threshold form's exact distances, the planted-clone
-    corpus (char-15 and char-5 substitutions), and that the r5 mid-string
-    second block finds pairs whose edit sits INSIDE the first 12 chars —
-    r4's documented prefix-blocking blind spot."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rows = [
-        # 5 words -> 3 shingles, ALL containing the middle word: a 1-char
-        # typo there rewrites every shingle (Jaccard 0, not even a
-        # candidate), and it sits past char 12 so prefix blocking pairs them
-        (0, "gather around midnight by docks"),
-        (1, "gather around mixnight by docks"),
-        (2, "completely unrelated sentence here"),
-        (3, "short text!!"),                      # >= 12 chars, unique
-        # doc_id % 20 = 5 -> planted char-5 typo clone 3000025: its prefix
-        # block DIFFERS (edit at char 5) so only the chars-13..24 block
-        # can pair it with the original
-        (25, "the quick brown fox jumps over it"),
-    ]
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "lang": ["en"] * len(rows),
-            "source": ["src0"] * len(rows),
-            "text": [r[1] for r in rows],
-        }),
-        str(tmp_path / "documents.parquet"),
-    )
-    from languagedetection_spark.entry_queries import (
-        dedup_edit_distance,
-        dedup_ngram_jaccard,
-    )
-
-    got = {
-        (r["doc_a"], r["doc_b"]): r["edit_dist"]
-        for r in dedup_edit_distance(spark, str(tmp_path)).collect()
-    }
-    # doc 0 (% 10 = 0) gets a planted char-15 clone 2000000:
-    #   "gather around ~idnight by docks" — distance 1 to doc 0, and
-    #   distance 2 to doc 1 (chars 15 and 17 differ); all three pairs
-    #   share the 12-char prefix.  doc 25's early-typo clone pairs ONLY
-    #   via the mid-string block.
-    assert got == {
-        (0, 1): 1,
-        (0, 2000000): 1,
-        (1, 2000000): 2,
-        (25, 3000025): 1,
-    }
-    # and the shingle family really is blind to the pair: zero shared
-    # shingles means it is not even a CANDIDATE there
-    jac = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_ngram_jaccard(spark, str(tmp_path)).collect()
-    }
-    assert (0, 1) not in jac

@@ -87,22 +87,19 @@ EDGE_SAFE_QUERIES = (
     "langid_hashed_ngram", "langid_heuristic", "pipeline_keep",
     "conv_quality_report", "conv_export", "word_cumsum", "doc_token_stats",
     "doc_quality_score", "bpe_token_count", "holdout_split", "dedup_exact",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_components", "decontaminate", "bloom_decontaminate", "bpe_merges",
-    "sample_stratified",
+    "dedup_minhash_lsh", "dedup_components", "decontaminate",
+    "bloom_decontaminate", "bpe_merges", "sample_stratified",
     "streaming_dedup",
     "tfidf_top_terms", "doc_char_entropy", "inverted_index",
-    "normalize_text", "collocations_lift", "substring_dup_pairs",
+    "normalize_text", "collocations_lift",
     "word_freq_spectrum", "sequence_packing", "mixture_rates",
-    "doc_repetition", "lm_perplexity", "dedup_keep_best",
-    "importance_weights",
-    "containment_pairs", "segment_dedup", "doc_chunks",
+    "doc_repetition", "lm_perplexity", "importance_weights", "doc_chunks",
     "nb_quality_score", "lm_bigram_ppl", "source_overlap",
     "sample_weighted", "bm25_topk", "heavy_hitters",
     "code_switch_segments", "source_pagerank",
     "tokenizer_fertility", "padding_waste", "doc_novelty",
     "ppl_buckets", "dedup_cluster_stats", "token_budget_select",
-    "vocab_drift_psi", "ngram_coverage_curve", "dedup_edit_distance",
+    "vocab_drift_psi", "ngram_coverage_curve",
     "lsh_band_sweep",
 )
 
@@ -306,7 +303,7 @@ def test_query_caches_are_scoped(spark):
 
     qs = entry_mod.queries()
     cr.release_all()
-    for name in ("importance_weights", "dedup_ngram_jaccard", "bm25_topk"):
+    for name in ("importance_weights", "dedup_minhash_lsh", "bm25_topk"):
         qs[name](spark, SF_DIR).collect()
     assert cr.live_count() > 0          # bm25 registers its posting caches
     qs["dedup_exact"](spark, SF_DIR).collect()

@@ -239,18 +239,6 @@ def test_cms_sketch_is_broadcast_and_partially_aggregated(spark):
     assert "partial_count" in plan or "partial" in plan.lower(), plan
 
 
-def test_winnow_fingerprints_map_only(spark):
-    """Winnowing fingerprints are computed row-locally -- nothing shuffles
-    until the fp-keyed candidate join."""
-    from languagedetection_spark.operators.dedup import (
-        winnow_fingerprints_df,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(winnow_fingerprints_df(docs))
-    assert "Exchange" not in plan, plan
-
-
 def test_bloom_decontaminate_probe_is_joinless(spark):
     """The Bloom probe replaces the benchmark-shingle join with k
     substring lookups into a compiled literal mask: the corpus-side plan
@@ -270,17 +258,6 @@ def test_doc_chunks_is_shuffle_free(spark):
     plan = _plan(doc_chunks(spark, SF))
     assert "Exchange" not in plan, plan
     assert "Generate" in plan, plan
-
-
-def test_segment_dedup_no_cross_joins(spark):
-    """Segment dedup shuffles on the segment text (keeper election +
-    membership probe) and on doc_id (reassembly) -- equi-joins only,
-    never a nested-loop/cartesian product."""
-    from languagedetection_spark.entry_queries import segment_dedup
-
-    plan = _plan(segment_dedup(spark, SF))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_null_ids_dont_crash_bucketed_rank(spark, tmp_path):

@@ -148,25 +148,6 @@ def _naive_minhash_sig(text: str, k: int = 12) -> list[int]:
     return sig
 
 
-def _naive_simhash(text: str) -> int:
-    import hashlib
-
-    toks = [t for t in (text or "").split(" ") if t]
-    shingles = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-    if not shingles:
-        return 0
-    fp = 0
-    for p in range(60):
-        vote = sum(
-            1 if (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) >> p) & 1
-            else -1
-            for s in shingles
-        )
-        if vote > 0:
-            fp |= 1 << p
-    return fp
-
-
 @given(text_strategy)
 @settings(max_examples=150, deadline=None)
 def test_minhash_kernel_equals_naive(text):
@@ -197,32 +178,6 @@ def test_minhash_kernel_equals_naive(text):
     assert got == _naive_minhash_sig(text)
 
 
-@given(text_strategy)
-@settings(max_examples=100, deadline=None)
-def test_simhash_vectorized_equals_naive(text):
-    import hashlib
-
-    import numpy as np
-
-    toks = [t for t in (text or "").split(" ") if t]
-    shingles = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-    if not shingles:
-        got = 0
-    else:
-        shifts = np.arange(60, dtype=np.uint64)
-        weights = (np.uint64(1) << shifts).astype(np.int64)
-        hs = np.fromiter(
-            (int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-             for s in shingles),
-            dtype=np.uint64, count=len(shingles),
-        )
-        ones = ((hs[:, None] >> shifts[None, :])
-                & np.uint64(1)).sum(axis=0).astype(np.int64)
-        acc = 2 * ones - np.int64(len(shingles))
-        got = int(((acc > 0) * weights).sum())
-    assert got == _naive_simhash(text)
-
-
 @settings(max_examples=300, deadline=None, derandomize=True)
 @given(text=text_strategy)
 def test_normalize_text_kernel_equals_duckdb(text):
@@ -247,51 +202,6 @@ def test_normalize_text_kernel_equals_duckdb(text):
         [text],
     ).fetchone()[0]
     assert got == want, (repr(text), repr(got), repr(want))
-
-
-@settings(max_examples=200, deadline=None, derandomize=True)
-@given(text=st.text(alphabet=st.sampled_from("abcde "), min_size=0,
-                    max_size=60))
-def test_winnow_fingerprints_equal_duckdb(text):
-    """The winnowing kernel's fingerprint VALUE SET must equal the DuckDB
-    windowed-MIN derivation for arbitrary short ascii docs (incl. the
-    no-full-window short-text gate)."""
-    import hashlib
-
-    import duckdb
-    import numpy as np
-
-    from languagedetection_spark.operators.dedup import (
-        WINNOW_K,
-        WINNOW_P,
-        WINNOW_W,
-    )
-
-    k, w = WINNOW_K, WINNOW_W
-    n = len(text)
-    if n < k + w - 1:
-        py = set()
-    else:
-        ms = np.fromiter(
-            (int.from_bytes(hashlib.md5(text[i:i + k].encode())
-                            .digest()[8:], "little")
-             for i in range(n - k + 1)),
-            dtype=np.uint64, count=n - k + 1) % np.uint64(WINNOW_P)
-        wins = np.lib.stride_tricks.sliding_window_view(ms, w)
-        py = {int(v) for v in np.unique(wins.min(axis=1))}
-    rows = duckdb.execute(f"""
-        WITH g AS (
-            SELECT i.i, CAST(md5_number_lower(substr(?, i.i, {k}))
-                        % {WINNOW_P} AS BIGINT) AS m
-            FROM (SELECT unnest(generate_series(1, {n} - {k - 1})) AS i) i
-        )
-        SELECT DISTINCT fp FROM (
-            SELECT min(m) OVER (ORDER BY i ROWS BETWEEN CURRENT ROW
-                                AND {w - 1} FOLLOWING) AS fp, i
-            FROM g QUALIFY i <= {n} - {k - 1} - {w - 1}
-        )
-    """, [text]).fetchall()
-    assert {r[0] for r in rows} == py
 
 
 # ---------------------------------------------------------------------------

@@ -32,13 +32,11 @@ def _parquet_files(path: str) -> list[str]:
 
 
 def test_bucketed_sink_downstream_shuffle_free(spark, fixture_dir):
-    from languagedetection_spark.sources.sinks import (
-        read_bucketed, write_bucketed,
-    )
+    from languagedetection_spark.sources.sinks import write_bucketed
 
     df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
     write_bucketed(df, "turns_bucketed", n_buckets=8)
-    t = read_bucketed(spark, "turns_bucketed")
+    t = spark.table("turns_bucketed")
 
     # lossless: same rows back through the catalog
     assert sorted(map(tuple, t.collect())) == sorted(map(tuple, df.collect()))
@@ -65,7 +63,7 @@ def test_bucketed_sink_downstream_shuffle_free(spark, fixture_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         j = t.select("conv_id", "turn_idx").join(
-            read_bucketed(spark, "turns_bucketed").select(
+            spark.table("turns_bucketed").select(
                 "conv_id", F.col("turn_idx").alias("t2")
             ),
             "conv_id",
@@ -93,14 +91,12 @@ def test_bucketed_sink_files_per_bucket_split(spark, fixture_dir):
     membership: file count stays bounded by n_buckets * files_per_bucket
     and the downstream agg is still shuffle-free (multiple files per
     bucket are merged into one scan partition per bucket)."""
-    from languagedetection_spark.sources.sinks import (
-        read_bucketed, write_bucketed,
-    )
+    from languagedetection_spark.sources.sinks import write_bucketed
 
     df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
     write_bucketed(df, "turns_bucketed_split", n_buckets=4,
                    files_per_bucket=2)
-    t = read_bucketed(spark, "turns_bucketed_split")
+    t = spark.table("turns_bucketed_split")
     assert t.count() == df.count()
     files = _parquet_files(_table_location(spark, "turns_bucketed_split"))
     assert 1 <= len(files) <= 8

@@ -188,6 +188,43 @@ def test_checkpoint_restages_for_new_bucket_count(spark, fixture_dir,
     assert n == df.count()
 
 
+def test_checkpoint_rerun_with_fewer_buckets_recomputes_all(
+        spark, fixture_dir, tmp_path):
+    """Buckets done under one bucket count are not done under another:
+    a 4-bucket run that finished buckets 0 and 1, rerun with 2 buckets,
+    recomputes both, and its output equals a clean 2-bucket run."""
+    from languagedetection_spark.sources.checkpoint import (
+        load_completed, run_with_checkpoint,
+    )
+
+    df = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    calls = {"n": 0}
+
+    def failing(part):
+        calls["n"] += 1
+        if calls["n"] == 3:
+            raise RuntimeError("boom")
+        return part
+
+    with pytest.raises(RuntimeError, match="boom"):
+        run_with_checkpoint(spark, df, failing, out, ck, "r", n_buckets=4)
+    assert load_completed(spark, ck, "r") == {0, 1}
+    assert load_completed(spark, ck, "r", 4) == {0, 1}
+    assert load_completed(spark, ck, "r", 2) == set()
+    assert run_with_checkpoint(spark, df, lambda part: part, out, ck, "r",
+                               n_buckets=2) == [0, 1]
+    clean = str(tmp_path / "clean")
+    run_with_checkpoint(spark, df, lambda part: part, clean,
+                        str(tmp_path / "ck2"), "r", n_buckets=2)
+    for b in (0, 1):
+        got = spark.read.parquet(f"{out}/bucket={b}").collect()
+        want = spark.read.parquet(f"{clean}/bucket={b}").collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), b
+    n = spark.read.parquet(f"{out}/bucket=0", f"{out}/bucket=1").count()
+    assert n == df.count()
+
+
 def test_checkpoint_single_bucket_left_is_not_staged(spark, fixture_dir,
                                                      tmp_path):
     """--buckets 1, and a resume with one bucket left, write no staged
@@ -709,8 +746,9 @@ def test_filter_job_rejects_dedup_with_streaming(tmp_path):
 
 def test_filter_job_rejects_bad_dedup_threshold(monkeypatch, tmp_path):
     """--dedup-threshold only means something under --dedup minhash and
-    only inside (0, 1]; anything else exits 2 before a session is built.
-    A valid threshold, or none, gets past the guard."""
+    only inside (0, 1]; anything else exits 2 before a session is built,
+    as does an unknown option such as --fail-after.  A valid threshold, or
+    none, gets past the guard."""
     import pytest
 
     from languagedetection_spark.jobs.filter_job import main
@@ -729,7 +767,8 @@ def test_filter_job_rejects_bad_dedup_threshold(monkeypatch, tmp_path):
                   ["--dedup", "exact", "--dedup-threshold", "0.5"],
                   ["--dedup", "minhash", "--dedup-threshold", "80"],
                   ["--dedup", "minhash", "--dedup-threshold", "0"],
-                  ["--dedup", "minhash", "--dedup-threshold", "nan"]):
+                  ["--dedup", "minhash", "--dedup-threshold", "nan"],
+                  ["--fail-after", "1"]):
         with pytest.raises(SystemExit) as exc:
             main(base + extra)
         assert exc.value.code == 2, extra

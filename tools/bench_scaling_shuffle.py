@@ -5,8 +5,6 @@ this companion measures the operators whose cost is dominated by exchanges:
 
 * dedup_minhash_lsh  -- signatures -> band join -> exact-Jaccard verify
 * inverted_index agg -- two corpus-wide groupBys (token -> posting stats)
-* segment_dedup      -- segment hash shuffle (keeper election + probe) +
-                        per-doc reassembly agg
 
 Same protocol as the headline pair: each level runs in a FRESH JVM
 (subprocess), one warm pass then best-of-2 timed passes, N/4N pairs
@@ -66,13 +64,7 @@ def run_inverted():
           F.min("doc_id").alias("first_doc"))
      .write.format("noop").mode("overwrite").save())
 
-def run_segment():
-    from languagedetection_spark.entry_queries import segment_dedup
-    segment_dedup(spark, docs_dir).write.format("noop") \
-        .mode("overwrite").save()
-
-jobs = {{"minhash": run_minhash, "inverted": run_inverted,
-         "segment": run_segment}}
+jobs = {{"minhash": run_minhash, "inverted": run_inverted}}
 fn = jobs[job]
 fn()  # warm pass (JIT, page cache, python workers)
 secs = min((lambda t0: (fn(), time.time() - t0)[1])(time.time())
@@ -95,7 +87,7 @@ def main() -> None:
     n = int(os.environ.get("BENCH_SCALING_N", "2"))
     load = open("/proc/loadavg").read().split()[0]
     result: dict = {"external_load": load, "n": n}
-    for job in ("minhash", "inverted", "segment"):
+    for job in ("minhash", "inverted"):
         best: dict[int, float] = {}
         pair_effs: list[float] = []
         for _ in range(2):  # interleaved pairs
