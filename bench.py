@@ -26,28 +26,21 @@ BENCH_QUERIES = [
     "doc_token_stats",
     "pipeline_scrub",
     "dedup_minhash_lsh",
-    "sample_stratified",
     "decontaminate",
     "tfidf_top_terms",
     "doc_char_entropy",
     "inverted_index",
-    "normalize_text",
     "collocations_lift",
     "word_freq_spectrum",
     "sequence_packing",
-    "mixture_rates",
     "doc_repetition",
     "lm_perplexity",
-    "importance_weights",
     "bloom_decontaminate",
-    "bpe_merges",
     "doc_chunks",
     "nb_quality_score",
     "lm_bigram_ppl",
-    "sample_weighted",
     "bm25_topk",
     "heavy_hitters",
-    "code_switch_segments",
     "source_pagerank",
     "tokenizer_fertility",
     "padding_waste",

@@ -585,8 +585,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     then doc_id -- per-doc keys cannot skew across docs, output is
     corpus-row-sized, and the gram explode is linear in text length (no
     per-row quadratic higher-order scan).  Docs with < n tokens emit NULL
-    for that signal (no phantom grams); docs with no tokens emit no row,
-    like the rest of the textstats family."""
+    for that signal (no phantom grams); docs with no tokens emit no row."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(_filtered_toks()).alias("g")
@@ -736,95 +735,6 @@ GROUP BY dw.doc_id
 """
 
 
-def importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style data selection (Xie et al. 2023, 'Data Selection for
-    Language Models via Importance Resampling'): hashed-unigram bag
-    features over B=1024 md5 buckets; target distribution = the in-domain
-    slice (source = 'src0'), raw distribution = the whole corpus; per-doc
-    log importance weight = sum over tokens of log(p_target(bucket) /
-    p_raw(bucket)) with add-one smoothing.  Docs that look like the
-    target domain get high weights and are upsampled.
-
-    Scale shape: both feature distributions are B-row aggregates (map-side
-    combined, bucket-bounded output); the per-doc scoring join is on the
-    1024-row ratio table -- broadcast-sized by construction no matter the
-    corpus.  The md5 bucket recipe is the same engine-portable form the
-    hashed-ngram langid uses, so the oracle reproduces exact bucket ids;
-    ln ulp drift is absorbed by the 4 dp round."""
-    B = 1024
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("w")
-    ).filter("w <> ''")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long")
-        % B
-    ).alias("b")
-    # persisted: the target histogram, raw histogram, and per-doc bags are
-    # three separately-pruned consumers of the hashed token stream
-    tb = toks.select("doc_id", "source", bucket).transform(_cached)
-    tgt = tb.filter("source = 'src0'").groupBy("b").agg(
-        F.count("*").alias("ct")
-    )
-    raw = tb.groupBy("b").agg(F.count("*").alias("cr"))
-    nt = tgt.agg(F.coalesce(F.sum("ct"), F.lit(0)).alias("nt"))
-    nr = raw.agg(F.sum("cr").alias("nr"))
-    ratios = (
-        raw.join(tgt, "b", "left")
-        .crossJoin(F.broadcast(nt))
-        .crossJoin(F.broadcast(nr))
-        .select(
-            "b",
-            (
-                F.log(
-                    (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(1.0))
-                    / (F.col("nt") + B)
-                )
-                - F.log((F.col("cr") + F.lit(1.0)) / (F.col("nr") + B))
-            ).alias("lr"),
-        )
-    )
-    per = tb.groupBy("doc_id", "b").agg(F.count("*").alias("c"))
-    return (
-        per.join(F.broadcast(ratios), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_tokens"),
-            F.round(F.sum(F.col("c") * F.col("lr")), 4).alias("log_weight"),
-        )
-    )
-
-
-IMPORTANCE_WEIGHTS_SQL = """
-WITH toks AS (
-    SELECT d.doc_id, d.source, t.w
-    FROM documents d,
-         LATERAL (SELECT unnest(string_split(d.text, ' ')) AS w) t
-    WHERE t.w <> ''
-),
-tb AS (
-    SELECT doc_id, source,
-           ('0x' || substr(md5(w), 1, 8))::BIGINT % 1024 AS b
-    FROM toks
-),
-tgt AS (SELECT b, count(*) AS ct FROM tb WHERE source = 'src0' GROUP BY b),
-raw AS (SELECT b, count(*) AS cr FROM tb GROUP BY b),
-nt AS (SELECT coalesce(sum(ct), 0) AS nt FROM tgt),
-nr AS (SELECT sum(cr) AS nr FROM raw),
-ratios AS (
-    SELECT raw.b,
-           ln((coalesce(tgt.ct, 0) + 1.0) / CAST(nt.nt + 1024 AS DOUBLE))
-         - ln((raw.cr + 1.0) / CAST(nr.nr + 1024 AS DOUBLE)) AS lr
-    FROM raw LEFT JOIN tgt ON tgt.b = raw.b, nt, nr
-),
-per AS (SELECT doc_id, b, count(*) AS c FROM tb GROUP BY doc_id, b)
-SELECT per.doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-       round(sum(c * lr), 4) AS log_weight
-FROM per JOIN ratios ON ratios.b = per.b
-GROUP BY per.doc_id
-"""
-
-
 def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source contamination matrix: for every ordered source pair,
     how many of source A's distinct word-3-gram shingles also appear in
@@ -917,7 +827,7 @@ def nb_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: class-conditional counts are two vocab-sized map-side-
     combined aggregates; the per-doc scoring join is vocab-keyed (the
     contract form — at 100 TB you'd hash the features into fixed buckets
-    exactly as importance_weights does, same plan, bounded model).  The
+    exactly as vocab_drift_psi does, same plan, bounded model).  The
     ln ulp drift between engines is absorbed by the 4 dp round, and the
     nb_keep boolean is derived from the ROUNDED score so both engines
     threshold the identical value."""
@@ -1266,45 +1176,6 @@ FROM cum
 """
 
 
-def mixture_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based sampling weights for the training mixture
-    (alpha = 0.5, the multilingual-LM standard): weight_l = sqrt(n_l) /
-    sum sqrt(n_l) over per-language token counts -- upsamples the tail,
-    tempers the head.  sqrt is a correctly-rounded IEEE op so both
-    engines agree; the 24-term weight sum is rounded at 6 dp."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "lang",
-        F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-        .alias("n"),
-    )
-    per = toks.groupBy("lang").agg(F.sum("n").alias("n_tokens"))
-    tot = per.agg(
-        F.sum(F.sqrt(F.col("n_tokens").cast("double"))).alias("z")
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "n_tokens",
-        F.round(
-            F.sqrt(F.col("n_tokens").cast("double")) / F.col("z"), 6
-        ).alias("weight"),
-    )
-
-
-MIXTURE_RATES_SQL = """
-WITH per AS (
-    SELECT lang,
-           sum(len(list_filter(string_split(text, ' '), t -> t <> '')))
-               AS n_tokens
-    FROM documents GROUP BY lang
-),
-z AS (SELECT sum(sqrt(CAST(n_tokens AS DOUBLE))) AS z FROM per)
-SELECT lang, CAST(n_tokens AS BIGINT) AS n_tokens,
-       round(sqrt(CAST(n_tokens AS DOUBLE)) / z.z, 6) AS weight
-FROM per, z
-"""
-
-
 def word_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus frequency-of-frequencies (the Zipf / Good-Turing spectrum):
     for each corpus frequency f, how many distinct words occur exactly f
@@ -1629,10 +1500,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_minhash_lsh_df(_neardup_corpus(spark, sf_dir), 0.5)
 
 
-# the verified MinHash-LSH pairs, as CTEs over _NEARDUP_SQL_CTE's shingles:
-# shared by DEDUP_MINHASH_SQL and DEDUP_COMPONENTS_SQL, so the pair oracle
-# and the closure oracle cannot drift apart
-_MINHASH_PAIRS_CTES = """
+# the 12-hash MinHash signatures, as a CTE over _NEARDUP_SQL_CTE's shingles:
+# shared by _MINHASH_PAIRS_CTES and LSH_BAND_SWEEP_SQL, so every MinHash
+# oracle uses the one hash family
+_MINHASH_CTE = """
 , minh AS (
     -- exact twin of minhash_signatures_df: base = lower 64 bits of md5
     -- (md5_number_lower == int.from_bytes(digest[8:], 'little')), then
@@ -1644,7 +1515,14 @@ _MINHASH_PAIRS_CTES = """
                 + (999983 * i.i + 12345) % 2147483647) % 2147483647) AS hmin
     FROM shingles s, (SELECT unnest(generate_series(0, 11)) AS i) i
     GROUP BY s.doc_id, i.i
-),
+)"""
+
+# the verified MinHash-LSH pairs: shared by DEDUP_MINHASH_SQL and
+# DEDUP_COMPONENTS_SQL, so the pair oracle and the closure oracle cannot
+# drift apart
+_MINHASH_PAIRS_CTES = (
+    _MINHASH_CTE
+    + """,
 banded AS (
     -- the band-frequency guard (cap 256) mirrors _band_freq_guard: band
     -- buckets fuller than the cap are dropped from candidate generation
@@ -1676,6 +1554,7 @@ verified AS (
     WHERE n_inter / CAST(za.n_sh + zb.n_sh - n_inter AS DOUBLE) >= 0.5
 )
 """
+)
 
 DEDUP_MINHASH_SQL = (
     _NEARDUP_SQL_CTE
@@ -1723,32 +1602,6 @@ SELECT doc_id, canonical_id,
 FROM final
 """
 )
-
-
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash sampling to per-stratum mixture rates
-    (operators/sampling.py): keep iff md5-uniform(doc_id) < rate(lang).
-    Engine-portable and seedless, so the DuckDB oracle reproduces the
-    EXACT kept set -- the property that makes resampling reproducible
-    across runs and engines at 100 TB.  Rates here derive from the data
-    (ascii(lang) mod 3) so the query self-contains its mixture spec."""
-    from .operators.sampling import sample_stratified_df
-
-    d = _t(spark, sf_dir, "documents")
-    rates = (
-        d.select("lang").distinct()
-        .select("lang", ((F.ascii("lang") % 3 + 1) * 0.25).alias("rate"))
-    )
-    kept = sample_stratified_df(d, rates, stratum_col="lang")
-    return kept.select("doc_id", "lang", "source")
-
-
-SAMPLE_STRATIFIED_SQL = """
-SELECT doc_id, lang, source FROM documents
-WHERE ('0x' || substr(md5(doc_id || ':mix-v1'), 1, 15))::BIGINT
-      / 1152921504606846976.0
-      < (ascii(lang) % 3 + 1) * 0.25
-"""
 
 
 def _shingles_sql_from(src: str) -> str:
@@ -1806,80 +1659,6 @@ SELECT f.doc_id, count(*) AS n_overlap
 FROM freqok f JOIN bench_sh b ON f.shingle = b.shingle
 GROUP BY f.doc_id
 HAVING count(*) >= 2
-"""
-
-
-def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training (operators/textstats.py::
-    bpe_merge_rounds_df): the first two byte-pair merges learned from
-    the corpus, reporting each round's top-5 frequency-weighted adjacent
-    pairs.  Merge application is greedy leftmost (run-parity window
-    algebra, no sequential scan), winners are selected in-query with a
-    pinned tie-break, and every count is an exact integer -- so the
-    oracle unrolls both rounds relationally."""
-    from .operators.textstats import bpe_merge_rounds_df
-
-    return bpe_merge_rounds_df(
-        _t(spark, sf_dir, "documents"), rounds=2, top=5
-    )
-
-
-BPE_MERGES_SQL = """
-WITH words AS (
-    SELECT t.w, count(*) AS freq
-    FROM documents d,
-         LATERAL (SELECT unnest(string_split(d.text, ' ')) AS w) t
-    WHERE t.w <> ''
-    GROUP BY t.w
-),
-t1 AS (
-    SELECT w, freq, i.i - 1 AS i, substr(w, i.i, 1) AS tok
-    FROM words, LATERAL (
-        SELECT unnest(generate_series(1, length(w))) AS i
-    ) i
-),
-pr1 AS (SELECT w, freq, i, tok,
-               lead(tok) OVER (PARTITION BY w ORDER BY i) AS nxt FROM t1),
-pc1 AS (SELECT tok AS l, nxt AS r, sum(freq) AS pair_count
-        FROM pr1 WHERE nxt IS NOT NULL GROUP BY tok, nxt),
-rk1 AS (SELECT l, r, pair_count,
-               row_number() OVER (ORDER BY pair_count DESC, l, r) AS rnk
-        FROM pc1),
-win1 AS (SELECT l, r FROM rk1 WHERE rnk = 1),
-c1 AS (  -- candidates of the winning pair; NULL-next never matches
-    SELECT p.w, p.freq, p.i, p.tok, p.nxt,
-           coalesce(p.tok = win1.l AND p.nxt = win1.r, false) AS cand
-    FROM pr1 p, win1
-),
-g1 AS (  -- consecutive candidates (only possible when l = r) share grpid
-    SELECT *, sum(CASE WHEN cand THEN 0 ELSE 1 END)
-              OVER (PARTITION BY w ORDER BY i) AS grpid FROM c1),
-r1 AS (SELECT *, sum(CASE WHEN cand THEN 1 ELSE 0 END)
-              OVER (PARTITION BY w, grpid ORDER BY i) AS rn FROM g1),
-k1 AS (  -- greedy leftmost = odd rank within the candidate run
-    SELECT *, cand AND (rn - 1) % 2 = 0 AS keep FROM r1),
-f1 AS (SELECT *, coalesce(lag(keep) OVER (PARTITION BY w ORDER BY i),
-                          false) AS consumed FROM k1),
-t2 AS (
-    SELECT w, freq,
-           row_number() OVER (PARTITION BY w ORDER BY i) - 1 AS i,
-           CASE WHEN keep THEN tok || nxt ELSE tok END AS tok
-    FROM f1 WHERE keep OR NOT consumed
-),
-pr2 AS (SELECT w, freq, i, tok,
-               lead(tok) OVER (PARTITION BY w ORDER BY i) AS nxt FROM t2),
-pc2 AS (SELECT tok AS l, nxt AS r, sum(freq) AS pair_count
-        FROM pr2 WHERE nxt IS NOT NULL GROUP BY tok, nxt),
-rk2 AS (SELECT l, r, pair_count,
-               row_number() OVER (ORDER BY pair_count DESC, l, r) AS rnk
-        FROM pc2)
-SELECT CAST(1 AS INT) AS round, l, r,
-       CAST(pair_count AS BIGINT) AS pair_count, CAST(rnk AS BIGINT) AS rnk
-FROM rk1 WHERE rnk <= 5
-UNION ALL
-SELECT CAST(2 AS INT) AS round, l, r,
-       CAST(pair_count AS BIGINT) AS pair_count, CAST(rnk AS BIGINT) AS rnk
-FROM rk2 WHERE rnk <= 5
 """
 
 
@@ -1942,7 +1721,7 @@ HAVING count(*) FILTER (WHERE nset = 3) >= 2
 
 
 # ---------------------------------------------------------------------------
-# Text analysis: fingerprint / BPE-ish token count / langid heuristic / split
+# Text analysis, fold checks, filter cascade and later additions
 # ---------------------------------------------------------------------------
 
 
@@ -2025,134 +1804,6 @@ FROM bi
 JOIN uni ux ON ux.w = bi.w1
 JOIN uni uy ON uy.w = bi.w2
 CROSS JOIN total
-"""
-
-
-def normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode text normalization (NFC + control-char strip + whitespace
-    collapse to single spaces + trim) through the map-only Arrow kernel;
-    the DuckDB twin applies nfc_normalize + two regexp_replace passes with
-    RE2 classes generated from the SAME codepoint inventory the kernel
-    compiles (operators/textstats.py::WS_RANGES/CTRL_RANGES)."""
-    from .operators.textstats import normalize_text_df
-
-    d = _t(spark, sf_dir, "documents")
-    return normalize_text_df(d)
-
-
-def _normalize_text_sql() -> str:
-    from .operators.textstats import (
-        CTRL_RANGES,
-        WS_RANGES,
-        re2_class,
-    )
-
-    return f"""
-WITH n AS (
-    SELECT doc_id, text,
-           trim(regexp_replace(nfc_normalize(
-                regexp_replace(text, '[{re2_class(CTRL_RANGES)}]', '', 'g')),
-                '[{re2_class(WS_RANGES)}]+', ' ', 'g'), ' ') AS norm_text
-    FROM documents
-)
-SELECT doc_id, norm_text,
-       CASE WHEN text IS NULL THEN false
-            ELSE norm_text <> text END AS changed
-FROM n
-"""
-
-
-NORMALIZE_TEXT_SQL = _normalize_text_sql()
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import fingerprint_df
-
-    d = _t(spark, sf_dir, "documents")
-    return fingerprint_df(d.repartition(spark.sparkContext.defaultParallelism))
-
-
-DOC_FINGERPRINT_SQL = """
-SELECT doc_id,
-       CASE WHEN coalesce(text, '') = '' THEN 0  -- kernel: None/'' fold to 0
-            ELSE CAST(list_reduce(
-                list_prepend(0::HUGEINT,
-                    list_transform(string_split_regex(text, ''),
-                                   c -> unicode(c)::HUGEINT)),
-                (h, o) -> (h * 131 + o) % 2305843009213693951
-            ) AS BIGINT) END AS fp
-FROM documents
-"""
-
-
-def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import bpe_token_count_df
-
-    return bpe_token_count_df(_t(spark, sf_dir, "documents"))
-
-
-BPE_TOKEN_COUNT_SQL = r"""
-SELECT doc_id,
-       CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '''[a-z]+|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) AS BIGINT) AS bpe_tokens
-FROM documents
-"""
-
-
-def langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import langid_heuristic_df
-
-    d = _t(spark, sf_dir, "documents")
-    dim = _dim_df(spark).select("iso", "language")
-    labeled = (
-        d.filter("source = 'src0'")
-        .join(F.broadcast(dim), d.lang == dim.iso)
-        .select("language", "text")
-    )
-    return langid_heuristic_df(d.select("doc_id", "text"), labeled)
-
-
-LANGID_HEURISTIC_SQL = f"""
-WITH labeled AS (
-    SELECT m.language, d.text
-    FROM documents d JOIN {_dim_values_sql("m")} ON d.lang = m.iso
-    WHERE d.source = 'src0'
-),
-lt AS (
-    SELECT l.language, t.word
-    FROM labeled l, LATERAL (SELECT unnest(string_split(l.text, ' ')) AS word) t
-    WHERE t.word <> ''
-),
-freq AS (SELECT language, word, count(*) AS f FROM lt GROUP BY 1, 2),
-profile AS (
-    SELECT language, word FROM (
-        SELECT *, row_number() OVER (PARTITION BY language
-                                     ORDER BY f DESC, word) AS rn
-        FROM freq
-    ) WHERE rn <= 8
-),
-dt AS (
-    SELECT d.doc_id, t.word
-    FROM documents d, LATERAL (SELECT unnest(string_split(d.text, ' ')) AS word) t
-    WHERE t.word <> ''
-),
-counts AS (SELECT doc_id, count(*) AS n_tokens FROM dt GROUP BY 1),
-hits AS (
-    SELECT dt.doc_id, p.language, count(*) AS n_hits
-    FROM dt JOIN profile p ON dt.word = p.word
-    GROUP BY 1, 2
-),
-scored AS (
-    SELECT h.doc_id, h.language,
-           round(h.n_hits / CAST(c.n_tokens AS DOUBLE), 4) AS score
-    FROM hits h JOIN counts c ON h.doc_id = c.doc_id
-)
-SELECT doc_id, language AS pred_lang, score
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY score DESC, language) AS rn
-    FROM scored
-) WHERE rn = 1
 """
 
 
@@ -2883,43 +2534,6 @@ SELECT DISTINCT md5(text) AS text_hash FROM documents
 """
 
 
-def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement (operators/sampling.py::
-    weighted_sample_df, Efraimidis-Spirakis A-ES): the 3 docs per source
-    with the smallest -ln(u)/w key, weight = text length + 1 (a stand-in
-    for any per-doc importance: quality score, DSIR weight, token count).
-    Seedless md5-uniform u makes the kept set identical across engines,
-    runs, and retries; ranking on the 10-dp-rounded key with a doc_id
-    tie-break removes libm ulp sensitivity."""
-    from .operators.sampling import weighted_sample_df
-
-    d = _t(spark, sf_dir, "documents")
-    wt = (F.coalesce(F.length("text"), F.lit(0)) + 1).alias("wt")
-    kept = weighted_sample_df(
-        d.select("doc_id", "source", wt), F.col("wt"), k=3,
-        stratum_col="source",
-    )
-    return kept.select("source", "doc_id", "wt", "es_key", "rk")
-
-
-SAMPLE_WEIGHTED_SQL = """
-WITH keyed AS (
-    SELECT source, doc_id, coalesce(length(text), 0) + 1 AS wt,
-           round(
-               -ln((('0x' || substr(md5(doc_id || ':aes-v1'), 1, 15))::BIGINT
-                    + 0.5) / 1152921504606846976.0)
-               / (coalesce(length(text), 0) + 1), 10) AS es_key
-    FROM documents
-)
-SELECT source, doc_id, wt, es_key, rk FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY source
-        ORDER BY es_key ASC NULLS LAST, doc_id ASC NULLS LAST) AS rk
-    FROM keyed
-) WHERE rk <= 3
-"""
-
-
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval over the corpus (k1 = 1.2, b = 0.75): top-20 docs
     for a self-derived query -- the 3 highest-df terms of length >= 6
@@ -2961,93 +2575,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum(idf * tfn), 6).alias("bm25"))
     )
     return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(20)
-
-
-def code_switch_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Code-switching detection (operators/textstats.py::code_switch_df):
-    language-ID every 12-token segment against the same src0-trained
-    stopword profile as langid_heuristic, then report per-doc mixture
-    stats (segment count, distinct predicted languages, dominant language
-    + share, code_switched flag).  Doc-level argmax hides mid-document
-    language flips; this is the router for multilingual/drop decisions."""
-    from .operators.textstats import code_switch_df
-
-    d = _t(spark, sf_dir, "documents")
-    dim = _dim_df(spark).select("iso", "language")
-    labeled = (
-        d.filter("source = 'src0'")
-        .join(F.broadcast(dim), d.lang == dim.iso)
-        .select("language", "text")
-    )
-    return code_switch_df(d.select("doc_id", "text"), labeled)
-
-
-CODE_SWITCH_SQL = f"""
-WITH labeled AS (
-    SELECT m.language, d.text
-    FROM documents d JOIN {_dim_values_sql("m")} ON d.lang = m.iso
-    WHERE d.source = 'src0'
-),
-lt AS (
-    SELECT l.language, t.word
-    FROM labeled l, LATERAL (SELECT unnest(string_split(l.text, ' ')) AS word) t
-    WHERE t.word <> ''
-),
-freq AS (SELECT language, word, count(*) AS f FROM lt GROUP BY 1, 2),
-profile AS (
-    SELECT language, word FROM (
-        SELECT *, row_number() OVER (PARTITION BY language
-                                     ORDER BY f DESC, word) AS rn
-        FROM freq
-    ) WHERE rn <= 8
-),
-segw AS (
-    SELECT d.doc_id,
-           CAST(floor((i.i - 1) / 12) AS INTEGER) AS seg,
-           ft.l[i.i] AS word
-    FROM documents d,
-         LATERAL (SELECT list_filter(string_split(d.text, ' '),
-                                     t -> t <> '') AS l) ft,
-         LATERAL (SELECT unnest(generate_series(1, len(ft.l))) AS i) i
-),
-seg_counts AS (SELECT doc_id, seg, count(*) AS n FROM segw GROUP BY 1, 2),
-hits AS (
-    SELECT s.doc_id, s.seg, p.language, count(*) AS h
-    FROM segw s JOIN profile p ON s.word = p.word
-    GROUP BY 1, 2, 3
-),
-scored AS (
-    SELECT h.doc_id, h.seg, h.language,
-           round(h.h / CAST(c.n AS DOUBLE), 4) AS score
-    FROM hits h JOIN seg_counts c USING (doc_id, seg)
-),
-seg_pred AS (
-    SELECT doc_id, seg, language AS seg_lang FROM (
-        SELECT *, row_number() OVER (PARTITION BY doc_id, seg
-                                     ORDER BY score DESC, language ASC) AS rn
-        FROM scored
-    ) WHERE rn = 1
-),
-lang_counts AS (
-    SELECT doc_id, seg_lang, count(*) AS c FROM seg_pred GROUP BY 1, 2
-),
-dom AS (
-    SELECT doc_id, seg_lang AS dom_lang, c AS dom_cnt FROM (
-        SELECT *, row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY c DESC, seg_lang ASC) AS rn
-        FROM lang_counts
-    ) WHERE rn = 1
-),
-per_doc AS (
-    SELECT doc_id, count(*) AS n_segments,
-           count(DISTINCT seg_lang) AS n_langs
-    FROM seg_pred GROUP BY 1
-)
-SELECT p.doc_id, p.n_segments, p.n_langs, d.dom_lang,
-       round(d.dom_cnt / CAST(p.n_segments AS DOUBLE), 4) AS dom_share,
-       p.n_langs >= 2 AS code_switched
-FROM per_doc p JOIN dom d USING (doc_id)
-"""
 
 
 def source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3177,7 +2704,7 @@ SELECT source, round(p, 6) AS pagerank FROM it3
 
 def _cms_bucket(term_col, i: int, width: int = 1024):
     """Count-min-sketch bucket for hash row *i*: md5-family (engine-
-    portable, same recipe as operators/sampling.py) -> 60-bit nonnegative
+    portable: the first 15 hex digits of the md5) -> 60-bit nonnegative
     h -> h % width."""
     h = F.conv(
         F.substring(F.md5(F.concat(term_col, F.lit(f":cms{i}"))), 1, 15),
@@ -3702,8 +3229,8 @@ FROM ranked WHERE cum_tokens <= 2000
 def vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability-index drift monitor over the vocabulary: per
     language, PSI between the even-doc_id slice (reference) and the
-    odd-doc_id slice (current) over the same 1024 md5 hashed-unigram
-    buckets DSIR uses.  PSI > 0.25 is the classic retrain/alert
+    odd-doc_id slice (current) over 1024 md5 hashed-unigram
+    buckets.  PSI > 0.25 is the classic retrain/alert
     threshold — the pipeline-monitoring readout that catches a crawler
     or upstream-source change between ingestion batches.
 
@@ -3949,8 +3476,8 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_sweep_config_sql(bands: int, rws: int) -> str:
     """One config's CTE block + result row for LSH_BAND_SWEEP_SQL; the
-    minh/shingles/sizes CTEs are shared across configs (same recipe the
-    proven DEDUP_MINHASH_SQL uses)."""
+    minh/shingles/sizes CTEs are shared across configs (minh is
+    _MINHASH_CTE, the one DEDUP_MINHASH_SQL uses)."""
     tag = f"{bands}x{rws}"
     return f"""
 banded_{tag} AS (
@@ -3993,16 +3520,8 @@ FROM cand_{bands}x{rws}, ver_{bands}x{rws}"""
 
 LSH_BAND_SWEEP_SQL = (
     _NEARDUP_SQL_CTE
-    + """
-, minh AS (
-    SELECT s.doc_id, i.i,
-           min((CAST((1000003 * (i.i + 1)) % 2147483647 AS BIGINT)
-                * CAST(md5_number_lower(s.shingle) % 2147483647 AS BIGINT)
-                + (999983 * i.i + 12345) % 2147483647) % 2147483647) AS hmin
-    FROM shingles s, (SELECT unnest(generate_series(0, 11)) AS i) i
-    GROUP BY s.doc_id, i.i
-),
-"""
+    + _MINHASH_CTE
+    + ",\n"
     + ",\n".join(
         _lsh_sweep_config_sql(b, r) for b, r in [(2, 6), (3, 4), (6, 2)]
     )
@@ -4025,34 +3544,26 @@ LSH_BAND_SWEEP_SQL = (
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sequence_packing": sequence_packing,
     "conv_export": conv_export,
-    "bpe_token_count": bpe_token_count,
-    "langid_heuristic": langid_heuristic,
     "mean_adjust_fold": mean_adjust_fold,
     "langid_fasttext": langid_fasttext,
     "conv_quality_report": conv_quality_report,
     "axiom_distribution": axiom_distribution,
     "confusion_matrix": confusion_matrix,
-    "doc_fingerprint": doc_fingerprint,
     "holdout_split": holdout_split,
     "langid_hashed_ngram": langid_hashed_ngram,
     "tfidf_top_terms": tfidf_top_terms,
-    "mixture_rates": mixture_rates,
     "doc_repetition": doc_repetition,
     "lm_perplexity": lm_perplexity,
-    "importance_weights": importance_weights,
     "bloom_decontaminate": bloom_decontaminate,
-    "bpe_merges": bpe_merges,
     "doc_chunks": doc_chunks,
     "nb_quality_score": nb_quality_score,
     "lm_bigram_ppl": lm_bigram_ppl,
     "bm25_topk": bm25_topk,
     "heavy_hitters": heavy_hitters,
     "source_pagerank": source_pagerank,
-    "normalize_text": normalize_text,
     "collocations_lift": collocations_lift,
     "word_freq_spectrum": word_freq_spectrum,
     "source_overlap": source_overlap,
-    "code_switch_segments": code_switch_segments,
     "lang_resolution": lang_resolution,
     "tokenize_explode": tokenize_explode,
     "tokenize_per_char": tokenize_per_char,
@@ -4063,7 +3574,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pipeline_keep": pipeline_keep,
     "vocab_build": vocab_build,
     "word_cumsum": word_cumsum,
-    "sample_weighted": sample_weighted,
     "streaming_dedup": streaming_dedup,
     "tokenizer_fertility": tokenizer_fertility,
     "padding_waste": padding_waste,
@@ -4081,7 +3591,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_minhash_lsh": dedup_minhash_lsh,
     "pipeline_scrub": pipeline_scrub,
     "dedup_components": dedup_components,
-    "sample_stratified": sample_stratified,
     "decontaminate": decontaminate,
 }
 
@@ -4109,11 +3618,7 @@ ORACLE_SQL: dict[str, str] = {
     "langid_hashed_ngram": LANGID_HASHED_SQL,
     "dedup_minhash_lsh": DEDUP_MINHASH_SQL,
     "dedup_components": DEDUP_COMPONENTS_SQL,
-    "sample_stratified": SAMPLE_STRATIFIED_SQL,
     "decontaminate": DECONTAMINATE_SQL,
-    "doc_fingerprint": DOC_FINGERPRINT_SQL,
-    "bpe_token_count": BPE_TOKEN_COUNT_SQL,
-    "langid_heuristic": LANGID_HEURISTIC_SQL,
     "holdout_split": HOLDOUT_SPLIT_SQL,
     "confusion_matrix": CONFUSION_SQL,
     "mean_adjust_fold": MEAN_ADJUST_SQL,
@@ -4127,23 +3632,17 @@ ORACLE_SQL: dict[str, str] = {
     "tfidf_top_terms": TFIDF_TOP_TERMS_SQL,
     "doc_char_entropy": DOC_CHAR_ENTROPY_SQL,
     "inverted_index": INVERTED_INDEX_SQL,
-    "normalize_text": NORMALIZE_TEXT_SQL,
     "collocations_lift": COLLOCATIONS_LIFT_SQL,
     "word_freq_spectrum": WORD_FREQ_SPECTRUM_SQL,
     "doc_repetition": DOC_REPETITION_SQL,
     "lm_perplexity": LM_PERPLEXITY_SQL,
-    "importance_weights": IMPORTANCE_WEIGHTS_SQL,
     "bloom_decontaminate": BLOOM_DECONTAMINATE_SQL,
-    "bpe_merges": BPE_MERGES_SQL,
     "sequence_packing": SEQUENCE_PACKING_SQL,
-    "mixture_rates": MIXTURE_RATES_SQL,
     "doc_chunks": DOC_CHUNKS_SQL,
     "nb_quality_score": NB_QUALITY_SQL,
     "lm_bigram_ppl": LM_BIGRAM_SQL,
     "source_overlap": SOURCE_OVERLAP_SQL,
-    "sample_weighted": SAMPLE_WEIGHTED_SQL,
     "bm25_topk": BM25_TOPK_SQL,
     "heavy_hitters": HEAVY_HITTERS_SQL,
-    "code_switch_segments": CODE_SWITCH_SQL,
     "source_pagerank": SOURCE_PAGERANK_SQL,
 }

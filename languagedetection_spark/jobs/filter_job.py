@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -44,11 +45,9 @@ def build_model(spark, corpus_path: str | None):
 
 def _norm_path(path: str) -> str:
     """Local path as Spark may qualify it: ``file:/x`` and ``/x`` match."""
-    import os
-
     if path.startswith("file:"):
         path = path[len("file:"):]
-    return os.path.abspath(path)
+    return os.path.realpath(path)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -101,17 +100,18 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     if args.conv_report:
-        import os as _os
-
-        # a conv-report target nested under --output would be re-ingested
-        # as input on a rerun (streaming reads the sink dir whole; batch
-        # formerly globbed around it) and corrupt the rollup -- reject it
-        # up-front in BOTH modes
-        _out = _os.path.realpath(args.output)
-        _rep = _os.path.realpath(args.conv_report)
-        if _rep == _out or _rep.startswith(_out + _os.sep):
-            p.error(f"--conv-report ({args.conv_report}) must not be "
-                    f"nested under --output ({args.output})")
+        # the report is written with mode="overwrite": a target that
+        # equals or contains --output or --checkpoint deletes the per-turn
+        # output or the _progress/_staged rows, and one nested under
+        # --output is re-ingested as input on a rerun -- reject any
+        # overlap up-front in BOTH modes
+        rep = _norm_path(args.conv_report)
+        for flag, path in (("--output", args.output),
+                           ("--checkpoint", args.checkpoint)):
+            other = _norm_path(path)
+            if os.path.commonpath([rep, other]) in (rep, other):
+                p.error(f"--conv-report ({args.conv_report}) must not "
+                        f"equal, contain or lie under {flag} ({path})")
 
     # mode-combination errors BEFORE any JVM spins up
     if args.buckets < 1:
@@ -161,7 +161,6 @@ def main(argv: list[str] | None = None) -> int:
         conf["spark.sql.warehouse.dir"] = args.warehouse_dir
     spark = get_spark(master=args.master, app_name="ld-filter-job",
                       extra_conf=conf)
-    import os
 
     if args.model_artifact and os.path.exists(args.model_artifact):
         from ..model.artifacts import load_model

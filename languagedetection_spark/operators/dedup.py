@@ -265,7 +265,7 @@ def contamination_overlap_df(docs: DataFrame, benchmark: DataFrame,
 def _bloom_pos(shingle_col, i: int, m_bits: int):
     """Bit position i for a shingle: md5 of 'i:shingle' -> first 8 hex
     chars -> integer mod m_bits.  The exact engine-portable bucket recipe
-    the hashed-ngram langid and DSIR features use, so DuckDB reproduces
+    the hashed-ngram langid features use, so DuckDB reproduces
     every position ('0x' || substr(md5(..), 1, 8))::BIGINT % m."""
     return (
         F.conv(

@@ -176,73 +176,3 @@ def test_minhash_kernel_equals_naive(text):
     else:
         got = []
     assert got == _naive_minhash_sig(text)
-
-
-@settings(max_examples=300, deadline=None, derandomize=True)
-@given(text=text_strategy)
-def test_normalize_text_kernel_equals_duckdb(text):
-    """normalize_text's Python kernel and its DuckDB nfc_normalize + RE2
-    oracle must agree on ARBITRARY unicode (NFC composition, exotic
-    whitespace, control chars, astral planes) -- the whitespace/control
-    inventory is one codepoint-range list compiled into both engines."""
-    import duckdb
-
-    from languagedetection_spark.operators.textstats import (
-        CTRL_RANGES,
-        WS_RANGES,
-        normalize_text_py,
-        re2_class,
-    )
-
-    got = normalize_text_py(text)
-    want = duckdb.execute(
-        "SELECT trim(regexp_replace(nfc_normalize(regexp_replace(?, "
-        f"'[{re2_class(CTRL_RANGES)}]', '', 'g')), "
-        f"'[{re2_class(WS_RANGES)}]+', ' ', 'g'), ' ')",
-        [text],
-    ).fetchone()[0]
-    assert got == want, (repr(text), repr(got), repr(want))
-
-
-# ---------------------------------------------------------------------------
-# A-ES weighted sampling (operators/sampling.py::es_key)
-# ---------------------------------------------------------------------------
-
-def _es_key_py(key: str, w: float, salt: str) -> float:
-    """Pure-Python mirror of operators.sampling.es_key (md5 -> 60-bit h,
-    u = (h + 0.5)/2^60, key = -ln(u)/w)."""
-    import hashlib
-    import math
-
-    h = int(hashlib.md5(f"{key}:{salt}".encode()).hexdigest()[:15], 16)
-    return -math.log((h + 0.5) / float(1 << 60)) / w
-
-
-def test_es_key_selection_tracks_weights():
-    """Efraimidis-Spirakis guarantee: P(item wins a k=1 sample) = w_i /
-    sum(w).  The md5 family is deterministic, so sweep the salt instead of
-    an RNG: over 400 salts, a weight-9 item must beat a weight-1 item
-    ~90% of the time.  The realized count is a fixed number (no flaking);
-    the band just documents how much slack the estimate is given."""
-    wins = sum(
-        1
-        for s in range(400)
-        if _es_key_py("heavy", 9.0, f"salt{s}") < _es_key_py("light", 1.0, f"salt{s}")
-    )
-    assert 330 <= wins <= 390, wins  # E = 360, sd ~ 6
-
-
-def test_es_key_is_deterministic_and_engine_portable():
-    """Same (key, weight, salt) -> bit-identical key in pure Python and in
-    DuckDB with the SQL form used by the sample_weighted oracle."""
-    import duckdb
-
-    for key, w in [("0", 1.0), ("42", 7.0), ("9999", 158.0)]:
-        sql = duckdb.execute(
-            """
-            SELECT -ln((('0x' || substr(md5(? || ':aes-v1'), 1, 15))::BIGINT
-                        + 0.5) / 1152921504606846976.0) / ?
-            """,
-            [key, w],
-        ).fetchone()[0]
-        assert sql == pytest.approx(_es_key_py(key, w, "aes-v1"), abs=0, rel=1e-15)

@@ -567,21 +567,33 @@ def test_streaming_windowed_rates(spark, fixture_dir, oracle_model,
 
 
 def test_filter_job_rejects_nested_conv_report(tmp_path):
-    """ADVICE r2: a --conv-report target nested under --output would be
-    re-ingested as input on a rerun (the streaming branch reads the sink
-    dir whole) -- both modes must refuse it up-front, before any Spark
-    work."""
+    """The conv report is written with mode="overwrite", so its path must
+    not equal, contain or lie under --output or --checkpoint.  Nested
+    under --output it would be re-ingested as input on a rerun (the
+    streaming branch reads the sink dir whole); containing --output its
+    overwrite deletes every bucket dir; containing --checkpoint it
+    deletes _progress and _staged, so a rerun recomputes every bucket.
+    Both modes must refuse each layout up-front, before any Spark work."""
     import pytest
 
     from languagedetection_spark.jobs.filter_job import main
 
-    out = str(tmp_path / "out")
-    for extra in ([], ["--streaming"]):
-        with pytest.raises(SystemExit) as exc:
-            main(["--input", "in.parquet", "--output", out,
-                  "--checkpoint", str(tmp_path / "ckpt"),
-                  "--conv-report", out + "/conv_report"] + extra)
-        assert exc.value.code == 2
+    rep = str(tmp_path / "rep")
+    layouts = [
+        # (output, checkpoint, conv_report)
+        (str(tmp_path / "out"), str(tmp_path / "ckpt"),
+         str(tmp_path / "out" / "conv_report")),
+        (rep + "/out", str(tmp_path / "ckpt"), rep),
+        (str(tmp_path / "out"), rep + "/ckpt", rep),
+        (rep + "/out", str(tmp_path / "ckpt"), "file:" + rep),
+    ]
+    for out, ckpt, report in layouts:
+        for extra in ([], ["--streaming"]):
+            with pytest.raises(SystemExit) as exc:
+                main(["--input", "in.parquet", "--output", out,
+                      "--checkpoint", ckpt, "--conv-report", report]
+                     + extra)
+            assert exc.value.code == 2, (out, ckpt, report, extra)
 
 
 def test_filter_job_dedup_exact_stage(spark, tmp_path):

@@ -2,29 +2,6 @@
 algorithmic invariants the SQL side-by-side cannot express alone."""
 
 
-def test_bpe_greedy_run_semantics(spark):
-    """Greedy leftmost merging on identical-symbol runs is the classic
-    BPE trap: 'aaaa' must become [aa, aa] and 'aaa' -> [aa, a] (never
-    the overlapping middle pair).  Corpus: 'aaaa' x2 + 'aaa' x1 makes
-    (a, a) the round-1 winner; round-2 pair counts pin the segmentation."""
-    from languagedetection_spark.operators.textstats import (
-        bpe_merge_rounds_df,
-    )
-
-    d = spark.createDataFrame(
-        [(0, "aaaa aaa"), (1, "aaaa")], "doc_id long, text string")
-    out = {(r["round"], r["l"], r["r"]): r["pair_count"]
-           for r in bpe_merge_rounds_df(d, rounds=2, top=5).collect()}
-    # round 1: 'aaaa' x2 has 3 (a,a) pairs each, 'aaa' has 2 -> 8 total
-    assert out[(1, "a", "a")] == 8
-    # round 2: 'aaaa' -> [aa, aa] (one (aa,aa) pair, x2 docs);
-    # 'aaa' -> [aa, a] (one (aa,a) pair).  Overlapping merges would
-    # leave different pairs entirely.
-    assert out[(2, "aa", "aa")] == 2
-    assert out[(2, "aa", "a")] == 1
-    assert (2, "a", "a") not in out
-
-
 def test_doc_chunks_coverage_and_overlap(spark, tmp_path):
     """Sliding-window chunking invariants: chunks start every 24 tokens,
     overlap 8, the last chunk reaches the end of the doc exactly, and a
@@ -94,40 +71,6 @@ def test_nb_quality_distills_the_rule(spark, tmp_path):
     worst_normal = min(got[i]["log_odds"] for i, _ in normal)
     best_spam = max(got[i]["log_odds"] for i, _ in spam)
     assert worst_normal > 0 > best_spam
-
-
-def test_code_switch_detects_planted_language_flip(spark):
-    """A doc whose first 12-token segment is pure-English stopwords and
-    whose second is pure-German must flag code_switched with a 0.5
-    dominant share; monolingual docs must not."""
-    from languagedetection_spark.operators.textstats import code_switch_df
-
-    en = "the and of to in is it for on as"          # 10 distinct en words
-    de = "der die und das ist zu den ein mit von"    # 10 distinct de words
-    labeled = spark.createDataFrame(
-        [("english", en + " " + en), ("german", de + " " + de)],
-        ["language", "text"],
-    )
-    docs = spark.createDataFrame(
-        [
-            # 12 en tokens then 12 de tokens -> exactly 2 segments
-            (1, " ".join(en.split()[:6] * 2) + " "
-                + " ".join(de.split()[:6] * 2)),
-            (2, en),                                  # monolingual en
-            (3, de),                                  # monolingual de
-            (4, "zzz qqq xxx"),                       # no profile hits
-        ],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in code_switch_df(docs, labeled).collect()}
-    assert got[1]["code_switched"] is True
-    assert got[1]["n_segments"] == 2 and got[1]["n_langs"] == 2
-    assert got[1]["dom_share"] == 0.5
-    assert got[1]["dom_lang"] == "english"  # count tie -> language asc
-    assert got[2]["code_switched"] is False
-    assert got[2]["dom_lang"] == "english" and got[2]["dom_share"] == 1.0
-    assert got[3]["dom_lang"] == "german"
-    assert 4 not in got  # zero profile hits -> no mixture row
 
 
 def test_source_pagerank_ranks_the_hub_highest(spark, tmp_path):
