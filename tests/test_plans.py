@@ -197,6 +197,16 @@ def test_aqe_skew_join_engages_on_skewed_key(spark):
                 conf.set(k, v)
 
 
+def test_normalize_text_is_map_only(spark):
+    """The normalization kernel is the pipeline's first stage at 100 TB:
+    it must stay a pure scan -> mapInPandas plan with zero exchanges."""
+    from languagedetection_spark.entry_queries import normalize_text
+
+    plan = _plan(normalize_text(spark, SF))
+    assert "Exchange" not in plan, plan
+    assert "FlatMapsInPandas" in plan or "MapInPandas" in plan
+
+
 def test_new_aggregate_queries_use_partial_aggregation(spark):
     """inverted_index / doc_char_entropy shuffle ONLY pre-aggregated rows:
     the plan must show a partial HashAggregate below each exchange (the
