@@ -30,26 +30,17 @@ BENCH_QUERIES = [
     "tfidf_top_terms",
     "doc_char_entropy",
     "inverted_index",
-    "collocations_lift",
     "word_freq_spectrum",
     "sequence_packing",
-    "doc_repetition",
-    "lm_perplexity",
     "bloom_decontaminate",
     "doc_chunks",
     "nb_quality_score",
-    "lm_bigram_ppl",
     "bm25_topk",
     "heavy_hitters",
     "source_pagerank",
-    "tokenizer_fertility",
-    "padding_waste",
-    "doc_novelty",
-    "ppl_buckets",
     "dedup_cluster_stats",
     "token_budget_select",
     "vocab_drift_psi",
-    "ngram_coverage_curve",
     "lsh_band_sweep",
     "conv_export",
 ]  # streaming_* excluded: streaming-query startup dominates

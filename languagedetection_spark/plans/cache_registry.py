@@ -5,7 +5,7 @@ stream, shingle set, posting list, ...) that the RETURNED lazy DataFrame
 still references — so the building function cannot unpersist it before the
 caller collects.  But Spark's CacheManager holds a strong reference to every
 InMemoryRelation until an explicit unpersist()/clearCache(): in a long-lived
-session that replays the whole 90+-query registry (the external driver's
+session that replays the registry (the external driver's
 correctness gate, bench.py, pytest) those corpus-sized caches would
 accumulate for the session lifetime, and any LIVE cache whose logical plan
 matches a later query's sub-plan gets silently substituted into it

@@ -12,8 +12,7 @@ from hypothesis import given, settings, strategies as st
 
 from languagedetection_spark.functions.kernels import FilterModel
 from languagedetection_spark.refmodel.alphabets import LANGUAGES
-from languagedetection_spark.refmodel.classifier import Vocabulary
-from languagedetection_spark.refmodel.quality import TrigramModel, decide_turn
+from languagedetection_spark.refmodel.quality import decide_turn
 from languagedetection_spark.refmodel.tokenizer import split_words
 
 
@@ -176,29 +175,3 @@ def test_minhash_kernel_equals_naive(text):
     else:
         got = []
     assert got == _naive_minhash_sig(text)
-
-
-@settings(max_examples=300, deadline=None, derandomize=True)
-@given(text=text_strategy)
-def test_normalize_text_kernel_equals_duckdb(text):
-    """normalize_text's Python kernel and its DuckDB nfc_normalize + RE2
-    oracle must agree on ARBITRARY unicode (NFC composition, exotic
-    whitespace, control chars, astral planes) -- the whitespace/control
-    inventory is one codepoint-range list compiled into both engines."""
-    import duckdb
-
-    from languagedetection_spark.operators.normalize import (
-        CTRL_RANGES,
-        WS_RANGES,
-        normalize_text_py,
-        re2_class,
-    )
-
-    got = normalize_text_py(text)
-    want = duckdb.execute(
-        "SELECT trim(regexp_replace(nfc_normalize(regexp_replace(?, "
-        f"'[{re2_class(CTRL_RANGES)}]', '', 'g')), "
-        f"'[{re2_class(WS_RANGES)}]+', ' ', 'g'), ' ')",
-        [text],
-    ).fetchone()[0]
-    assert got == want, (repr(text), repr(got), repr(want))

@@ -50,7 +50,10 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
@@ -67,17 +70,13 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             failures.append(name)
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"ROWS  {name}: {len(spark_rows)} rows (no SQL oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
         try:
-            res = con.execute(sql)
+            res = con.execute(oracles[name])
             duck_cols = [d[0] for d in res.description]
             duck_rows = res.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {str(e)[:300]}")
+            print(f"FAIL  {name}: oracle error: "
+                  f"{type(e).__name__}: {str(e)[:300]}")
             failures.append(name)
             continue
         sc, sr = norm_rows(spark_cols, spark_rows)

@@ -40,6 +40,7 @@ def main() -> int:
         master=master, shuffle_partitions=shuffle,
         extra_conf={
             "spark.sql.execution.arrow.maxRecordsPerBatch": batch,
+            "spark.ui.showConsoleProgress": "false",
         },
     )
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
